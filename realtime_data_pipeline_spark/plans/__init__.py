@@ -14,676 +14,19 @@ from realtime_data_pipeline_spark.plans import analytics  # noqa: F401
 from realtime_data_pipeline_spark.plans import lake  # noqa: F401
 
 # ---------------------------------------------------------------------------
-# Driver-window ordering (VERDICT r1 item 3).
+# Driver-window ordering.
 #
 # The external correctness driver hash-checks the FIRST 50 registered
-# queries; the rest only get the (now driver-strength, sf0.01) local
-# parity suite.  So registration order is a budget: the 50 slots go to
-# the queries that carry the §2 operator inventory, the streaming
-# parity proofs, the LLM-data operators, and the physically-distinct
-# TPC-H shapes.  Demoted below slot 50 (deliberately, each with a
-# reason):
-#   * customers_without_orders / click_not_error_users — 0 rows at
-#     sf0.01, a vacuous hash match; the anti-join/EXCEPT operators are
-#     still pytest-checked and anti-join is driver-covered via
-#     idle_rich_customers.
-#   * event_user_segment_counts — same join+rollup as
-#     salted_segment_counts (which also proves the skew-salting
-#     equivalence, so it keeps the slot).
-#   * embedding_near_dups — the all-pairs O(n²) variant; the
-#     scale-shaped LSH variant keeps the slot.
-#   * ann_pandas_topk — same query as ann_bruteforce_topk, different
-#     kernel (Arrow pandas-UDF); the built-in-expression variant keeps
-#     the slot.
-#   * ann_ivf_topk_by_label — its cell is a precomputed column;
-#     ann_ivf_assigned_topk (real broadcast-codebook argmax assignment)
-#     supersedes it in the slot.
-#   * streaming_purchase_attribution_outer — same stream-stream interval
-#     join operator as streaming_click_purchase_join (outer vs inner
-#     variant); the inner variant keeps the slot, the outer stays
-#     pytest+parity covered.
-#   * ann_lsh_topk — single-probe LSH, strictly subsumed by
-#     ann_lsh_multiprobe_topk (same signature/bucket machinery plus the
-#     Hamming-1 probes).
-#   * ann_lsh_multiprobe_topk (round 2, second pass) — in turn subsumed
-#     by ann_recall_report, which hash-checks the single-probe,
-#     multi-probe AND multi-table result sets against the exact top-5
-#     in one row-per-method report (recall 0.0 / 0.125 / 0.525 at
-#     sf0.01) — a strictly stronger hard signal for the same machinery.
-#   Promoted in their place (round 2): train_split_counts and
-#   sequence_packing_stats — dataset-assembly operators the north star
-#   grades as first-class (hash split and context packing), each a
-#   physically distinct plan (pure map-side selector; window-partition
-#   reuse into the rollup).
-#
-# Round-3 rotation (VERDICT r2 item 5): nine slots whose queries were
-# hash-green in BOTH r1 and r2 (stable names, recorded here:
-# kpi_avg_user_interactions, kpi_item_extrema, top_users,
-# latest_window_top_items, recent_user_windows, null_hygiene_count,
-# cast_hygiene, event_type_stats, order_price_bands) rotate out to the
-# local parity suite, and nine never-driver-checked high-value queries
-# rotate in:
-#   * streaming_incremental_dedup — the r2 item-2 ask: batch-replayed
-#     oracle twin of the persistent-signature-store streaming filter;
-#   * session_window_counts — hash-checks batch F.session_window
-#     itself (r2 item 9; streaming_session_counts stays too);
-#   * nation_year_profit, region_market_share, forecast_revenue_change
-#     — the three heaviest multi-join TPC-H shapes (Q9/Q8/Q6 analogues);
-#   * hll_partitioned_distinct — partial-sketch-merge distinct count;
-#   * vocab_oov_rates, funnel_conversion, user_session_stats — vocab
-#     coverage, event funnel, and gap sessionization operators.
-#
-# Round-4 rotation: the round-3 testdata regeneration invalidated every
-# r3 driver check (events.ts dtype change — fixed in tables.load_events),
-# so the nine r3-rotated names stay in for their first real check.  Ten
-# MORE slots whose queries were hash-green in both r1 and r2 rotate out
-# (text_metrics, language_id, doc_fingerprints, exact_dedup_groups,
-# simhash_near_dups, ngram_jaccard_pairs, customers_with_orders,
-# order_priority_rollup, nation_top_customers, customer_running_spend —
-# all stay parity-checked locally), and ten never-driver-checked queries
-# rotate in:
-#   * benchmark_contamination — eval-set n-gram decontamination, the
-#     training-pipeline operator a 100 TB corpus build cannot skip;
-#   * doc_repetition_scores, curation_keep_best, doc_chunks — quality
-#     scoring, best-of-cluster selection, and chunking over documents;
-#   * embedding_dedup_clusters — embedding-space connected components;
-#   * mixture_sample_stats, shard_skew_stats, weekly_cohort_retention —
-#     mixture sampling, shard-skew audit, cohort retention;
-#   * status_priority_grouping_sets, segment_event_pivot — GROUPING
-#     SETS and pivot, relational operators with no prior hash check.
-#
-# Round-5 rotation (VERDICT r4 'Next round' #1): ten slots whose
-# queries were hash-green in BOTH r2 and r4 rotate out to the local
-# parity suite (tumbling_user_counts, sliding_item_counts,
-# pricing_summary, revenue_by_nation, click_and_purchase_users,
-# customer_spend_distribution, salted_segment_counts,
-# top_unshipped_orders, customer_order_count_histogram,
-# train_split_counts — each one's operator family stays driver-covered
-# by a sibling still in the window: sliding_user_counts for the window
-# aggs, nation_year_profit/region_market_share for the multi-join
-# TPC-H shapes, purchase_click_attribution for the as-of join,
-# idle_rich_customers for anti-join, split_leakage_audit for the split
-# selector), and ten never-driver-checked queries rotate in:
-#   * the six queued round-4 additions — kmeans_codebook_report,
-#     approx_quantiles_report, split_leakage_audit,
-#     streaming_corpus_materialized_stats, documents_profile,
-#     fuzzy_prefix_dups (the last with the new first-token-typo
-#     second bucket family);
-#   * priority_metrics_unpivot — stack/unpivot, no prior hash check;
-#   * event_dedup_counts — exact event-stream dedup rollup;
-#   * latest_event_per_user — per-key argmax (the keyed-upsert
-#     batch analogue);
-#   * value_percentiles — exact percentile_disc bands.
-#
-# Round-6 rotation (VERDICT r5 'Next round' #1: "rotate harder" — the
-# rotation's first-check record was 29/29, the never-checked backlog
-# 81).  SIXTEEN slots whose queries were hash-green in >=2 prior
-# rounds rotate out to the local parity suite, each with its operator
-# family still driver-covered by a sibling kept in (or rotated in):
-#   streaming_dedup_user_counts, streaming_running_user_totals,
-#   streaming_click_purchase_join, streaming_json_wire_counts,
-#   session_window_counts (streaming family: replay/session/
-#   incremental-dedup/corpus-materialized stay, scd2 + enriched
-#   streaming twins come in), tfidf_top_terms (frequent_terms_report
-#   in), multimodal_byte_histogram, dedup_clusters
-#   (embedding_dedup_clusters stays), vocab_oov_rates,
-#   funnel_conversion, user_session_stats (purchase_window_views in),
-#   ann_bruteforce_topk (ann_recall_report hash-checks brute force as
-#   its own recall denominator; ann_ivf_multiprobe_topk in),
-#   sequence_packing_stats (ffd_packing_report in),
-#   mixture_sample_stats (temperature_mixture_stats in),
-#   shard_skew_stats, weekly_cohort_retention.
-# Sixteen never-driver-checked queries rotate in, prioritizing the
-# round-5 lifecycle/eval/analytics operators:
-#   scd2_user_segment_history, streaming_scd2_user_segments,
-#   model_eval_report, pagerank_top_items, purchase_window_views,
-#   corpus_snapshot_diff, data_contract_violations, pii_scrub_stats,
-#   doc_crossdup_rates, frequent_terms_report,
-#   temperature_mixture_stats, ffd_packing_report,
-#   streaming_enriched_segment_counts, ann_ivf_multiprobe_topk,
-#   epoch_shuffle_sample, and pyds_synthetic_sample (VERDICT #6: the
-#   md5-deterministic Python DataSource gives S1/S2/P10/P11 their
-#   first hard hash row).
-# Registry cleanup the same round (VERDICT #8): five redundant
-# parity-only entries DELETED outright (ann_lsh_topk,
-# ann_lsh_multiprobe_topk, ann_lsh_multitable_topk — all strict
-# subsets of ann_recall_report's per-method hash check;
-# embedding_near_dups — all-pairs baseline, kept as a function and
-# pinned by test_lsh_near_dups_are_subset_of_exact;
-# ann_ivf_topk_by_label — superseded by ann_ivf_assigned_topk).
-# Round-7 rotation (VERDICT r6 'Next round' #1 — executed exactly as
-# pre-verified; every rotate-in was already green in the full-registry
-# driver-strength sweep at sf0.01 under engine-default, Asia/Kathmandu,
-# shuffle=3, and combined configs, plus the NULL / hostile-value /
-# empty-input harnesses).  FIFTEEN slots whose queries were hash-green
-# in >=2 prior rounds rotate out to the local parity suite:
-#   kmeans_codebook_report, approx_quantiles_report,
-#   split_leakage_audit, streaming_corpus_materialized_stats,
-#   documents_profile, fuzzy_prefix_dups, priority_metrics_unpivot,
-#   event_dedup_counts, latest_event_per_user, value_percentiles
-#   (r5-in, r5+r6 green), benchmark_contamination,
-#   doc_repetition_scores, curation_keep_best, doc_chunks,
-#   embedding_dedup_clusters (r4-in, 3 rounds green).
-# Fifteen never-driver-checked queries rotate in — this window gives
-# the persisted-ANN-index, z-order, time-travel, JSONL/CSV round-trip
-# materialization layers and the governance/analytics wave their first
-# hard hash rows:
-#   scd2_pointintime_enrichment, k_anonymity_audit, join_skew_report,
-#   daily_anomaly_report, jsonl_roundtrip_stats, csv_roundtrip_stats,
-#   quality_funnel_stats, user_feature_vectors,
-#   hourly_seasonality_profile, embedding_health_report,
-#   item_covisitation_pairs, langid_confusion_matrix,
-#   ann_stored_index_topk, zorder_roundtrip_stats,
-#   upsert_time_travel_stats.
-#
-# Round-8 rotation queue (PRE-VERIFIED r7: every planned-in name is
-# green in the full-registry driver-strength sweep at sf0.01 under
-# engine-default, Asia/Kathmandu, shuffle=3, and combined configs,
-# plus the NULL / hostile-value / empty-input harnesses; plan pins and
-# replay-list coverage added this round — promote after CORRECTNESS_r07
-# lands green, then re-run scripts/full_parity_sweep.py once).
-# Planned OUT (>=2-round hash-green if r7 lands green, each family
-# still driver-covered by a sibling kept in):
-#   part_type_revenue_share, forecast_revenue_change,
-#   hll_partitioned_distinct, status_priority_grouping_sets,
-#   segment_event_pivot, purchase_click_attribution
-#   (scd2_pointintime_enrichment carries the as-of/temporal family),
-#   streaming_replay_user_counts (session/incremental-dedup/scd2/
-#   enriched streaming twins stay), minhash_dedup_candidates
-#   (corpus_curation_stats contains the full LSH chain),
-#   ann_ivf_assigned_topk (ann_stored_index_topk shares its oracle
-#   verbatim and stays), embedding_near_dups_lsh (ann_recall_report
-#   hash-checks the LSH ladder), epoch_shuffle_sample,
-#   temperature_mixture_stats, ffd_packing_report,
-#   large_quantity_orders, idle_rich_customers.
-# Planned IN (highest-value never-checked: the round-5 analytics/eval
-# wave + the streaming heavy hitters + the deterministic batch
-# source):
-#   ab_test_report, ks_drift_report, knn_label_consistency,
-#   hard_negative_report, embedding_quantization_report,
-#   minhash_calibration_report, dedup_graph_stats,
-#   term_postings_stats, bigram_lm_report, doc_lm_scores,
-#   stratified_doc_sample, event_transition_matrix, rfm_segments,
-#   streaming_frequent_terms, synthetic_events_batch_sample.
-#
-# Registry changes r7 (VERDICT r6 #2 audit): top_terms RETIRED
-# (explode->doc-freq->top-k strictly contained in tfidf_top_terms' IDF
-# build and frequent_terms_report) and status_priority_cube RETIRED
-# (cube() is sugar over the same Expand operator
-# status_priority_grouping_sets hash-checks, with GROUPING-id on
-# top).  One genuine gap-fill ADDED: synthetic_events_batch_sample —
-# the md5-deterministic face of the spark.range batch generator
-# (VERDICT r6 #5), giving the S1 batch variant a value-level hash
-# oracle; queued for a future rotation.  Late-r7 continuation of the
-# same audit: approx_distinct_users RETIRED — its entire check
-# (exact count + built-in approx_count_distinct within-5% envelope)
-# is absorbed as hll_partitioned_distinct's hllpp_within_5pct column,
-# so the driver-window sketch entry now hash-checks BOTH HLL
-# implementations (DataSketches agg/union + built-in HLL++) in one
-# global pass.
-#
-# Remaining never-checked pool for round 8+: doc_length_buckets,
-# value_stats_by_type, synthetic_events_batch_sample,
-# json_wire_roundtrip, multimodal_frame_stats,
-# synthetic_events_sample, streaming_doc_quality_counts, the round-5
-# analytics module (bigram_lm_report, doc_lm_scores,
-# term_postings_stats, stratified_doc_sample, rolling_daily_revenue,
-# user_activity_zscores, source_overlap_matrix, event_type_islands,
-# user_activity_trend, streaming_window_topk_items,
-# lexical_diversity_correlation, referential_integrity_audit,
-# embedding_quantization_report, minhash_calibration_report,
-# doc_model_scores, streaming_model_scored_counts, dedup_graph_stats,
-# ab_test_report, event_type_lift, term_source_association,
-# rfm_segments, source_diversity_report, event_transition_matrix,
-# ks_drift_report, knn_label_consistency, hard_negative_report,
-# streaming_frequent_terms, shared_chunk_report) plus
-# multimodal_audio_stats (the last never-checked lake.py entry).
-#
-# Round-8 rotation (VERDICT r7 'Next round' #1 — executed exactly as
-# pre-verified above; CORRECTNESS_r07 landed 50/50 green, making every
-# planned-out name >=2-round hash-green).  FIFTEEN slots rotate out to
-# the local parity suite, each operator family still driver-covered by
-# a sibling kept in (subsumption arguments recorded in the r8 queue
-# comment above):
-#   part_type_revenue_share, forecast_revenue_change,
-#   hll_partitioned_distinct, status_priority_grouping_sets,
-#   segment_event_pivot, purchase_click_attribution,
-#   streaming_replay_user_counts, minhash_dedup_candidates,
-#   ann_ivf_assigned_topk, embedding_near_dups_lsh,
-#   epoch_shuffle_sample, temperature_mixture_stats,
-#   ffd_packing_report, large_quantity_orders, idle_rich_customers.
-# Fifteen never-driver-checked queries rotate in — this window
-# hash-checks exactly the queries whose plans the round-7
-# broadcast-audit rewrites touched (minhash_calibration_report,
-# dedup_graph_stats, term_postings_stats, doc_lm_scores), the round-5
-# eval/analytics wave, the streaming heavy hitters, and the
-# deterministic batch synthetic source:
-#   ab_test_report, ks_drift_report, knn_label_consistency,
-#   hard_negative_report, embedding_quantization_report,
-#   minhash_calibration_report, dedup_graph_stats,
-#   term_postings_stats, bigram_lm_report, doc_lm_scores,
-#   stratified_doc_sample, event_transition_matrix, rfm_segments,
-#   streaming_frequent_terms, synthetic_events_batch_sample.
-#
-# Round-9 rotation (VERDICT r8 #3 — the staged queue executed, widened
-# from 10 to 14 slots to hit the backlog<=13 target).  Pre-verification
-# protocol (VERDICT r8 #4): every candidate's output schema printed and
-# confirmed scalar-only, rows>0 at sf0.01, and byte-exact parity green
-# under BOTH config axes (engine-default tz / shuffle=8 AND
-# Asia/Kathmandu / shuffle=3) before promotion — all 27 never-checked
-# queries passed all three gates (ffd_packing_stats rows-only by
-# design, 20 rows).
-#
-# FOURTEEN >=2-round hash-green slots rotate out to the local parity
-# suite, each family still driver-covered by a sibling kept in:
-#   nation_year_profit (region_market_share stays: same multi-join
-#   TPC-H family), scd2_user_segment_history
-#   (scd2_pointintime_enrichment + streaming_scd2_user_segments stay),
-#   corpus_snapshot_diff, purchase_window_views, model_eval_report
-#   (ab_test_report + ks_drift_report stay: eval family),
-#   data_contract_violations, pii_scrub_stats, k_anonymity_audit
-#   (join_skew_report + daily_anomaly_report + quality_funnel_stats
-#   stay: governance family), doc_crossdup_rates,
-#   ann_ivf_multiprobe_topk (ann_recall_report + ann_stored_index_topk
-#   stay), streaming_session_counts (streaming_incremental_dedup +
-#   four other streaming twins stay), jsonl_roundtrip_stats,
-#   csv_roundtrip_stats (zorder_roundtrip_stats + upsert_time_travel_
-#   stats stay: lifecycle materialization family), user_feature_vectors
-#   (hourly_seasonality_profile + rfm_segments stay: training-feature
-#   family).
-# FOURTEEN never-driver-checked queries rotate in: the four TPC-H
-# extras that survived the r8 subsumption audit (sole_late_suppliers
-# Q21 decorrelated EXISTS/NOT-EXISTS, brand_quantity_revenue Q19
-# disjunctive cross-side predicate, small_order_parts_revenue Q17
-# decorrelated window average, returned_revenue_top_customers Q10
-# exact-decimal top-k) plus the top of the never-checked pool
-# (doc_model_scores, streaming_model_scored_counts, event_type_lift,
-# term_source_association, source_diversity_report,
-# rolling_daily_revenue, user_activity_zscores, doc_length_buckets,
-# streaming_doc_quality_counts, source_overlap_matrix).
-#
-# doc_length_buckets subsumption audit (VERDICT r7 #4): NOT a subset
-# of documents_profile — the profile is a single-pass parallel
-# aggregate + stack unpivot with no derived grouping key, while
-# doc_length_buckets groups on a DERIVED integer key computed by bit
-# arithmetic (length(bin(n))-1 bucketing + shiftleft boundaries); no
-# other registered query hash-checks integer log2 bucketing or a
-# groupBy on a computed power-of-2 bucket.  KEPT, rotated in.
-# Round-9 subset audits (VERDICT r8 #5): source_overlap_matrix is NOT
-# a subset of source_diversity_report + term_source_association —
-# overlap computes pairwise Jaccard of cross-source SHINGLE-HASH SETS
-# (polynomial 3-gram shingles carried by source, shingle-local
-# source-set i<j expansion, per-source distinct-set sizes joined back)
-# while diversity/association are unigram contingency rollups; no
-# other query hash-checks group-level set Jaccard or the group-keyed
-# shingle pipeline.  KEPT, rotated in.  user_activity_trend is NOT a
-# subset of user_activity_zscores — trend hash-checks the datediff
-# day-index derivation and a two-level (user,day)->user rollup with
-# five exact integer moments feeding a closed-form least-squares
-# slope; zscores is a one-level rollup against GLOBAL broadcast
-# moments with a TakeOrdered render.  Shared idiom (exact integer
-# moments), disjoint plan shapes and date arithmetic.  KEPT, queued.
-# Two queries RETIRED instead (arguments in plans/extras.py module
-# docstring): synthetic_events_sample (constant invariants-row oracle
-# dominated by test_synthetic_source_shape + the deterministic twin's
-# value hash) and json_wire_roundtrip (counts-only oracle dominated by
-# streaming_json_wire_counts' value-exact wire-path hash + the
-# µs-salted test_kafka_contract pin).  Registry 157 -> 155.
-#
-# Remaining never-driver-checked backlog after this window (11):
-#   event_type_islands, ffd_packing_stats (rows-only by design),
-#   iso_timestamp_render, lexical_diversity_correlation,
-#   multimodal_audio_stats, multimodal_frame_stats,
-#   referential_integrity_audit, shared_chunk_report,
-#   streaming_window_topk_items, user_activity_trend,
-#   value_stats_by_type.
-# All 11 already pre-verified this round (scalar-only + rows>0 +
-# two-config parity) — the round-10 queue can promote them as-is.
-#
-# Round-10 rotation (VERDICT r9 #2 — backlog to ZERO).  Of the 11
-# never-checked names above, iso_timestamp_render was RETIRED instead
-# of promoted (the r9 #6 audit — argument in plans/extras.py: both of
-# its scalar renders are pinned harder elsewhere, µs-salted
-# bit-exact in test_kafka_contract and driver-green in
-# sliding_user_counts' key format; registry 155 -> 154) and
-# value_stats_by_type was audited and KEPT (argument at its
-# registration: the only DECIMAL-moment order-independent sample
-# variance hash in the registry).  The surviving 10 promote, plus
-# ngram_jaccard_pairs re-enters: its PLAN CHANGED this round (the
-# open-vocab re-scope onto LSH candidate generation — see the r10
-# PLANS.md entry), and its last driver checks (r1-r3) hashed the OLD
-# posting-join generator, so the changed-plan rule below gives it a
-# slot ahead of any re-green.  Pre-rotation gate: all 11 rotate-ins
-# green under BOTH config axes (engine-default tz / shuffle=8 AND
-# Asia/Kathmandu / shuffle=3) via scripts/full_parity_sweep.py this
-# round (ffd_packing_stats rows-only by design, 20 rows).
-#
-# ELEVEN >=2-round hash-green slots rotate out to the local parity
-# suite, each family still driver-covered by a sibling kept in:
-#   ab_test_report (ks_drift_report stays: model-eval family),
-#   knn_label_consistency + hard_negative_report (ann_recall_report +
-#   ann_stored_index_topk stay: ANN/similarity-audit family),
-#   embedding_quantization_report (embedding_health_report stays:
-#   embedding-audit family), bigram_lm_report (doc_lm_scores stays:
-#   n-gram LM family), stratified_doc_sample (rfm_segments +
-#   doc_length_buckets stay: training-assembly family),
-#   event_transition_matrix (pagerank_top_items stays: the
-#   item-transition graph is built by the same edge extraction),
-#   dedup_graph_stats (corpus_curation_stats +
-#   minhash_calibration_report + streaming_incremental_dedup stay:
-#   dedup family), item_covisitation_pairs (event_type_lift stays:
-#   bucket-local co-occurrence pair family), hourly_seasonality_profile
-#   (rolling_daily_revenue + user_activity_zscores stay: calendar
-#   analytics family), langid_confusion_matrix (doc_model_scores +
-#   streaming_model_scored_counts stay: classifier-eval family; the
-#   language_id expression itself is shared verbatim with the
-#   parity-local language_id query, so eval cannot drift from the
-#   classifier unchecked).
-#
-# STEADY-STATE RE-GREEN POLICY (VERDICT r9 #7 — in force from round
-# 11, now that every registered query has carried a driver check):
-#   1. CHANGED-PLAN FIRST: any query whose physical plan changed since
-#      its last driver green (source edit touching its operators) gets
-#      a slot the NEXT round, ahead of all re-greens — a local parity
-#      pass is necessary but not sufficient for a changed plan
-#      (ngram_jaccard_pairs this round is the template).
-#   2. ANCHORS every round (~15 slots): the streaming twins
-#      (batch-replayed foreachBatch/sink parity: streaming_*) and the
-#      materialization queries (zorder_roundtrip_stats,
-#      upsert_time_travel_stats, ann_stored_index_topk, jsonl/csv
-#      round-trips when windowed in) — the two families whose bugs are
-#      stateful and environment-sensitive rather than plan-shaped.
-#   3. STALE-FIRST for the rest: remaining slots go to the queries
-#      longest since last driver green, so with ~35 rotating slots
-#      over a 154-query registry every query re-greens within
-#      ceil((154-15)/35) = 4 rounds.
-# Round-11 queue under this policy: no changed plans expected (freeze
-# holds); anchors stay; rotate out the 11 r9-promoted names once they
-# reach 2-round green and rotate in the 11 STALEST parity-local names.
-# Staleness is COMPUTED, not recalled: scripts/regreen_queue.py reads
-# every CORRECTNESS artifact and prints the buckets + proposal (as of
-# r9 artifacts: cast_hygiene, event_type_stats,
-# kpi_avg_user_interactions, kpi_item_extrema,
-# latest_window_top_items, null_hygiene_count, order_price_bands,
-# recent_user_windows, top_users — all last green r2 — then
-# customer_running_spend, customers_with_orders from r3).  Queries
-# demoted with a written zero-signal argument (0-row hashes,
-# duplicate shapes — the r1/r2 demotion list above) are exempt from
-# stale-first; the exemption set lives in regreen_queue.py.
-# All 11 staged names PRE-VERIFIED round 10 (the r9 protocol):
-# scalar-only driver canon + rows>0 at sf0.01, and byte-exact parity
-# green under BOTH config axes (engine-default tz / shuffle=8 AND
-# Asia/Kathmandu / shuffle=3) — round 11 can promote them as-is.
-#
-# Round-11 rotation (EXECUTED — the staged queue above, confirmed by
-# scripts/regreen_queue.py --slots 11 against the r1-r10 artifacts
-# after the rows-only green fix; gate re-run this round: all 11
-# rotate-ins green under both config axes).  The 11 rotate-ins are the
-# stalest parity-local queries: cast_hygiene, event_type_stats,
-# kpi_avg_user_interactions, kpi_item_extrema, latest_window_top_items,
-# null_hygiene_count, order_price_bands, recent_user_windows,
-# top_users (last green r2); customer_running_spend,
-# customers_with_orders (r3).
-#
-# ELEVEN of the twelve non-anchor r9-promoted slots rotate out at
-# 2-round green (r9+r10), each family still driver-covered:
-#   sole_late_suppliers (Q21 multi-exists shape: region_market_share
-#   stays for multi-join TPC-H; incoming customers_with_orders
-#   driver-checks the EXISTS semi-join family),
-#   brand_quantity_revenue + small_order_parts_revenue (scalar
-#   part-lineitem aggregates: incoming order_price_bands +
-#   kpi_item_extrema carry the lineitem/price aggregate family),
-#   returned_revenue_top_customers (top-N over join: incoming
-#   top_users + latest_window_top_items carry the top-N family),
-#   doc_model_scores (anchor streaming_model_scored_counts shares the
-#   scoring expression verbatim; ks_drift_report stays: eval family),
-#   term_source_association (event_type_lift KEPT this round — the one
-#   r9-promote retained, preserving the r10 argument that named it the
-#   bucket-local co-occurrence/association family's kept sibling),
-#   source_diversity_report (corpus_curation_stats stays:
-#   source-profile family), rolling_daily_revenue (daily_anomaly_report
-#   stays: daily time-series family), user_activity_zscores
-#   (daily_anomaly_report stays: z-score anomaly family),
-#   doc_length_buckets (rfm_segments stays: quantile-bucket segment
-#   family; lexical_diversity_correlation stays for doc-stat shapes),
-#   source_overlap_matrix (shared_chunk_report stays: cross-source
-#   overlap family).
-# Oldest last-green in the registry rises from r2 to r3-era; next
-# stale cohort (for round 12) is the r3/r4 wave.
-#
-# Round-12 queue STAGED (computed by regreen_queue.py from the
-# r1-r10 artifacts; will recompute against r11's artifact when it
-# lands — the proposal below assumed the r11 window greens):
-#   doc_fingerprints, exact_dedup_groups, language_id,
-#   nation_top_customers, order_priority_rollup, simhash_near_dups,
-#   text_metrics (last green r3); click_and_purchase_users,
-#   customer_order_count_histogram, customer_spend_distribution,
-#   pricing_summary (r4).
-# All 11 PRE-VERIFIED round 11: byte-exact parity green under BOTH
-# config axes (engine-default tz / shuffle=8 AND Asia/Kathmandu /
-# shuffle=3), scalar-only driver canon (toPandas + sort_values), and
-# rows>0 at sf0.01.  Rotate-out candidates: the r10-promoted
-# never-checked cohort reaches 2-round green when CORRECTNESS_r11
-# lands (event_type_islands, lexical_diversity_correlation,
-# multimodal_*_stats, referential_integrity_audit,
-# shared_chunk_report, user_activity_trend, value_stats_by_type,
-# ffd_packing_stats rows-only, + the re-scoped ngram) — family
-# arguments to be written at rotation time per the r11 template.
-#
-# Round-12 rotation (EXECUTED — the staged queue above, re-confirmed
-# by regreen_queue.py --slots 11 against the r1-r11 artifacts; gate
-# RE-RUN this round: all 11 staged rotate-ins + the one NEW query
-# green via full_parity_sweep --only under both config axes).
-# TWELVE in, TWELVE out this round — the extra slot is
-# multimodal_decode_stats, the decode-layer hash row (r11 verdict
-# #3), promoted under the changed-plan-first rule (a NEW plan needs a
-# driver check before any re-green): planted WAV/P6/BMP/y4m payloads
-# encoded to real bytes, decoded by the pure-numpy decoders, stats
-# computed from the DECODED arrays against a closed-form DuckDB
-# oracle (plans/northstar.py).  Pre-verified this round: byte-exact
-# both axes, scalar-only canon, 500 rows at sf0.01, 0-shuffle pin.
-# The 12 rotate-outs, each ≥2-round green and family-covered:
-#   event_type_islands (gaps-and-islands: r10+r11 green; window-
-#     function sequences stay driver-covered by customer_running_spend),
-#   ffd_packing_stats (rows-only by design, r10+r11; packing family
-#     pinned by test_packing_model + parity-local ffd_packing_report),
-#   lexical_diversity_correlation (doc-stat family: incoming
-#     text_metrics carries it with a full per-doc oracle),
-#   multimodal_audio_stats + multimodal_frame_stats (SUPERSEDED in the
-#     window by incoming multimodal_decode_stats — a strictly stronger
-#     oracle: real decoders over real containers vs octet-stream
-#     stand-in kernels; both stay registered + parity-local),
-#   referential_integrity_audit (governance-audit family stays
-#     driver-covered by join_skew_report + daily_anomaly_report),
-#   shared_chunk_report (cross-source overlap: corpus_curation_stats
-#     stays — the r11 source_overlap_matrix argument),
-#   user_activity_trend (daily time-series: daily_anomaly_report
-#     stays — the r11 rolling_daily_revenue argument),
-#   value_stats_by_type (typed-value family: incoming cast_hygiene
-#     cohort sibling event_type_stats stays in window),
-#   ngram_jaccard_pairs (changed-plan re-check COMPLETE: r10+r11 green
-#     on the re-scoped plan; pair-verify family driver-covered by
-#     incoming simhash_near_dups + staying minhash_calibration_report),
-#   rfm_segments (r8-promote, 4-round green; quantile-bucket family
-#     carried by incoming customer_spend_distribution whose oracle
-#     adds the orders join),
-#   doc_lm_scores (r8-promote, 4-round green; anchor
-#     streaming_model_scored_counts shares the scoring expression
-#     verbatim — the r11 doc_model_scores argument).
-# Oldest last-green rises from r3 to r4/r5-era.  SUBSUMPTION AUDIT
-# (r11 verdict #2) of the re-greened r2-era KPI one-liners
-# (kpi_item_extrema, top_users, latest_window_top_items,
-# recent_user_windows): ALL FOUR KEPT — each is the unique registry
-# face of a reference §2 operator ID (A4/A5, T1, A6+T2, T3); written
-# arguments at their registration sites (plans/registry.py).  They
-# stay IN the window this round (1-round green only — eligible for
-# rotate-out at r13 once 2-round green).
-#
-# Round-13 queue STAGED (COMPUTED by regreen_queue.py --slots 11
-# against the r1-r11 artifacts AFTER this round's window update, so
-# the just-rotated-in cohort is excluded): revenue_by_nation,
-# salted_segment_counts, sliding_item_counts, top_unshipped_orders,
-# train_split_counts, tumbling_user_counts (last green r4);
-# ann_bruteforce_topk, dedup_clusters, funnel_conversion,
-# mixture_sample_stats, multimodal_byte_histogram (r5).
-# All 11 PRE-VERIFIED round 12 (the r10 protocol): byte-exact parity
-# green under BOTH config axes (engine-default tz / shuffle=8 AND
-# Asia/Kathmandu / shuffle=3) via full_parity_sweep --only, scalar
-# driver canon (registry-wide ratchet), and rows>0 at sf0.01
-# (counts: 5..19777).  Recompute the staleness ordering against
-# CORRECTNESS_r12 when it lands before promoting.
-# Rotate-out candidates at r13: the r11 rotate-in KPI cohort reaches
-# 2-round green (subsumption-audited KEEP above — rotation out of the
-# WINDOW is still fine once 2-round green; registry retention was the
-# audited question) + this round's 4-round-held anchors-adjacent
-# slots (ks_drift_report, minhash_calibration_report,
-# term_postings_stats).
-#
-# Round-13 rotation (EXECUTED — exactly the staged queue above,
-# re-confirmed by regreen_queue.py --slots 11 against the r1-r12
-# artifacts: CORRECTNESS_r12 is 50/50 green so the staleness ordering
-# is unchanged; gate RE-RUN this round: all 11 rotate-ins green via
-# full_parity_sweep --only under both config axes, engine-default
-# tz / shuffle=8 AND Asia/Kathmandu / shuffle=3).  ELEVEN in, ELEVEN
-# out.  The rotate-outs are the r11 rotate-in cohort at 2-round green
-# (r11+r12) — the exact set the r12 staging named first; the
-# 4-round-held eval trio (ks_drift_report, minhash_calibration_report,
-# term_postings_stats) stays one more round and heads the r14
-# rotate-out list.  Family coverage for each rotate-out:
-#   cast_hygiene (P1/P6/P7 face): the string→timestamp cast path
-#     stays driver-exercised every round via the shared window
-#     helpers (sliding_user_counts + incoming tumbling_user_counts /
-#     sliding_item_counts build on the same user_key()/item_key()
-#     casts); the try_cast face stays registered + parity-local,
-#   event_type_stats (typed rollup): incoming funnel_conversion +
-#     staying daily_anomaly_report keep the events-rollup family
-#     under the hash; the decimal-sum discipline is window-wide,
-#   kpi_avg_user_interactions / kpi_item_extrema / top_users /
-#   latest_window_top_items / recent_user_windows (A3-A6/T1-T3
-#     unique §2 faces): subsumption-audited KEEP in the REGISTRY
-#     (r12 audit, written args at registration sites); window
-#     rotation at 2-round green is exactly what the audit blessed —
-#     incoming sliding_item_counts + tumbling_user_counts keep the
-#     windowed-agg ancestry driver-checked,
-#   null_hygiene_count (P4 face): the conjunctive null filter is the
-#     streaming parse path's filter, driver-covered by the four
-#     streaming twins every round; batch face parity-local,
-#   order_price_bands (band/bucket family): staying
-#     customer_spend_distribution (r12 rotate-in, holds) carries
-#     quantile-bucket shapes with a harder oracle (orders join),
-#   recent_user_windows (T3): see unique-face argument above,
-#   customer_running_spend (running window-function family): staying
-#     nation_top_customers keeps ranked window functions under the
-#     driver hash; running-sum face parity-local,
-#   customers_with_orders (EXISTS semi-join): staying
-#     click_and_purchase_users is the same semi-join family with an
-#     intersect twist.
-# Oldest last-green in the registry rises from r4 to r5/r6-era.
-# CHANGED PLAN this round: multimodal_decode_stats gained a QOI leg
-# (functions/multimodal.py encode_qoi/decode_qoi + planted_qoi; the
-# first genuinely COMPRESSED codec under the hash discipline — r12
-# verdict optional #6).  Under the changed-plan-first rule it stays
-# IN the window (it holds the r12 rotate-in slot) so CORRECTNESS_r13
-# re-checks the new plan; pre-verified this round byte-exact under
-# both config axes, 0-shuffle pin unchanged, Arrow-batch-size
-# independence re-run green.
-#
-# Round-14 queue STAGED (COMPUTED by regreen_queue.py --slots 11
-# against the r1-r12 artifacts AFTER this round's window update, so
-# the just-rotated-in cohort is excluded): sequence_packing_stats,
-# session_window_counts, shard_skew_stats,
-# streaming_click_purchase_join, streaming_dedup_user_counts,
-# streaming_json_wire_counts, streaming_running_user_totals,
-# tfidf_top_terms, user_session_stats, vocab_oov_rates,
-# weekly_cohort_retention (all last green r5 — the batch-replay
-# streaming faces among them run their full replay under the gate).
-# All 11 PRE-VERIFIED round 13 (the r10 protocol): byte-exact parity
-# green under BOTH config axes (engine-default tz / shuffle=8 AND
-# Asia/Kathmandu / shuffle=3) via full_parity_sweep --only, scalar
-# driver canon (registry-wide ratchet), rows>0 at sf0.01.  Recompute
-# the staleness ordering against CORRECTNESS_r13 when it lands.
-# Rotate-out candidates at r14: the 5/6-round-held eval/analytics
-# slots (ks_drift_report, minhash_calibration_report,
-# term_postings_stats, ann_recall_report, corpus_curation_stats,
-# frequent_terms_report, event_type_lift — regreen_queue's eligible
-# list) + the r12 rotate-in cohort, which reaches 2-round green when
-# CORRECTNESS_r13 lands — family arguments at rotation time per the
-# r11-r13 template.
-#
-# Round-14 rotation (EXECUTED — exactly the staged queue above,
-# re-confirmed by regreen_queue.py --slots 11 against the r1-r13
-# artifacts: CORRECTNESS_r13 is 50/50 green so the staleness ordering
-# is unchanged; gate RE-RUN this round on the final plans — all 11
-# rotate-ins green via full_parity_sweep --only under both config
-# axes, engine-default tz / shuffle=8 AND Asia/Kathmandu /
-# shuffle=3).  ELEVEN in, ELEVEN out.  CHANGED PLANS this round, all
-# window-covered per the changed-plan-first rule: the four
-# append-mode windowed streaming twins switched to the fast-append
-# sink (monotone_col="window_start"; streaming_queries.py) — two of
-# them (streaming_dedup_user_counts, streaming_json_wire_counts)
-# enter the window with this rotation, the other two
-# (streaming_enriched_segment_counts, streaming_window_topk_items)
-# already hold slots; multimodal_decode_stats' decode kernels gained
-# the QOI pre-allocation pixel bound + the WAV sentinel-only
-# best-effort restriction (edge-case paths, planted payloads
-# untouched) and it KEEPS its slot; upsert_time_travel_stats rides
-# the mark-layout change in sinks.py and keeps its slot.
-# Rotate-outs = the 5/6-round-held eval/analytics cohort (7) + four
-# of the r12 rotate-in cohort at 2-round green (r12+r13).  Family
-# coverage for each rotate-out:
-#   ks_drift_report + minhash_calibration_report (eval/calibration,
-#     held since r8): staying daily_anomaly_report keeps the
-#     eval/anomaly family hashed; the KS and calibration faces go
-#     parity-local with their closed-form oracles intact,
-#   term_postings_stats (postings/IDF): incoming tfidf_top_terms IS
-#     the same postings→TF-IDF family with a strictly harder oracle
-#     (full tf-idf ranking, not just document frequencies),
-#   ann_recall_report (ANN eval): anchor ann_stored_index_topk +
-#     staying ann_bruteforce_topk keep both ANN faces (index path and
-#     exact baseline) under the hash,
-#   corpus_curation_stats (curation end-to-end): staying
-#     quality_funnel_stats + anchor streaming_doc_quality_counts
-#     carry the quality-gate family; the CC component stays hashed
-#     via staying dedup_clusters,
-#   frequent_terms_report (batch Misra-Gries): anchor
-#     streaming_frequent_terms is the SAME operator's streaming face
-#     and pins the shared phi constant by assert,
-#   event_type_lift (co-occurrence lift): staying funnel_conversion
-#     keeps event-sequence analytics hashed; the lift face is
-#     parity-local,
-#   exact_dedup_groups (dedup): staying dedup_clusters is the
-#     strictly harder dedup face (LSH candidates + connected
-#     components vs hash-groupBy) + anchor streaming_incremental_dedup,
-#   language_id (text): incoming vocab_oov_rates + tfidf_top_terms
-#     carry tokenization under the hash; the n-gram model itself has
-#     a pure-Python twin (tests/test_langid_model.py),
-#   text_metrics (text metrics): anchor streaming_doc_quality_counts
-#     computes the same quality metrics streaming-side every round,
-#   click_and_purchase_users (click×purchase semi-join): incoming
-#     streaming_click_purchase_join is the same click×purchase join
-#     family at stream strength (stream-stream interval join).
-# Oldest last-green in the registry rises from r5 to r6-era.
-#
-# Round-15 queue STAGED (COMPUTED by regreen_queue.py --slots 11
-# against the r1-r13 artifacts AFTER this round's window update, so
-# the r14 rotate-in cohort is excluded): approx_quantiles_report,
-# benchmark_contamination, curation_keep_best, doc_chunks,
-# doc_repetition_scores, documents_profile,
-# embedding_dedup_clusters, event_dedup_counts, fuzzy_prefix_dups,
-# kmeans_codebook_report, latest_event_per_user (all last green r6).
-# All 11 PRE-VERIFIED round 14 (the r10 protocol): byte-exact parity
-# green under BOTH config axes (engine-default tz / shuffle=8 AND
-# Asia/Kathmandu / shuffle=3) via full_parity_sweep --only, scalar
-# driver canon (registry-wide ratchet), rows>0 at sf0.01.  Recompute
-# the staleness ordering against CORRECTNESS_r14 when it lands.
-# Rotate-out candidates at r15: the r13 rotate-in cohort (2-round
-# green when CORRECTNESS_r14 lands) + the remaining r12 cohort slots
-# (doc_fingerprints, nation_top_customers, order_priority_rollup,
-# simhash_near_dups, customer_order_count_histogram,
-# customer_spend_distribution, pricing_summary) at 3-round green.
-# streaming_replay_user_counts still runs the CLASSIC sink; switch it
-# to monotone_col="window_start" in whichever round stale-first
-# ordering rotates it back in (changed-plan-first applies then).
+# queries; the rest get only the local parity suites.  So registration
+# order is a budget: `_DRIVER_WINDOW` names the 50 slots, and
+# `_reorder_registry()` re-inserts REGISTRY in that order at import
+# time, so a query registered anywhere lands after slot 50 unless it is
+# named here.  Slots rotate: queries whose hash stayed green across
+# rounds rotate out (their operator family kept driver-covered by a
+# sibling still in the window), and stale or changed-plan queries
+# rotate in after a byte-exact parity sweep on both config axes.  The
+# per-round rotation record (who moved, and why) lives in the git
+# history of this file.
 # ---------------------------------------------------------------------------
 
 _DRIVER_WINDOW = [

@@ -147,7 +147,7 @@ def fold_batches(
     while the read path stays a plain parquet scan with the same
     partition pruning.
 
-    Tiered like the upsert sink's leaf stacks (sinks.py stack_max):
+    Tiered like the upsert sink's leaf stacks (sinks.py STACK_MAX):
     a routine fold touches only the NEW batch dirs since the last fold
     — O(fold period) I/O regardless of table size — and once
     `max_gens` generations accumulate, ONE fold also folds the

@@ -24,35 +24,36 @@ MERGE INTO — the same keyed upsert with file-level pruning; their
 data-skipping plays the role the bucket hash plays here); the interface
 is format-agnostic on purpose.
 
-Fast-append mode (opt-in, `monotone_col=`): the r13 streaming soak
-measured the one per-batch cost that grows with table size — the
-bucket rewrite — even though append-mode batches only ever INSERT new
-keys (a finalized window emits once).  When the caller declares a key
-column that is non-decreasing across merges (window_start in an
-append-mode stream), the table keeps a per-bucket high-water mark of
-that column; a merge whose bucket-minimum strictly exceeds the mark
-provably matches no stored key, so it APPENDS a new leaf (the bucket's
-manifest entry becomes a LIST of leaf versions) instead of
-read+anti-join+rewrite — O(batch) I/O, independent of table size.
-Overlapping or replayed batches, and buckets stacked past `stack_max`
-leaves, take the classic rewrite path, which also folds the stack —
-LSM compaction in miniature, amortizing rewrites to
-O(table / stack_max) per merge.  Null monotone values fall back to
-the rewrite path (SQL null-equality means they can never match
-anyway, but the conservative path keeps the reasoning local).  The
-default (monotone_col=None) is byte-for-byte the original behavior.
+Fast-append mode (`monotone_col=`): the one per-batch cost that grows
+with table size is the bucket rewrite, even though append-mode
+batches only ever INSERT new keys (a finalized window emits once).
+When the caller declares a key column that is non-decreasing across
+merges (window_start in an append-mode stream), the table keeps a
+per-bucket high-water mark of that column.  A merge whose bucket
+minimum strictly exceeds the mark provably matches no stored key, so
+it APPENDS a new leaf to the bucket's manifest entry (a list of leaf
+versions, oldest first) instead of read+anti-join+rewrite — O(batch)
+I/O, independent of table size.  Overlapping or replayed batches, and
+buckets stacked to `STACK_MAX` leaves, take the rewrite path, which
+also folds the stack — LSM compaction in miniature, amortizing
+rewrites to O(table / STACK_MAX) per merge.  Null monotone values
+fall back to the rewrite path (SQL null-equality means they can
+never match anyway, but the conservative path keeps the reasoning
+local).
 
-Mark soundness across sessions (ADVICE r13): marks are stored
-column-TAGGED ({"col", "marks"}) and trusted only when the session's
-monotone_col matches; a classic-mode merge drops the touched
-buckets' marks (its inserts may exceed them), deletes keep marks
-(upper bounds survive row removal).  So no reopen sequence — column
-swap, classic interleave, legacy table — can pass the `lo > mark`
-test against a mark that doesn't bound the stored data.
+Mark soundness: a table's mode is fixed when it is created — the
+manifest records `monotone_col` beside `n_buckets`, and opening the
+table with a different one raises.  So every merge into a monotone
+table maintains the marks: a new bucket or an append records the
+batch maximum, a rewrite raises the mark to the batch maximum, a
+delete keeps it (an upper bound survives row removal) unless the
+bucket empties.  A bucket without a mark holds only null monotone
+values, so the first non-null rewrite sets a sound mark.
 """
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import shutil
@@ -63,7 +64,8 @@ from pyspark.sql import functions as F
 _CURRENT = "_CURRENT"
 _BUCKET = "__bucket"
 N_BUCKETS = 16
-_UNKNOWN = object()  # "no high-water mark recorded for this bucket"
+# A fast-append bucket folds back into one leaf once it stacks this many.
+STACK_MAX = 8
 
 
 class UpsertTable:
@@ -77,7 +79,6 @@ class UpsertTable:
         n_buckets: int = N_BUCKETS,
         retain_versions: int = 1,
         monotone_col: str | None = None,
-        stack_max: int = 8,
     ):
         self.spark = spark
         self.path = path
@@ -93,9 +94,6 @@ class UpsertTable:
                 f"columns {self.key_cols}"
             )
         self.monotone_col = monotone_col
-        if stack_max < 1:
-            raise ValueError("stack_max must be >= 1")
-        self.stack_max = stack_max
         # How many SUPERSEDED versions stay readable (the vacuum grace
         # window).  1 = the original contract: current + the previous
         # version (for in-flight readers).  Larger values buy time
@@ -107,17 +105,27 @@ class UpsertTable:
 
     # -- manifest management --------------------------------------------
     def _manifest(self) -> dict | None:
-        """{"version": int, "buckets": {bucket(str): version(int)}}"""
+        """{"version": int, "buckets": {bucket(str): [leaf version, ...]},
+        "n_buckets": int, "monotone_col": str | None, "pending": [...],
+        "marks": {bucket(str): high-water mark} (monotone mode only)}.
+        None only when the table does not exist yet; an unreadable
+        manifest raises rather than passing for an empty table."""
         try:
             with open(os.path.join(self.path, _CURRENT)) as f:
                 m = json.load(f)
-        except (FileNotFoundError, ValueError):
+        except FileNotFoundError:
             return None
-        if m.get("n_buckets") != self.n_buckets:
+        except ValueError as e:
             raise ValueError(
-                f"table at {self.path} was written with "
-                f"n_buckets={m.get('n_buckets')}, opened with {self.n_buckets}"
-            )
+                f"table at {self.path} has an unreadable manifest: {e}"
+            ) from e
+        for field in ("n_buckets", "monotone_col"):
+            if m.get(field) != getattr(self, field):
+                raise ValueError(
+                    f"table at {self.path} was written with "
+                    f"{field}={m.get(field)!r}, opened with "
+                    f"{getattr(self, field)!r}"
+                )
         return m
 
     def _flip(self, manifest: dict) -> None:
@@ -135,43 +143,55 @@ class UpsertTable:
         with open(snap, "w") as f:
             json.dump(manifest, f)
 
+    def _commit(self, m: dict, buckets: dict, rewritten: list) -> None:
+        """Publish the next version of `m` with the bucket map
+        `buckets`.  Every leaf of the `rewritten` buckets is superseded
+        and enters the pending-delete ledger.
+
+        Pending-delete ledger: [v_old, bucket, v_sup] = the leaf
+        v=<v_old>/__bucket=<b> was superseded by the version v_sup.
+        Snapshots v_old..v_sup-1 reference it, so it is safe to unlink
+        once the newest of those has aged past the retain_versions
+        window: v_sup-1 < v_new - R (R=1 is the original contract:
+        current + one grace version).  Superseded leaves are unlinked
+        by exact path — no directory walking on the hot path — and
+        entries stay in the ledger one extra version after deletion
+        (rmtree is idempotent), so a crash between flip and vacuum
+        heals on the next commit instead of leaking the leaf."""
+        v_new = m["version"] + 1
+        pending = m.get("pending", []) + [
+            [v_old, str(b), v_new]
+            for b in rewritten
+            for v_old in m["buckets"][str(b)]
+        ]
+        r = self.retain_versions
+        ripe = [p for p in pending if p[2] < v_new - (r - 1)]
+        m["pending"] = [p for p in pending if p[2] >= v_new - r]
+        m["version"] = v_new
+        m["buckets"] = buckets
+        self._flip(m)
+        self._vacuum(ripe)
+
     def _leaf(self, version: int, bucket: int | str) -> str:
         return os.path.join(self.path, f"v={version}", f"{_BUCKET}={bucket}")
 
-    @staticmethod
-    def _leaf_versions(entry) -> list[int]:
-        """A manifest bucket entry is an int (single leaf — the
-        original layout) or a list of leaf versions (fast-append
-        stack, oldest first)."""
-        return list(entry) if isinstance(entry, list) else [entry]
+    def _leaves(self, m: dict, buckets) -> list[str]:
+        return [
+            self._leaf(v, b) for b in buckets for v in m["buckets"][str(b)]
+        ]
 
     @staticmethod
     def _mono_encode(v):
-        """JSON-encode a high-water-mark value, tagging the types JSON
-        cannot represent natively."""
-        import datetime
-        import decimal
-
+        """JSON-encode a high-water mark: timestamps (window_start) as
+        tagged ISO strings, ints as themselves."""
         if isinstance(v, datetime.datetime):
             return {"t": "dt", "v": v.isoformat()}
-        if isinstance(v, datetime.date):
-            return {"t": "d", "v": v.isoformat()}
-        if isinstance(v, decimal.Decimal):
-            return {"t": "dec", "v": str(v)}
         return v
 
     @staticmethod
     def _mono_decode(v):
-        import datetime
-        import decimal
-
         if isinstance(v, dict):
-            if v.get("t") == "dt":
-                return datetime.datetime.fromisoformat(v["v"])
-            if v.get("t") == "d":
-                return datetime.date.fromisoformat(v["v"])
-            if v.get("t") == "dec":
-                return decimal.Decimal(v["v"])
+            return datetime.datetime.fromisoformat(v["v"])
         return v
 
     def _bucket_col(self) -> F.Column:
@@ -196,11 +216,7 @@ class UpsertTable:
                 ) from None
         if m is None:
             return None
-        paths = [
-            self._leaf(v, b)
-            for b, entry in sorted(m["buckets"].items())
-            for v in self._leaf_versions(entry)
-        ]
+        paths = self._leaves(m, sorted(m["buckets"]))
         if not paths:
             return None
         if version is not None:
@@ -281,15 +297,10 @@ class UpsertTable:
             )
             if not touched:
                 return 0
-            paths = [
-                self._leaf(v, b)
-                for b in touched
-                for v in self._leaf_versions(m["buckets"][str(b)])
-            ]
             # single scan; bucket recomputed from keys (see merge)
-            current = self.spark.read.parquet(*paths).withColumn(
-                _BUCKET, self._bucket_col()
-            )
+            current = self.spark.read.parquet(
+                *self._leaves(m, touched)
+            ).withColumn(_BUCKET, self._bucket_col())
             current = current.persist()
             try:
                 n_deleted = current.join(
@@ -306,32 +317,19 @@ class UpsertTable:
                 ).partitionBy(_BUCKET).parquet(
                     os.path.join(self.path, f"v={v_new}")
                 )
-                pending = [list(p) for p in m.get("pending", [])]
-                # Deletes only REMOVE rows, so surviving high-water
-                # marks remain upper bounds of the stored monotone
-                # values (the fast-append soundness direction) in
-                # every mode — no invalidation needed; just drop the
-                # mark of a bucket that empties out entirely.
-                mm = m.get("mono_max")
-                marks = mm.get("marks") if isinstance(mm, dict) else None
+                buckets = dict(m["buckets"])
                 for b in touched:
-                    for v_old in self._leaf_versions(m["buckets"][str(b)]):
-                        pending.append([v_old, str(b), v_new])
-                    # a fully-emptied bucket writes no leaf: drop it
-                    # from the manifest instead of pointing at nothing
-                    # (the rewrite also folds any fast-append stack)
+                    # the rewrite folds any fast-append stack; a
+                    # fully-emptied bucket writes no leaf, so it leaves
+                    # the manifest (and its mark goes with it) instead
+                    # of pointing at nothing.  Surviving marks stay
+                    # upper bounds: deletes only remove rows.
                     if os.path.isdir(self._leaf(v_new, b)):
-                        m["buckets"][str(b)] = v_new
+                        buckets[str(b)] = [v_new]
                     else:
-                        del m["buckets"][str(b)]
-                        if marks is not None:
-                            marks.pop(str(b), None)
-                r = self.retain_versions
-                ripe = [p for p in pending if p[2] < v_new - (r - 1)]
-                m["pending"] = [p for p in pending if p[2] >= v_new - r]
-                m["version"] = v_new
-                self._flip(m)
-                self._vacuum(ripe)
+                        del buckets[str(b)]
+                        m.get("marks", {}).pop(str(b), None)
+                self._commit(m, buckets, touched)
                 return n_deleted
             finally:
                 current.unpersist()
@@ -365,53 +363,34 @@ class UpsertTable:
             "version": 0,
             "buckets": {},
             "n_buckets": self.n_buckets,
+            "monotone_col": self.monotone_col,
         }
-        # High-water marks are tagged with the column they were
-        # recorded for: {"col": <name>, "marks": {bucket: value}}.
-        # Marks recorded for a DIFFERENT column (or by an older layout
-        # without the tag) are meaningless for this session's
-        # `lo > mark` test and are treated as unknown — the one-time
-        # learning path re-establishes them on first rewrite.  Without
-        # the tag, reopening with another key column as monotone_col
-        # could pass the fast-append test against an incomparable mark
-        # and skip the anti-join on a real key collision.
-        mm = m.get("mono_max")
-        stored_col = mm.get("col") if isinstance(mm, dict) else None
-        stored_marks = (
-            dict(mm.get("marks", {})) if stored_col is not None else {}
-        )
-        mono = stored_marks if stored_col == self.monotone_col else {}
+        marks = m.setdefault("marks", {}) if self.monotone_col else {}
 
-        # Classify each touched bucket.  "fast" = provably no key
-        # collision with stored rows (bucket min of the monotone key
-        # column strictly above the bucket's high-water mark) and the
-        # leaf stack still under stack_max; everything else rewrites.
+        # Classify each touched bucket.  "fast" = nothing stored to
+        # collide with: a new bucket, or (monotone mode) a bucket whose
+        # batch minimum is strictly above its high-water mark and whose
+        # leaf stack is still under STACK_MAX; everything else rewrites.
         fast, slow = [], []
         for b in touched:
             entry = m["buckets"].get(str(b))
-            if entry is None:
-                fast.append(b)  # new bucket: nothing to read either way
-                continue
-            lo, _hi = stats[b]
-            mark = mono.get(str(b), _UNKNOWN)
-            if (
-                self.monotone_col
-                and lo is not None
-                and mark is not _UNKNOWN
-                and lo > self._mono_decode(mark)
-                and len(self._leaf_versions(entry)) < self.stack_max
+            lo = stats[b][0]
+            if entry is None or (
+                lo is not None
+                and str(b) in marks
+                and lo > self._mono_decode(marks[str(b)])
+                and len(entry) < STACK_MAX
             ):
                 fast.append(b)
             else:
                 slow.append(b)
 
-        slow_set = set(slow)
         merged = None
         if fast:
             merged = (
                 batch
-                if not slow_set
-                else batch.where(~F.col(_BUCKET).isin(list(slow_set)))
+                if not slow
+                else batch.where(~F.col(_BUCKET).isin(slow))
             )
         if slow:
             # One scan over every leaf of every slow bucket; _BUCKET is
@@ -419,20 +398,13 @@ class UpsertTable:
             # hash) rather than carried per-leaf — a per-leaf
             # lit-column would need a unionByName chain whose Catalyst
             # analysis cost is quadratic in leaf count, which round-13
-            # measured dominating fold batches at stack_max leaves per
+            # measured dominating fold batches at STACK_MAX leaves per
             # bucket.
-            paths = [
-                self._leaf(v, b)
-                for b in slow
-                for v in self._leaf_versions(m["buckets"][str(b)])
-            ]
-            current = self.spark.read.parquet(*paths).withColumn(
-                _BUCKET, self._bucket_col()
-            )
+            current = self.spark.read.parquet(
+                *self._leaves(m, slow)
+            ).withColumn(_BUCKET, self._bucket_col())
             slow_batch = (
-                batch
-                if not fast
-                else batch.where(F.col(_BUCKET).isin(list(slow_set)))
+                batch if not fast else batch.where(F.col(_BUCKET).isin(slow))
             )
             slow_merged = current.join(
                 batch.select(self.key_cols), self.key_cols, "left_anti"
@@ -441,26 +413,6 @@ class UpsertTable:
                 slow_merged if merged is None
                 else merged.unionByName(slow_merged)
             )
-        # One-time mark learning: a bucket written before monotone_col
-        # was declared has no high-water mark; its rewrite holds every
-        # row of the bucket, so one bounded agg (only over the unknown
-        # buckets, only on their first rewrite) establishes the mark
-        # and moves the bucket onto the fast path for good.
-        learned: dict = {}
-        unknown = (
-            [b for b in slow if mono.get(str(b), _UNKNOWN) is _UNKNOWN]
-            if self.monotone_col
-            else []
-        )
-        if unknown:
-            merged = merged.persist()
-            learned = {
-                r["b"]: r["hi"]
-                for r in merged.where(F.col(_BUCKET).isin(unknown))
-                .groupBy(F.col(_BUCKET).alias("b"))
-                .agg(F.max(self.monotone_col).alias("hi"))
-                .collect()
-            }
         v_new = m["version"] + 1
         # one job: partitionBy fans the touched buckets into their
         # v=<n>/__bucket=<k> leaves.  Repartition on the bucket column
@@ -468,84 +420,22 @@ class UpsertTable:
         # task — without this, file count grows as
         # O(merges x shuffle_partitions x buckets) and snapshot reads
         # drown in small files.
-        try:
-            merged.repartition(len(touched), F.col(_BUCKET)).write.mode(
-                "overwrite"
-            ).partitionBy(_BUCKET).parquet(
-                os.path.join(self.path, f"v={v_new}")
-            )
-        finally:
-            if unknown:
-                merged.unpersist()
-        # superseded leaves enter the pending-delete ledger; they stay
-        # on disk through the one-version grace window for in-flight
-        # readers, then _vacuum unlinks them by exact path — no
-        # directory walking on the hot path
-        # Pending-delete ledger: [v_old, bucket, v_sup] = the leaf
-        # v=<v_old>/__bucket=<b> was superseded by the merge that
-        # produced version v_sup.  A manifest at version m_v references
-        # that leaf iff v_old <= m_v < v_sup, so once v_sup < current
-        # the only manifests that could see it (current and the
-        # one-version reader grace window) cannot — it is safe to
-        # unlink.  Entries stay in the ledger for one extra merge after
-        # deletion (rmtree is idempotent), so a crash between flip and
-        # vacuum heals on the next merge instead of leaking the leaf.
-        pending = [list(p) for p in m.get("pending", [])]
-        for b in slow:
-            # only REWRITTEN buckets supersede leaves; a fast append
-            # leaves every prior leaf live (nothing replaced it)
-            for v_old in self._leaf_versions(m["buckets"][str(b)]):
-                pending.append([v_old, str(b), v_new])
-        # A leaf [v_old, b, v_sup] is referenced by snapshots
-        # v_old..v_sup-1; the newest of those is v_sup-1.  It is safe
-        # to delete once every snapshot referencing it has aged past
-        # the retain_versions window: v_sup-1 < v_new - R.  R=1 is the
-        # original contract (current + one grace version).
-        r = self.retain_versions
-        ripe = [p for p in pending if p[2] < v_new - (r - 1)]
-        m["pending"] = [p for p in pending if p[2] >= v_new - r]
-        m["version"] = v_new
+        merged.repartition(len(touched), F.col(_BUCKET)).write.mode(
+            "overwrite"
+        ).partitionBy(_BUCKET).parquet(os.path.join(self.path, f"v={v_new}"))
+        buckets = dict(m["buckets"])
         for b in touched:
-            entry = m["buckets"].get(str(b))
-            if b in slow_set or entry is None:
-                m["buckets"][str(b)] = v_new  # rewrite folds any stack
-            else:
-                m["buckets"][str(b)] = self._leaf_versions(entry) + [v_new]
-            if self.monotone_col:
-                _lo, hi = stats[b]
-                mark = mono.get(str(b), _UNKNOWN)
-                if b in learned:
-                    if learned[b] is not None:
-                        mono[str(b)] = self._mono_encode(learned[b])
-                elif mark is not _UNKNOWN:
-                    if hi is not None:
-                        mono[str(b)] = self._mono_encode(
-                            max(self._mono_decode(mark), hi)
-                        )
-                elif entry is None and hi is not None:
-                    mono[str(b)] = self._mono_encode(hi)  # new bucket
-        if self.monotone_col:
-            m["mono_max"] = {"col": self.monotone_col, "marks": mono}
-        elif stored_col is not None:
-            # Classic-mode merge into a table carrying marks: the
-            # batch may insert rows whose monotone values exceed the
-            # stored marks, which would let a later monotone-mode
-            # reopen fast-append against a stale mark and silently
-            # duplicate keys.  Drop the touched buckets' marks (they
-            # relearn on first rewrite); untouched buckets' marks stay
-            # valid — nothing was inserted there.
-            for b in touched:
-                stored_marks.pop(str(b), None)
-            if stored_marks:
-                m["mono_max"] = {"col": stored_col, "marks": stored_marks}
-            else:
-                m.pop("mono_max", None)
-        elif mm is not None:
-            # legacy untagged marks are never trusted — clear them so
-            # the manifest converges to the tagged layout
-            m.pop("mono_max", None)
-        self._flip(m)
-        self._vacuum(ripe)
+            # a rewrite folds the stack; a fast append keeps every prior
+            # leaf live (nothing replaced it), so only `slow` supersedes
+            stack = [] if b in slow else buckets.get(str(b), [])
+            buckets[str(b)] = stack + [v_new]
+            hi = stats[b][1]
+            if self.monotone_col and hi is not None:
+                mark = marks.get(str(b))
+                if mark is not None:
+                    hi = max(self._mono_decode(mark), hi)
+                marks[str(b)] = self._mono_encode(hi)
+        self._commit(m, buckets, slow)
 
     def _vacuum(self, ripe: list) -> None:
         """Unlink superseded-and-grace-expired leaves by exact path,

@@ -133,7 +133,7 @@ def test_fold_batches_consolidates_in_place_exactly_once(spark, replayed):
 
 def test_fold_batches_tiers_generations(spark, tmp_path):
     """Generations accumulate one per fold until max_gens, then a full
-    fold collapses them — the LSM amortization (sinks.py stack_max
+    fold collapses them — the LSM amortization (sinks.py STACK_MAX
     mirrored on the append-only path).  Counts preserved throughout."""
     import os
 

@@ -6,8 +6,9 @@ batches only insert new keys.  `monotone_col=` turns those merges
 into leaf APPENDS guarded by per-bucket high-water marks; these tests
 pin (a) result equivalence with the classic path on every sequence,
 (b) that appends really do not rewrite or supersede old leaves,
-(c) the stack_max fold, (d) replay/overlap falling back to the
-rewrite path, and (e) time travel / delete_keys over stacked leaves.
+(c) the STACK_MAX fold, (d) replay/overlap falling back to the
+rewrite path, (e) time travel / delete_keys over stacked leaves, and
+(f) that a table's mode is fixed when it is created.
 """
 
 from __future__ import annotations
@@ -18,6 +19,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from realtime_data_pipeline_spark.streaming import sinks
 from realtime_data_pipeline_spark.streaming.sinks import UpsertTable
 
 
@@ -75,7 +77,7 @@ def test_fast_append_stacks_leaves_without_superseding(spark, tmp_path):
     m2 = _manifest(path)
     # every bucket entry grew into a 2-leaf stack; nothing pending
     for b, entry in m2["buckets"].items():
-        assert isinstance(entry, list) and len(entry) == 2, (b, entry)
+        assert len(entry) == 2, (b, entry)
     assert m2.get("pending", []) == []
     # the v1 leaf files were not rewritten (same paths, same mtimes)
     files_after = _leaf_mtimes(path)
@@ -94,7 +96,7 @@ def test_overlap_falls_back_to_rewrite_and_upserts(spark, tmp_path):
     t.merge(_df(spark, [(2, k, 999) for k in range(4)]))
     m = _manifest(path)
     for entry in m["buckets"].values():
-        assert not isinstance(entry, list) or len(entry) == 1, entry
+        assert len(entry) == 1, entry
     got = {(r.w, r.k): r.v for r in t.read().collect()}
     assert all(got[(2, k)] == 999 for k in range(4))
     assert len(got) == 8  # no duplicate keys after the fold
@@ -110,17 +112,16 @@ def test_replay_of_appended_batch_is_idempotent(spark, tmp_path):
     assert _snapshot(t) == before
 
 
-def test_stack_max_forces_fold(spark, tmp_path):
+def test_stack_max_forces_fold(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(sinks, "STACK_MAX", 3)
     path = str(tmp_path / "t")
-    t = UpsertTable(
-        spark, path, ["w", "k"], n_buckets=1, monotone_col="w", stack_max=3
-    )
-    for w in range(1, 5):  # 4 merges, stack_max=3
+    t = UpsertTable(spark, path, ["w", "k"], n_buckets=1, monotone_col="w")
+    for w in range(1, 5):  # 4 merges, STACK_MAX=3
         t.merge(_batch(spark, w, range(3)))
     m = _manifest(path)
     entry = m["buckets"]["0"]
     # merge 4 found a 3-leaf stack -> fold: single leaf again
-    assert not isinstance(entry, list) or len(entry) == 1, entry
+    assert len(entry) == 1, entry
     assert len(t.read().collect()) == 12
 
 
@@ -151,8 +152,7 @@ def test_delete_keys_on_stacked_bucket(spark, tmp_path):
     got = {(r.w, r.k) for r in t.read().collect()}
     assert (1, 0) not in got and (2, 3) not in got and len(got) == 6
     # the rewrite folded the stack
-    entry = _manifest(path)["buckets"]["0"]
-    assert not isinstance(entry, list) or len(entry) == 1
+    assert len(_manifest(path)["buckets"]["0"]) == 1
 
 
 def test_null_monotone_values_match_classic_semantics(spark, tmp_path):
@@ -181,22 +181,6 @@ def test_null_monotone_values_match_classic_semantics(spark, tmp_path):
     assert _snapshot(fast) == _snapshot(classic)
 
 
-def test_legacy_table_opened_with_monotone_col(spark, tmp_path):
-    """A table written WITHOUT monotone tracking has no high-water
-    marks: the first merge per bucket rewrites (mark unknown), later
-    merges fast-append once the mark is established."""
-    path = str(tmp_path / "t")
-    legacy = UpsertTable(spark, path, ["w", "k"], n_buckets=1)
-    legacy.merge(_batch(spark, 1, range(4)))
-    t = UpsertTable(spark, path, ["w", "k"], n_buckets=1, monotone_col="w")
-    t.merge(_batch(spark, 2, range(4)))  # mark unknown -> rewrite
-    assert not isinstance(_manifest(path)["buckets"]["0"], list)
-    t.merge(_batch(spark, 3, range(4)))  # mark known now -> append
-    entry = _manifest(path)["buckets"]["0"]
-    assert isinstance(entry, list) and len(entry) == 2
-    assert len(t.read().collect()) == 12
-
-
 def test_monotone_col_must_be_a_key_col(spark, tmp_path):
     with pytest.raises(ValueError, match="must be one of the key"):
         UpsertTable(
@@ -222,82 +206,83 @@ def test_timestamp_monotone_marks_roundtrip_manifest(spark, tmp_path):
 
     t.merge(b(1, range(3)))
     t.merge(b(2, range(3)))  # strictly later -> append
-    entry = _manifest(path)["buckets"]["0"]
-    assert isinstance(entry, list) and len(entry) == 2
+    assert len(_manifest(path)["buckets"]["0"]) == 2
     t.merge(b(2, range(3)))  # replay -> fold
     assert len(t.read().collect()) == 6
 
 
-def test_classic_mode_merge_invalidates_stale_marks(spark, tmp_path):
-    """ADVICE r13 (medium): a classic-mode merge (monotone_col=None)
-    can insert rows whose monotone values exceed the stored high-water
-    marks.  If the marks survived, a later monotone-mode reopen could
-    pass the `lo > mark` fast-append test against a stale mark while
-    the batch's keys collide with the classic-inserted rows — the
-    append would skip the anti-join and duplicate keys.  The classic
-    merge must therefore drop the touched buckets' marks."""
+@pytest.mark.parametrize(
+    "written, reopened",
+    [(None, "w"), ("w", None), ("t", "k")],
+    ids=["classic-to-w", "w-to-classic", "t-to-k"],
+)
+def test_reopen_with_different_monotone_col_raises(
+    spark, tmp_path, written, reopened
+):
+    """A table's mode is fixed when it is created: the manifest records
+    `monotone_col`, and a reopen in another mode is refused before it
+    can read or write anything.  A classic merge could insert rows
+    above the stored marks, a monotone reopen of a classic table has
+    no marks, and marks on one column do not bound another — each
+    would let a fast append skip the anti-join on a real key
+    collision, so none of them is allowed."""
     path = str(tmp_path / "t")
-    t = UpsertTable(spark, path, ["w", "k"], n_buckets=1, monotone_col="w")
-    t.merge(_batch(spark, 1, range(4)))
-    t.merge(_batch(spark, 2, range(4)))  # marks now say max w == 2
-    # classic reopen inserts keys at w=10 — beyond the stored mark
-    classic = UpsertTable(spark, path, ["w", "k"], n_buckets=1)
-    classic.merge(_df(spark, [(10, k, -1) for k in range(4)]))
-    mm = _manifest(path).get("mono_max")
-    assert not (mm or {}).get("marks"), mm  # touched bucket's mark gone
-    # monotone reopen upserts the SAME (10, k) keys: mark is unknown,
-    # so this must take the rewrite path and keep keys unique
-    t2 = UpsertTable(spark, path, ["w", "k"], n_buckets=1, monotone_col="w")
-    t2.merge(_df(spark, [(10, k, 777) for k in range(4)]))
-    got = {(r.w, r.k): r.v for r in t2.read().collect()}
-    assert len(got) == 12  # 4+4+4 distinct keys, no duplicates
-    assert all(got[(10, k)] == 777 for k in range(4))
+    keys = ["w", "k", "t"]
+    rows = "w int, k int, t int, v int"
+    t = UpsertTable(spark, path, keys, n_buckets=1, monotone_col=written)
+    t.merge(spark.createDataFrame([(1, 200, 50, 1)], rows))
+    assert _manifest(path)["monotone_col"] == written
+    other = UpsertTable(spark, path, keys, n_buckets=1, monotone_col=reopened)
+    with pytest.raises(ValueError, match="monotone_col"):
+        other.merge(spark.createDataFrame([(1, 200, 50, 2)], rows))
+    with pytest.raises(ValueError, match="monotone_col"):
+        other.read()
+    with pytest.raises(ValueError, match="monotone_col"):
+        other.delete_keys(
+            spark.createDataFrame([(1, 200, 50)], "w int, k int, t int")
+        )
+    assert [r.v for r in t.read().collect()] == [1]
 
 
-def test_marks_tagged_with_column_identity(spark, tmp_path):
-    """Marks recorded for one monotone column must not be trusted when
-    the table is reopened with a DIFFERENT key column as monotone_col
-    — the `lo > mark` comparison would be between incomparable
-    domains.  Scenario: key (k, t), marks recorded on t; reopening on
-    k and upserting an existing key whose k exceeds the stored t-mark
-    must still rewrite (single row), not fast-append a duplicate."""
+def test_corrupt_manifest_raises_instead_of_resetting(spark, tmp_path):
+    """An unreadable _CURRENT is not "no table": treating it as one
+    would restart the table at version 1 and flip over the old
+    manifest, silently dropping every stored row."""
     path = str(tmp_path / "t")
-    rows = "k int, t int, v int"
-    t1 = UpsertTable(spark, path, ["k", "t"], n_buckets=1, monotone_col="t")
-    t1.merge(spark.createDataFrame([(200, 50, 1)], rows))
-    mm = _manifest(path)["mono_max"]
-    assert mm["col"] == "t" and mm["marks"], mm  # tagged layout
-    t2 = UpsertTable(spark, path, ["k", "t"], n_buckets=1, monotone_col="k")
-    # same key (200, 50): k-lo = 200 > stale t-mark 50, but the mark
-    # is for another column — must be ignored, rewrite, upsert
-    t2.merge(spark.createDataFrame([(200, 50, 2)], rows))
-    got = t2.read().collect()
-    assert len(got) == 1 and got[0].v == 2
-    # and the manifest now carries k-marks, relearned on the rewrite
-    mm2 = _manifest(path)["mono_max"]
-    assert mm2["col"] == "k" and mm2["marks"], mm2
+    t = UpsertTable(spark, path, ["w", "k"], n_buckets=2, monotone_col="w")
+    t.merge(_batch(spark, 1, range(40)))
+    with open(os.path.join(path, "_CURRENT"), "w") as f:
+        f.write("{not json")
+    with pytest.raises(ValueError, match="unreadable manifest"):
+        t.merge(_batch(spark, 2, [0]))
+    with pytest.raises(ValueError, match="unreadable manifest"):
+        t.read()
+    with pytest.raises(ValueError, match="unreadable manifest"):
+        t.delete_keys(_batch(spark, 1, [0]).select("w", "k"))
+    # nothing was overwritten: the version-1 snapshot is still whole
+    assert t.read(version=1).count() == 40
 
 
 def test_delete_emptying_bucket_drops_its_mark(spark, tmp_path):
     path = str(tmp_path / "t")
     t = UpsertTable(spark, path, ["w", "k"], n_buckets=1, monotone_col="w")
     t.merge(_batch(spark, 1, range(3)))
-    assert _manifest(path)["mono_max"]["marks"]
+    assert _manifest(path)["marks"]
     t.delete_keys(_batch(spark, 1, range(3)).select("w", "k"))
     m = _manifest(path)
     assert m["buckets"] == {}
-    assert not m.get("mono_max", {}).get("marks"), m.get("mono_max")
+    assert m["marks"] == {}, m["marks"]
 
 
 def test_registry_windowed_twins_engage_fast_path(spark):
     """Round-14 adoption pin: the driver-hashed append-mode windowed
     twins run their replay through the fast-append sink
     (monotone_col="window_start") and the fast path actually ENGAGES —
-    the final manifest carries a multi-leaf bucket stack and the
-    column-tagged marks, proving the second emission batch appended
-    instead of silently falling back to the rewrite path.  (Result
-    parity with the classic sink is covered by the oracle suites; this
-    pins the mechanism.)"""
+    the final manifest records the window_start mode and carries a
+    multi-leaf bucket stack and its marks, proving the second emission
+    batch appended instead of silently falling back to the rewrite
+    path.  (Result parity with the classic sink is covered by the
+    oracle suites; this pins the mechanism.)"""
     import json
 
     from realtime_data_pipeline_spark.plans import REGISTRY
@@ -308,11 +293,7 @@ def test_registry_windowed_twins_engage_fast_path(spark):
     assert df.count() > 0
     root = df.inputFiles()[0].split("/v=")[0].replace("file:", "")
     m = _manifest(root)
-    stacks = [
-        e
-        for e in m["buckets"].values()
-        if isinstance(e, list) and len(e) > 1
-    ]
+    stacks = [e for e in m["buckets"].values() if len(e) > 1]
     assert stacks, m["buckets"]  # >=1 bucket took a leaf APPEND
-    assert m["mono_max"]["col"] == "window_start"
-    assert m["mono_max"]["marks"]
+    assert m["monotone_col"] == "window_start"
+    assert m["marks"]

@@ -8,11 +8,13 @@ into a bucket whose version is far behind the manifest's.
 
 from __future__ import annotations
 
+import json
 import os
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from realtime_data_pipeline_spark.streaming import sinks
 from realtime_data_pipeline_spark.streaming.sinks import UpsertTable
 
 # a batch: 1-6 unique keys from a small key space so sequences collide
@@ -50,15 +52,32 @@ def test_merge_sequence_matches_dict_model(spark, tmp_path_factory, seq):
 
 # Fast-append mode model check: batches carry a window value that
 # sometimes advances (append path) and sometimes repeats or goes back
-# (rewrite path); the table must equal the same last-write-wins dict
-# regardless of which path each merge took.
-_mono_batch = st.tuples(
-    st.integers(0, 8),  # window delta bucket: 0 -> repeat, else advance
-    st.dictionaries(
-        st.integers(0, 6), st.integers(0, 10**6), min_size=1, max_size=4
+# (rewrite path), interleaved with deletes of keys from recent windows
+# (merge and delete_keys share one commit path).  After every
+# operation the table must equal the same last-write-wins dict
+# regardless of which path each merge took, and every leaf the
+# manifest names must be on disk.
+_mono_merge = st.tuples(
+    st.just("merge"),
+    st.tuples(
+        st.integers(0, 8),  # window delta: 0 -> repeat, else advance
+        st.dictionaries(
+            st.integers(0, 6), st.integers(0, 10**6), min_size=1, max_size=4
+        ),
     ),
 )
-_mono_sequences = st.lists(_mono_batch, min_size=1, max_size=6)
+_mono_delete = st.tuples(
+    st.just("delete"),
+    # (windows back from the current one, k)
+    st.lists(
+        st.tuples(st.integers(0, 2), st.integers(0, 6)),
+        min_size=1,
+        max_size=3,
+    ),
+)
+_mono_sequences = st.lists(
+    st.one_of(_mono_merge, _mono_delete), min_size=1, max_size=6
+)
 
 
 @settings(
@@ -68,29 +87,38 @@ _mono_sequences = st.lists(_mono_batch, min_size=1, max_size=6)
 )
 @given(seq=_mono_sequences)
 def test_monotone_merge_sequence_matches_dict_model(
-    spark, tmp_path_factory, seq
+    spark, tmp_path_factory, monkeypatch, seq
 ):
+    monkeypatch.setattr(sinks, "STACK_MAX", 3)
     path = str(tmp_path_factory.mktemp("upsert_mono_model"))
-    table = UpsertTable(
-        spark, path, ["w", "k"], n_buckets=4, monotone_col="w", stack_max=3
-    )
+    table = UpsertTable(spark, path, ["w", "k"], n_buckets=4, monotone_col="w")
     model: dict[tuple[int, int], int] = {}
     w = 0
-    for delta, batch in seq:
-        w += delta  # delta 0 = same window again (forces rewrite path)
-        for k, v in batch.items():
-            model[(w, k)] = v
-        table.merge(
-            spark.createDataFrame(
-                [(w, k, v) for k, v in batch.items()], "w int, k int, v int"
-            )
-        )
-    got = {(r.w, r.k): r.v for r in table.read().collect()}
-    assert got == model
-    # layout bound: every bucket's stack is capped by stack_max
-    import json as _json
+    for op, arg in seq:
+        if op == "merge":
+            delta, batch = arg
+            w += delta  # delta 0 = same window again (forces rewrite path)
+            for k, v in batch.items():
+                model[(w, k)] = v
+            rows = [(w, k, v) for k, v in batch.items()]
+            table.merge(spark.createDataFrame(rows, "w int, k int, v int"))
+        else:
+            keys = sorted({(w - back, k) for back, k in arg})
+            for key in keys:
+                model.pop(key, None)
+            table.delete_keys(spark.createDataFrame(keys, "w int, k int"))
+        df = table.read()
+        got = {} if df is None else {(r.w, r.k): r.v for r in df.collect()}
+        assert got == model, (op, arg)
 
-    with open(os.path.join(path, "_CURRENT")) as f:
-        m = _json.load(f)
-    for entry in m["buckets"].values():
-        assert len(entry if isinstance(entry, list) else [entry]) <= 3
+        try:
+            with open(os.path.join(path, "_CURRENT")) as f:
+                m = json.load(f)
+        except FileNotFoundError:
+            continue  # a delete before any merge creates no table
+        for b, stack in m["buckets"].items():
+            # layout bound: every bucket's stack is capped by STACK_MAX
+            assert 1 <= len(stack) <= 3, (b, stack)
+            for v in stack:
+                leaf = os.path.join(path, f"v={v}", f"__bucket={b}")
+                assert os.path.isdir(leaf), leaf
