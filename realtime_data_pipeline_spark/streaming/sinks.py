@@ -45,24 +45,29 @@ Mark soundness: a table's mode is fixed when it is created — the
 manifest records `monotone_col` beside `n_buckets`, and opening the
 table with a different one raises.  So every merge into a monotone
 table maintains the marks: a new bucket or an append records the
-batch maximum, a rewrite raises the mark to the batch maximum, a
-delete keeps it (an upper bound survives row removal) unless the
-bucket empties.  A bucket without a mark holds only null monotone
-values, so the first non-null rewrite sets a sound mark.
+batch maximum, and a rewrite raises the mark to the batch maximum.
+A bucket without a mark holds only null monotone values, so the first
+non-null rewrite sets a sound mark.  Marks and batch minima are engine
+integers (`unix_micros` of a TIMESTAMP, an integer column as is),
+computed and ordered in Spark: a timestamp collected to Python is a
+naive local-time value, whose order disagrees with Spark's around a
+DST fall-back.
 """
 
 from __future__ import annotations
 
-import datetime
 import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType, TimestampType
 
 _CURRENT = "_CURRENT"
 _BUCKET = "__bucket"
+# Hash buckets per table.  The manifest records the count a table was
+# created with, and opening it under another count raises.
 N_BUCKETS = 16
 # A fast-append bucket folds back into one leaf once it stacks this many.
 STACK_MAX = 8
@@ -76,14 +81,12 @@ class UpsertTable:
         spark: SparkSession,
         path: str,
         key_cols: list[str],
-        n_buckets: int = N_BUCKETS,
         retain_versions: int = 1,
         monotone_col: str | None = None,
     ):
         self.spark = spark
         self.path = path
         self.key_cols = list(key_cols)
-        self.n_buckets = n_buckets
         # Fast-append mode: `monotone_col` must be part of the key —
         # the no-key-collision proof is "every stored key's monotone
         # component is <= the mark < every batch key's", which only
@@ -107,7 +110,8 @@ class UpsertTable:
     def _manifest(self) -> dict | None:
         """{"version": int, "buckets": {bucket(str): [leaf version, ...]},
         "n_buckets": int, "monotone_col": str | None, "pending": [...],
-        "marks": {bucket(str): high-water mark} (monotone mode only)}.
+        "marks": {bucket(str): int high-water mark} (monotone mode
+        only)}.
         None only when the table does not exist yet; an unreadable
         manifest raises rather than passing for an empty table."""
         try:
@@ -119,12 +123,14 @@ class UpsertTable:
             raise ValueError(
                 f"table at {self.path} has an unreadable manifest: {e}"
             ) from e
-        for field in ("n_buckets", "monotone_col"):
-            if m.get(field) != getattr(self, field):
+        for field, value in (
+            ("n_buckets", N_BUCKETS),
+            ("monotone_col", self.monotone_col),
+        ):
+            if m.get(field) != value:
                 raise ValueError(
                     f"table at {self.path} was written with "
-                    f"{field}={m.get(field)!r}, opened with "
-                    f"{getattr(self, field)!r}"
+                    f"{field}={m.get(field)!r}, opened with {value!r}"
                 )
         return m
 
@@ -180,22 +186,22 @@ class UpsertTable:
             self._leaf(v, b) for b in buckets for v in m["buckets"][str(b)]
         ]
 
-    @staticmethod
-    def _mono_encode(v):
-        """JSON-encode a high-water mark: timestamps (window_start) as
-        tagged ISO strings, ints as themselves."""
-        if isinstance(v, datetime.datetime):
-            return {"t": "dt", "v": v.isoformat()}
-        return v
-
-    @staticmethod
-    def _mono_decode(v):
-        if isinstance(v, dict):
-            return datetime.datetime.fromisoformat(v["v"])
-        return v
+    def _mono_image(self, batch: DataFrame) -> F.Column:
+        """The monotone column as an engine integer whose order is
+        Spark's order of the column."""
+        dtype = batch.schema[self.monotone_col].dataType
+        col = F.col(self.monotone_col)
+        if isinstance(dtype, TimestampType):
+            return F.unix_micros(col)
+        if isinstance(dtype, IntegralType):
+            return col
+        raise ValueError(
+            f"monotone_col {self.monotone_col!r} is {dtype.simpleString()}; "
+            "it must be a TIMESTAMP or integer column"
+        )
 
     def _bucket_col(self) -> F.Column:
-        return F.pmod(F.hash(*self.key_cols), F.lit(self.n_buckets))
+        return F.pmod(F.hash(*self.key_cols), F.lit(N_BUCKETS))
 
     # -- reads ------------------------------------------------------------
     def read(self, version: int | None = None) -> DataFrame | None:
@@ -266,89 +272,17 @@ class UpsertTable:
         finally:
             batch.unpersist()
 
-    def delete_keys(self, keys: DataFrame) -> int:
-        """Targeted delete (the right-to-be-forgotten primitive): remove
-        every row whose key appears in `keys`, rewriting ONLY the hash
-        buckets those keys land in — same bucket-addressable shape as
-        merge, so a delete of k keys costs O(buckets(k)), not a table
-        rewrite.  Returns the number of rows removed.
-
-        Privacy note: superseded leaves stay readable for the
-        retain_versions grace window (and via time-travel snapshots)
-        until vacuum unlinks them — hard erasure completes after the
-        next `retain_versions` merges, the same contract as lakehouse
-        VACUUM-based deletion."""
-        keys = (
-            keys.select(self.key_cols)
-            .dropDuplicates(self.key_cols)
-            .withColumn(_BUCKET, self._bucket_col())
-            .persist()
-        )
-        try:
-            m = self._manifest()
-            if m is None:
-                return 0
-            touched = sorted(
-                b
-                for b in (
-                    r[0] for r in keys.select(_BUCKET).distinct().collect()
-                )
-                if str(b) in m["buckets"]
-            )
-            if not touched:
-                return 0
-            # single scan; bucket recomputed from keys (see merge)
-            current = self.spark.read.parquet(
-                *self._leaves(m, touched)
-            ).withColumn(_BUCKET, self._bucket_col())
-            current = current.persist()
-            try:
-                n_deleted = current.join(
-                    keys.select(self.key_cols), self.key_cols, "left_semi"
-                ).count()
-                if n_deleted == 0:
-                    return 0
-                kept = current.join(
-                    keys.select(self.key_cols), self.key_cols, "left_anti"
-                )
-                v_new = m["version"] + 1
-                kept.repartition(len(touched), F.col(_BUCKET)).write.mode(
-                    "overwrite"
-                ).partitionBy(_BUCKET).parquet(
-                    os.path.join(self.path, f"v={v_new}")
-                )
-                buckets = dict(m["buckets"])
-                for b in touched:
-                    # the rewrite folds any fast-append stack; a
-                    # fully-emptied bucket writes no leaf, so it leaves
-                    # the manifest (and its mark goes with it) instead
-                    # of pointing at nothing.  Surviving marks stay
-                    # upper bounds: deletes only remove rows.
-                    if os.path.isdir(self._leaf(v_new, b)):
-                        buckets[str(b)] = [v_new]
-                    else:
-                        del buckets[str(b)]
-                        m.get("marks", {}).pop(str(b), None)
-                self._commit(m, buckets, touched)
-                return n_deleted
-            finally:
-                current.unpersist()
-        finally:
-            keys.unpersist()
-
     def _merge_persisted(self, batch: DataFrame) -> None:
-        # ≤ n_buckets rows — O(1) driver-side, not a collect of data.
+        # ≤ N_BUCKETS rows — O(1) driver-side, not a collect of data.
         # With a monotone column declared, the same tiny agg also
         # yields the per-bucket min/max needed for the fast-append
         # eligibility test.
         if self.monotone_col:
+            mono = self._mono_image(batch)
             stats = {
                 r["b"]: (r["lo"], r["hi"])
                 for r in batch.groupBy(F.col(_BUCKET).alias("b"))
-                .agg(
-                    F.min(self.monotone_col).alias("lo"),
-                    F.max(self.monotone_col).alias("hi"),
-                )
+                .agg(F.min(mono).alias("lo"), F.max(mono).alias("hi"))
                 .collect()
             }
         else:
@@ -362,7 +296,7 @@ class UpsertTable:
         m = self._manifest() or {
             "version": 0,
             "buckets": {},
-            "n_buckets": self.n_buckets,
+            "n_buckets": N_BUCKETS,
             "monotone_col": self.monotone_col,
         }
         marks = m.setdefault("marks", {}) if self.monotone_col else {}
@@ -378,7 +312,7 @@ class UpsertTable:
             if entry is None or (
                 lo is not None
                 and str(b) in marks
-                and lo > self._mono_decode(marks[str(b)])
+                and lo > marks[str(b)]
                 and len(entry) < STACK_MAX
             ):
                 fast.append(b)
@@ -431,10 +365,7 @@ class UpsertTable:
             buckets[str(b)] = stack + [v_new]
             hi = stats[b][1]
             if self.monotone_col and hi is not None:
-                mark = marks.get(str(b))
-                if mark is not None:
-                    hi = max(self._mono_decode(mark), hi)
-                marks[str(b)] = self._mono_encode(hi)
+                marks[str(b)] = max(marks.get(str(b), hi), hi)
         self._commit(m, buckets, slow)
 
     def _vacuum(self, ripe: list) -> None:

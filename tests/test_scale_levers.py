@@ -241,15 +241,17 @@ def test_minhash_bucket_cap_bounds_boilerplate_blowup(spark):
     assert pairs[(1000, 1001)] >= 0.5
 
 
-def test_upsert_untouched_buckets_not_rewritten(spark, tmp_path):
+def test_upsert_untouched_buckets_not_rewritten(spark, tmp_path, monkeypatch):
     """streaming/sinks.UpsertTable: a merge must rewrite only the hash
     buckets containing the batch's keys.  Round 1 rewrote the whole
     table per micro-batch — quadratic-over-time I/O at sink volume."""
     import os
 
+    from realtime_data_pipeline_spark.streaming import sinks
     from realtime_data_pipeline_spark.streaming.sinks import UpsertTable
 
-    t = UpsertTable(spark, str(tmp_path / "t"), ["k"], n_buckets=8)
+    monkeypatch.setattr(sinks, "N_BUCKETS", 8)
+    t = UpsertTable(spark, str(tmp_path / "t"), ["k"])
     base = spark.createDataFrame(
         [(i, f"val_{i}") for i in range(200)], "k long, payload string"
     )

@@ -10,6 +10,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
+from realtime_data_pipeline_spark.streaming import sinks
 from realtime_data_pipeline_spark.streaming.monitor import attach_monitor
 from realtime_data_pipeline_spark.streaming.pipeline import (
     EVENT_SCHEMA,
@@ -284,7 +285,9 @@ def test_serving_queries_over_streamed_sink_table(spark, parity_setup):
         assert got == want and len(got) > 0, fn
 
 
-def test_upsert_soak_bounded_versions_and_footprint(spark, tmp_path):
+def test_upsert_soak_bounded_versions_and_footprint(
+    spark, tmp_path, monkeypatch
+):
     """VERDICT r2 item 8: 20-micro-batch soak on the keyed-upsert sink.
 
     Under sustained churn the on-disk state must stay BOUNDED — vacuum
@@ -295,8 +298,9 @@ def test_upsert_soak_bounded_versions_and_footprint(spark, tmp_path):
     import os
 
     n_buckets = 4
+    monkeypatch.setattr(sinks, "N_BUCKETS", n_buckets)
     path = str(tmp_path / "soak")
-    table = UpsertTable(spark, path, ["k"], n_buckets=n_buckets)
+    table = UpsertTable(spark, path, ["k"])
 
     expect: dict[int, int] = {}
     n_batches = 20

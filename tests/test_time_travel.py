@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import pytest
 
+from realtime_data_pipeline_spark.streaming import sinks
 from realtime_data_pipeline_spark.streaming.sinks import UpsertTable
 
 
@@ -20,10 +21,9 @@ def _snap(table, version=None):
     )
 
 
-def test_time_travel_reads_each_retained_version(spark, tmp_path):
-    t = UpsertTable(
-        spark, str(tmp_path / "t"), ["k"], n_buckets=4, retain_versions=3
-    )
+def test_time_travel_reads_each_retained_version(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(sinks, "N_BUCKETS", 4)
+    t = UpsertTable(spark, str(tmp_path / "t"), ["k"], retain_versions=3)
     _merge(t, spark, [("a", 1), ("b", 1)])            # v1
     _merge(t, spark, [("b", 2), ("c", 2)])            # v2
     _merge(t, spark, [("a", 3)])                      # v3
@@ -34,10 +34,9 @@ def test_time_travel_reads_each_retained_version(spark, tmp_path):
     assert _snap(t) == _snap(t, 3)  # current == newest snapshot
 
 
-def test_vacuumed_version_raises_not_wrong_data(spark, tmp_path):
-    t = UpsertTable(
-        spark, str(tmp_path / "t"), ["k"], n_buckets=2, retain_versions=1
-    )
+def test_vacuumed_version_raises_not_wrong_data(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(sinks, "N_BUCKETS", 2)
+    t = UpsertTable(spark, str(tmp_path / "t"), ["k"], retain_versions=1)
     # same key every merge -> each merge supersedes the same bucket,
     # so v1's leaf is vacuumed two merges later under retain=1
     _merge(t, spark, [("a", 1)])
@@ -48,74 +47,9 @@ def test_vacuumed_version_raises_not_wrong_data(spark, tmp_path):
     assert _snap(t) == [("a", 3)]
 
 
-def test_unknown_version_lists_available(spark, tmp_path):
-    t = UpsertTable(spark, str(tmp_path / "t"), ["k"], n_buckets=2)
+def test_unknown_version_lists_available(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(sinks, "N_BUCKETS", 2)
+    t = UpsertTable(spark, str(tmp_path / "t"), ["k"])
     _merge(t, spark, [("a", 1)])
     with pytest.raises(ValueError, match="available: \\[1\\]"):
         t.read(version=99)
-
-
-def test_delete_keys_rewrites_only_touched_buckets(spark, tmp_path):
-    import glob
-    import os
-
-    t = UpsertTable(spark, str(tmp_path / "t"), ["k"], n_buckets=4)
-    _merge(t, spark, [(f"k{i}", i) for i in range(12)])
-    # bucket of each key
-    from pyspark.sql import functions as F
-
-    bucketed = {
-        r["k"]: r["b"]
-        for r in spark.createDataFrame(
-            [(f"k{i}",) for i in range(12)], "k string"
-        )
-        .withColumn("b", F.pmod(F.hash("k"), F.lit(4)))
-        .collect()
-    }
-    victims = [k for k, b in bucketed.items() if b == bucketed["k0"]][:2]
-    untouched_bucket = next(
-        b for b in set(bucketed.values()) if b != bucketed["k0"]
-    )
-    before = {
-        p: os.path.getmtime(p)
-        for p in glob.glob(
-            str(tmp_path / "t" / "v=*" / f"__bucket={untouched_bucket}" / "*")
-        )
-    }
-    assert before, "glob found no files — bucket layout changed?"
-    n = t.delete_keys(
-        spark.createDataFrame([(k,) for k in victims], "k string")
-    )
-    assert n == len(victims)
-    remaining = {r["k"] for r in t.read().collect()}
-    assert remaining == {f"k{i}" for i in range(12)} - set(victims)
-    after = {
-        p: os.path.getmtime(p)
-        for p in glob.glob(
-            str(tmp_path / "t" / "v=*" / f"__bucket={untouched_bucket}" / "*")
-        )
-    }
-    assert before == after  # untouched bucket not rewritten
-
-
-def test_delete_keys_empties_whole_bucket(spark, tmp_path):
-    t = UpsertTable(spark, str(tmp_path / "t"), ["k"], n_buckets=2)
-    _merge(t, spark, [("a", 1), ("b", 2), ("c", 3), ("d", 4)])
-    all_keys = [r["k"] for r in t.read().select("k").collect()]
-    n = t.delete_keys(
-        spark.createDataFrame([(k,) for k in all_keys], "k string")
-    )
-    assert n == 4
-    got = t.read()
-    assert got is None or got.count() == 0
-
-
-def test_delete_keys_missing_keys_is_noop(spark, tmp_path):
-    t = UpsertTable(spark, str(tmp_path / "t"), ["k"], n_buckets=2)
-    _merge(t, spark, [("a", 1)])
-    v_before = t._manifest()["version"]
-    assert t.delete_keys(
-        spark.createDataFrame([("zzz",)], "k string")
-    ) == 0
-    assert t._manifest()["version"] == v_before  # no version churn
-    assert _snap(t) == [("a", 1)]

@@ -7,8 +7,9 @@ into leaf APPENDS guarded by per-bucket high-water marks; these tests
 pin (a) result equivalence with the classic path on every sequence,
 (b) that appends really do not rewrite or supersede old leaves,
 (c) the STACK_MAX fold, (d) replay/overlap falling back to the
-rewrite path, (e) time travel / delete_keys over stacked leaves, and
-(f) that a table's mode is fixed when it is created.
+rewrite path, (e) time travel over stacked leaves, (f) that a table's
+mode and bucket count are fixed when it is created, and (g) that
+marks order timestamps the way Spark does.
 """
 
 from __future__ import annotations
@@ -51,25 +52,26 @@ def _leaf_mtimes(path):
     return out
 
 
-def test_fast_append_matches_classic_results(spark, tmp_path):
+def test_fast_append_matches_classic_results(spark, tmp_path, monkeypatch):
     """Any monotone batch sequence: fast-append table == classic
     table, row for row."""
+    monkeypatch.setattr(sinks, "N_BUCKETS", 4)
     fast = UpsertTable(
-        spark, str(tmp_path / "fast"), ["w", "k"], n_buckets=4,
-        monotone_col="w",
+        spark, str(tmp_path / "fast"), ["w", "k"], monotone_col="w"
     )
-    classic = UpsertTable(
-        spark, str(tmp_path / "classic"), ["w", "k"], n_buckets=4
-    )
+    classic = UpsertTable(spark, str(tmp_path / "classic"), ["w", "k"])
     for w, keys in [(1, range(6)), (2, range(4)), (3, range(8)), (5, [0])]:
         fast.merge(_batch(spark, w, keys))
         classic.merge(_batch(spark, w, keys))
     assert _snapshot(fast) == _snapshot(classic)
 
 
-def test_fast_append_stacks_leaves_without_superseding(spark, tmp_path):
+def test_fast_append_stacks_leaves_without_superseding(
+    spark, tmp_path, monkeypatch
+):
+    monkeypatch.setattr(sinks, "N_BUCKETS", 2)
     path = str(tmp_path / "t")
-    t = UpsertTable(spark, path, ["w", "k"], n_buckets=2, monotone_col="w")
+    t = UpsertTable(spark, path, ["w", "k"], monotone_col="w")
     t.merge(_batch(spark, 1, range(8)))
     m1 = _manifest(path)
     files_before = _leaf_mtimes(path)
@@ -87,9 +89,12 @@ def test_fast_append_stacks_leaves_without_superseding(spark, tmp_path):
     assert len(t.read().collect()) == 16
 
 
-def test_overlap_falls_back_to_rewrite_and_upserts(spark, tmp_path):
+def test_overlap_falls_back_to_rewrite_and_upserts(
+    spark, tmp_path, monkeypatch
+):
+    monkeypatch.setattr(sinks, "N_BUCKETS", 2)
     path = str(tmp_path / "t")
-    t = UpsertTable(spark, path, ["w", "k"], n_buckets=2, monotone_col="w")
+    t = UpsertTable(spark, path, ["w", "k"], monotone_col="w")
     t.merge(_batch(spark, 1, range(4)))
     t.merge(_batch(spark, 2, range(4)))
     # same w=2 again with different values: keys collide -> rewrite
@@ -102,9 +107,10 @@ def test_overlap_falls_back_to_rewrite_and_upserts(spark, tmp_path):
     assert len(got) == 8  # no duplicate keys after the fold
 
 
-def test_replay_of_appended_batch_is_idempotent(spark, tmp_path):
+def test_replay_of_appended_batch_is_idempotent(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(sinks, "N_BUCKETS", 2)
     path = str(tmp_path / "t")
-    t = UpsertTable(spark, path, ["w", "k"], n_buckets=2, monotone_col="w")
+    t = UpsertTable(spark, path, ["w", "k"], monotone_col="w")
     t.merge(_batch(spark, 1, range(4)))
     t.merge(_batch(spark, 2, range(4)))
     before = _snapshot(t)
@@ -113,9 +119,10 @@ def test_replay_of_appended_batch_is_idempotent(spark, tmp_path):
 
 
 def test_stack_max_forces_fold(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(sinks, "N_BUCKETS", 1)
     monkeypatch.setattr(sinks, "STACK_MAX", 3)
     path = str(tmp_path / "t")
-    t = UpsertTable(spark, path, ["w", "k"], n_buckets=1, monotone_col="w")
+    t = UpsertTable(spark, path, ["w", "k"], monotone_col="w")
     for w in range(1, 5):  # 4 merges, STACK_MAX=3
         t.merge(_batch(spark, w, range(3)))
     m = _manifest(path)
@@ -125,11 +132,11 @@ def test_stack_max_forces_fold(spark, tmp_path, monkeypatch):
     assert len(t.read().collect()) == 12
 
 
-def test_time_travel_across_appended_versions(spark, tmp_path):
+def test_time_travel_across_appended_versions(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(sinks, "N_BUCKETS", 2)
     path = str(tmp_path / "t")
     t = UpsertTable(
-        spark, path, ["w", "k"], n_buckets=2, monotone_col="w",
-        retain_versions=4,
+        spark, path, ["w", "k"], monotone_col="w", retain_versions=4
     )
     seen = []
     for w in (1, 2, 3):
@@ -142,31 +149,18 @@ def test_time_travel_across_appended_versions(spark, tmp_path):
         assert got == seen[i], v
 
 
-def test_delete_keys_on_stacked_bucket(spark, tmp_path):
-    path = str(tmp_path / "t")
-    t = UpsertTable(spark, path, ["w", "k"], n_buckets=1, monotone_col="w")
-    t.merge(_batch(spark, 1, range(4)))
-    t.merge(_batch(spark, 2, range(4)))
-    n = t.delete_keys(_df(spark, [(1, 0, 0), (2, 3, 0)]).select("w", "k"))
-    assert n == 2
-    got = {(r.w, r.k) for r in t.read().collect()}
-    assert (1, 0) not in got and (2, 3) not in got and len(got) == 6
-    # the rewrite folded the stack
-    assert len(_manifest(path)["buckets"]["0"]) == 1
-
-
-def test_null_monotone_values_match_classic_semantics(spark, tmp_path):
+def test_null_monotone_values_match_classic_semantics(
+    spark, tmp_path, monkeypatch
+):
     """An all-null monotone batch takes the rewrite path (its min is
     null, so fast eligibility cannot be proven); whatever SQL
     null-equality does to such keys, the fast table must do exactly
     what the classic table does."""
+    monkeypatch.setattr(sinks, "N_BUCKETS", 1)
     fast = UpsertTable(
-        spark, str(tmp_path / "fast"), ["w", "k"], n_buckets=1,
-        monotone_col="w",
+        spark, str(tmp_path / "fast"), ["w", "k"], monotone_col="w"
     )
-    classic = UpsertTable(
-        spark, str(tmp_path / "classic"), ["w", "k"], n_buckets=1
-    )
+    classic = UpsertTable(spark, str(tmp_path / "classic"), ["w", "k"])
     seq = [
         _batch(spark, 1, range(3)),
         spark.createDataFrame(
@@ -188,15 +182,16 @@ def test_monotone_col_must_be_a_key_col(spark, tmp_path):
         )
 
 
-def test_timestamp_monotone_marks_roundtrip_manifest(spark, tmp_path):
+def test_timestamp_monotone_marks_roundtrip_manifest(
+    spark, tmp_path, monkeypatch
+):
     """window_start is a timestamp — the mark must survive the JSON
     manifest and keep ordering (the production shape)."""
     import datetime as dt
 
+    monkeypatch.setattr(sinks, "N_BUCKETS", 1)
     path = str(tmp_path / "t")
-    t = UpsertTable(
-        spark, path, ["ws", "k"], n_buckets=1, monotone_col="ws"
-    )
+    t = UpsertTable(spark, path, ["ws", "k"], monotone_col="ws")
 
     def b(day, keys):
         return spark.createDataFrame(
@@ -217,7 +212,7 @@ def test_timestamp_monotone_marks_roundtrip_manifest(spark, tmp_path):
     ids=["classic-to-w", "w-to-classic", "t-to-k"],
 )
 def test_reopen_with_different_monotone_col_raises(
-    spark, tmp_path, written, reopened
+    spark, tmp_path, monkeypatch, written, reopened
 ):
     """A table's mode is fixed when it is created: the manifest records
     `monotone_col`, and a reopen in another mode is refused before it
@@ -226,30 +221,96 @@ def test_reopen_with_different_monotone_col_raises(
     no marks, and marks on one column do not bound another — each
     would let a fast append skip the anti-join on a real key
     collision, so none of them is allowed."""
+    monkeypatch.setattr(sinks, "N_BUCKETS", 1)
     path = str(tmp_path / "t")
     keys = ["w", "k", "t"]
     rows = "w int, k int, t int, v int"
-    t = UpsertTable(spark, path, keys, n_buckets=1, monotone_col=written)
+    t = UpsertTable(spark, path, keys, monotone_col=written)
     t.merge(spark.createDataFrame([(1, 200, 50, 1)], rows))
     assert _manifest(path)["monotone_col"] == written
-    other = UpsertTable(spark, path, keys, n_buckets=1, monotone_col=reopened)
+    other = UpsertTable(spark, path, keys, monotone_col=reopened)
     with pytest.raises(ValueError, match="monotone_col"):
         other.merge(spark.createDataFrame([(1, 200, 50, 2)], rows))
     with pytest.raises(ValueError, match="monotone_col"):
         other.read()
-    with pytest.raises(ValueError, match="monotone_col"):
-        other.delete_keys(
-            spark.createDataFrame([(1, 200, 50)], "w int, k int, t int")
-        )
     assert [r.v for r in t.read().collect()] == [1]
 
 
-def test_corrupt_manifest_raises_instead_of_resetting(spark, tmp_path):
+def test_reopen_with_different_bucket_count_raises(
+    spark, tmp_path, monkeypatch
+):
+    """Bucket assignment is `hash(key) mod N_BUCKETS`, so a table
+    written under one bucket count cannot be merged into or read under
+    another: a key would land in a bucket that does not hold its
+    stored row."""
+    monkeypatch.setattr(sinks, "N_BUCKETS", 2)
+    path = str(tmp_path / "t")
+    t = UpsertTable(spark, path, ["w", "k"], monotone_col="w")
+    t.merge(_batch(spark, 1, range(4)))
+    monkeypatch.setattr(sinks, "N_BUCKETS", 4)
+    with pytest.raises(ValueError, match="n_buckets"):
+        t.merge(_batch(spark, 1, range(4)))
+    with pytest.raises(ValueError, match="n_buckets"):
+        t.read()
+    monkeypatch.setattr(sinks, "N_BUCKETS", 2)
+    assert len(t.read().collect()) == 4
+
+
+def test_timestamp_marks_follow_spark_order_across_dst(
+    spark, tmp_path, monkeypatch
+):
+    """Marks compare timestamps in Spark's instant order.  A TIMESTAMP
+    collected to Python is a naive local-time datetime; around a DST
+    fall-back, 05:55Z reads as 01:55 and the later 06:05Z as 01:05, so
+    comparing those would treat a replayed 05:55Z key as newer than a
+    mark of 06:05Z, fast-append it and store the key twice."""
+    import time
+
+    monkeypatch.setattr(sinks, "N_BUCKETS", 1)
+    path = str(tmp_path / "t")
+    t = UpsertTable(spark, path, ["ws", "k"], monotone_col="ws")
+
+    def b(rows):
+        # (epoch seconds, k, v); the instant does not depend on any TZ
+        return spark.createDataFrame(rows, "s long, k int, v int").select(
+            F.timestamp_seconds("s").alias("ws"), "k", "v"
+        )
+
+    t0 = 1730613300  # 2024-11-03 05:55Z, 01:55 EDT
+    t1 = t0 + 600  # 06:05Z, 01:05 EST
+    try:
+        with monkeypatch.context() as mp:
+            mp.setenv("TZ", "America/New_York")
+            time.tzset()
+            t.merge(b([(t0, 1, 1), (t1, 2, 1)]))
+            t.merge(b([(t0, 1, 2)]))  # replay of a stored key
+            got = sorted(
+                t.read()
+                .select(F.unix_seconds("ws").alias("s"), "k", "v")
+                .collect()
+            )
+    finally:
+        time.tzset()
+    assert got == [(t0, 1, 2), (t1, 2, 1)]
+
+
+def test_monotone_col_of_another_type_raises(spark, tmp_path):
+    t = UpsertTable(
+        spark, str(tmp_path / "t"), ["s", "k"], monotone_col="s"
+    )
+    with pytest.raises(ValueError, match="TIMESTAMP or integer"):
+        t.merge(spark.createDataFrame([("a", 1)], "s string, k int"))
+
+
+def test_corrupt_manifest_raises_instead_of_resetting(
+    spark, tmp_path, monkeypatch
+):
     """An unreadable _CURRENT is not "no table": treating it as one
     would restart the table at version 1 and flip over the old
     manifest, silently dropping every stored row."""
+    monkeypatch.setattr(sinks, "N_BUCKETS", 2)
     path = str(tmp_path / "t")
-    t = UpsertTable(spark, path, ["w", "k"], n_buckets=2, monotone_col="w")
+    t = UpsertTable(spark, path, ["w", "k"], monotone_col="w")
     t.merge(_batch(spark, 1, range(40)))
     with open(os.path.join(path, "_CURRENT"), "w") as f:
         f.write("{not json")
@@ -257,21 +318,8 @@ def test_corrupt_manifest_raises_instead_of_resetting(spark, tmp_path):
         t.merge(_batch(spark, 2, [0]))
     with pytest.raises(ValueError, match="unreadable manifest"):
         t.read()
-    with pytest.raises(ValueError, match="unreadable manifest"):
-        t.delete_keys(_batch(spark, 1, [0]).select("w", "k"))
     # nothing was overwritten: the version-1 snapshot is still whole
     assert t.read(version=1).count() == 40
-
-
-def test_delete_emptying_bucket_drops_its_mark(spark, tmp_path):
-    path = str(tmp_path / "t")
-    t = UpsertTable(spark, path, ["w", "k"], n_buckets=1, monotone_col="w")
-    t.merge(_batch(spark, 1, range(3)))
-    assert _manifest(path)["marks"]
-    t.delete_keys(_batch(spark, 1, range(3)).select("w", "k"))
-    m = _manifest(path)
-    assert m["buckets"] == {}
-    assert m["marks"] == {}, m["marks"]
 
 
 def test_registry_windowed_twins_engage_fast_path(spark):

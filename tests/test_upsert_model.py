@@ -33,9 +33,12 @@ _sequences = st.lists(_batch, min_size=1, max_size=6)
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(seq=_sequences)
-def test_merge_sequence_matches_dict_model(spark, tmp_path_factory, seq):
+def test_merge_sequence_matches_dict_model(
+    spark, tmp_path_factory, monkeypatch, seq
+):
+    monkeypatch.setattr(sinks, "N_BUCKETS", 4)
     path = str(tmp_path_factory.mktemp("upsert_model"))
-    table = UpsertTable(spark, path, ["k"], n_buckets=4)
+    table = UpsertTable(spark, path, ["k"])
     model: dict[int, int] = {}
     for batch in seq:
         model.update(batch)
@@ -51,32 +54,20 @@ def test_merge_sequence_matches_dict_model(spark, tmp_path_factory, seq):
 
 
 # Fast-append mode model check: batches carry a window value that
-# sometimes advances (append path) and sometimes repeats or goes back
-# (rewrite path), interleaved with deletes of keys from recent windows
-# (merge and delete_keys share one commit path).  After every
-# operation the table must equal the same last-write-wins dict
-# regardless of which path each merge took, and every leaf the
-# manifest names must be on disk.
-_mono_merge = st.tuples(
-    st.just("merge"),
-    st.tuples(
-        st.integers(0, 8),  # window delta: 0 -> repeat, else advance
-        st.dictionaries(
-            st.integers(0, 6), st.integers(0, 10**6), min_size=1, max_size=4
-        ),
-    ),
+# sometimes advances (append path), sometimes repeats (rewrite path),
+# and sometimes lands in an earlier window, out of order, overlapping
+# or rewriting stored keys.  After every merge the table must equal
+# the same last-write-wins dict regardless of which path each merge
+# took, and every leaf the manifest names must be on disk.
+_mono_rows = st.dictionaries(
+    st.integers(0, 6), st.integers(0, 10**6), min_size=1, max_size=4
 )
-_mono_delete = st.tuples(
-    st.just("delete"),
-    # (windows back from the current one, k)
-    st.lists(
-        st.tuples(st.integers(0, 2), st.integers(0, 6)),
-        min_size=1,
-        max_size=3,
-    ),
-)
+# window delta: 0 -> repeat the current window, else advance it
+_mono_merge = st.tuples(st.just("merge"), st.integers(0, 8), _mono_rows)
+# windows back from the current one
+_mono_late = st.tuples(st.just("late"), st.integers(1, 3), _mono_rows)
 _mono_sequences = st.lists(
-    st.one_of(_mono_merge, _mono_delete), min_size=1, max_size=6
+    st.one_of(_mono_merge, _mono_late), min_size=1, max_size=6
 )
 
 
@@ -89,33 +80,25 @@ _mono_sequences = st.lists(
 def test_monotone_merge_sequence_matches_dict_model(
     spark, tmp_path_factory, monkeypatch, seq
 ):
+    monkeypatch.setattr(sinks, "N_BUCKETS", 4)
     monkeypatch.setattr(sinks, "STACK_MAX", 3)
     path = str(tmp_path_factory.mktemp("upsert_mono_model"))
-    table = UpsertTable(spark, path, ["w", "k"], n_buckets=4, monotone_col="w")
+    table = UpsertTable(spark, path, ["w", "k"], monotone_col="w")
     model: dict[tuple[int, int], int] = {}
     w = 0
-    for op, arg in seq:
+    for op, n, batch in seq:
         if op == "merge":
-            delta, batch = arg
-            w += delta  # delta 0 = same window again (forces rewrite path)
-            for k, v in batch.items():
-                model[(w, k)] = v
-            rows = [(w, k, v) for k, v in batch.items()]
-            table.merge(spark.createDataFrame(rows, "w int, k int, v int"))
-        else:
-            keys = sorted({(w - back, k) for back, k in arg})
-            for key in keys:
-                model.pop(key, None)
-            table.delete_keys(spark.createDataFrame(keys, "w int, k int"))
-        df = table.read()
-        got = {} if df is None else {(r.w, r.k): r.v for r in df.collect()}
-        assert got == model, (op, arg)
+            w += n
+        win = w if op == "merge" else w - n
+        for k, v in batch.items():
+            model[(win, k)] = v
+        rows = [(win, k, v) for k, v in batch.items()]
+        table.merge(spark.createDataFrame(rows, "w int, k int, v int"))
+        got = {(r.w, r.k): r.v for r in table.read().collect()}
+        assert got == model, (op, n, batch)
 
-        try:
-            with open(os.path.join(path, "_CURRENT")) as f:
-                m = json.load(f)
-        except FileNotFoundError:
-            continue  # a delete before any merge creates no table
+        with open(os.path.join(path, "_CURRENT")) as f:
+            m = json.load(f)
         for b, stack in m["buckets"].items():
             # layout bound: every bucket's stack is capped by STACK_MAX
             assert 1 <= len(stack) <= 3, (b, stack)
