@@ -15,15 +15,16 @@ over *aggregate rows* (key × window), not per-distinct-key — exactly
 what the dashboard computes.
 
 Scale notes: top-N compiles to TakeOrderedAndProject (true distributed
-top-k: per-partition heap then driver merge of N rows, no global sort);
-the latest-window filter is a 1-row aggregate cross-joined back, which
-Spark broadcasts.  All queries take deterministic tie-breakers so
-results are stable across partitionings.
+top-k: per-partition heap then driver merge of N rows, no global sort).
+T2 is one such ordered scan with window_end leading the order, so the
+latest window is found among its N rows, with no aggregate joined
+back.  All queries take deterministic tie-breakers so results are
+stable across partitionings.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -51,27 +52,24 @@ def top_rows(agg: DataFrame, key_name: str, n: int = 20) -> DataFrame:
     ).limit(n)
 
 
-def latest_window(agg: DataFrame) -> DataFrame:
-    """A6: the 1-row max(window_end) — broadcast back by callers."""
-    return agg.agg(F.max("window_end").alias("latest_window_end"))
-
-
 def latest_window_top(agg: DataFrame, key_name: str, n: int = 20) -> DataFrame:
-    """T2: restrict to the latest window (max window_end) then top-N desc.
+    """A6+T2: top-N rows of the latest window (max window_end) by
+    total_interactions desc, key asc.
 
-    The inner 1-row aggregate joins back via an equality filter — Spark
-    plans it as a broadcast of the single-row side.
+    One ordered scan: the first n rows by (window_end desc, total desc,
+    key asc) open with the latest window's top n — all of that window
+    when it has fewer rows, then rows of earlier windows, which the
+    filter on the largest window_end among the n drops.
     """
-    latest = latest_window(agg)
+    top = agg.orderBy(
+        F.desc("window_end"), F.desc("total_interactions"), F.asc(key_name)
+    ).limit(n)
+    latest = F.max("window_end").over(Window.partitionBy())
     return (
-        agg.join(
-            F.broadcast(latest),
-            agg["window_end"] == latest["latest_window_end"],
-            "inner",
-        )
-        .drop("latest_window_end")
+        top.withColumn("_latest", latest)
+        .where(F.col("window_end") == F.col("_latest"))
+        .drop("_latest")
         .orderBy(F.desc("total_interactions"), F.asc(key_name))
-        .limit(n)
     )
 
 

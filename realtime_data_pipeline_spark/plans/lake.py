@@ -1965,8 +1965,9 @@ _TT_CUT = "2024-01-16 00:00:00"
     "snapshot read(version=N) and the current read come back — a "
     "correct versioned sink returns exactly the first-half rollup for "
     "the old snapshot and the full rollup for the current one, which "
-    "is what the oracle computes from the raw log.  retain_versions=2 "
-    "keeps the superseded snapshot inside the vacuum window "
+    "is what the oracle computes from the raw log.  The read of "
+    "version N right after the merge that supersedes it falls inside "
+    "the sink's RETAIN_S retention window "
     "(tests/test_time_travel.py pins expiry beyond it)",
 )
 def q_upsert_time_travel_stats(spark, sf_dir):
@@ -1979,12 +1980,7 @@ def q_upsert_time_travel_stats(spark, sf_dir):
     v1 = half.groupBy("user_id").agg(F.count("*").alias("n_events"))
     v2 = ev.groupBy("user_id").agg(F.count("*").alias("n_events"))
 
-    tbl = UpsertTable(
-        spark,
-        scratch_dir(prefix="rdp_tt_"),
-        key_cols=["user_id"],
-        retain_versions=2,
-    )
+    tbl = UpsertTable(spark, scratch_dir(prefix="rdp_tt_"), key_cols=["user_id"])
     tbl.merge(v1)
     m1 = tbl._manifest()  # None iff the v1 merge had zero rows (no-op)
     tbl.merge(v2)

@@ -52,6 +52,14 @@ integers (`unix_micros` of a TIMESTAMP, an integer column as is),
 computed and ordered in Spark: a timestamp collected to Python is a
 naive local-time value, whose order disagrees with Spark's around a
 DST fall-back.
+
+Retention is counted in seconds, like Delta's
+deletedFileRetentionDuration: a leaf a merge supersedes stays on disk
+until the first commit at least `RETAIN_S` seconds after that merge.
+A snapshot a reader holds — the frame `read()` returns — therefore
+stays readable for `RETAIN_S` seconds after the merge that supersedes
+it, however many merges run meanwhile; `read(version=N)` works while
+N's leaves are still on disk.
 """
 
 from __future__ import annotations
@@ -59,6 +67,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -71,6 +80,9 @@ _BUCKET = "__bucket"
 N_BUCKETS = 16
 # A fast-append bucket folds back into one leaf once it stacks this many.
 STACK_MAX = 8
+# Seconds a superseded leaf outlives the merge that superseded it: more
+# than ten times the slowest dashboard refresh measured (about 5 s).
+RETAIN_S = 60.0
 
 
 class UpsertTable:
@@ -81,7 +93,6 @@ class UpsertTable:
         spark: SparkSession,
         path: str,
         key_cols: list[str],
-        retain_versions: int = 1,
         monotone_col: str | None = None,
     ):
         self.spark = spark
@@ -97,14 +108,6 @@ class UpsertTable:
                 f"columns {self.key_cols}"
             )
         self.monotone_col = monotone_col
-        # How many SUPERSEDED versions stay readable (the vacuum grace
-        # window).  1 = the original contract: current + the previous
-        # version (for in-flight readers).  Larger values buy time
-        # travel depth at the cost of disk — the lakehouse retention
-        # knob (Delta's deletedFileRetentionDuration, in versions).
-        if retain_versions < 1:
-            raise ValueError("retain_versions must be >= 1")
-        self.retain_versions = retain_versions
 
     # -- manifest management --------------------------------------------
     def _manifest(self) -> dict | None:
@@ -135,48 +138,45 @@ class UpsertTable:
         return m
 
     def _flip(self, manifest: dict) -> None:
+        # The immutable snapshot of this version's manifest — the
+        # metadata log that makes read(version=N) possible, kept forever
+        # like a table-format transaction log — is written BEFORE the
+        # flip, so every published version has one.  A crash in between
+        # leaves a snapshot above the current version, which versions()
+        # ignores and the retried commit overwrites.
         os.makedirs(self.path, exist_ok=True)
-        tmp = os.path.join(self.path, _CURRENT + ".tmp")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, os.path.join(self.path, _CURRENT))
-        # Immutable snapshot of this version's manifest — the metadata
-        # log that makes read(version=N) possible.  Kilobytes per
-        # merge; kept forever (like a table-format transaction log);
-        # whether N's DATA is still on disk is governed by
-        # retain_versions.
-        snap = os.path.join(self.path, f"manifest.v{manifest['version']}.json")
-        with open(snap, "w") as f:
-            json.dump(manifest, f)
+        for name in (f"manifest.v{manifest['version']}.json", _CURRENT):
+            tmp = os.path.join(self.path, name + ".tmp")
+            with open(tmp, "w") as f:
+                json.dump(manifest, f)
+            os.replace(tmp, os.path.join(self.path, name))
 
     def _commit(self, m: dict, buckets: dict, rewritten: list) -> None:
         """Publish the next version of `m` with the bucket map
         `buckets`.  Every leaf of the `rewritten` buckets is superseded
         and enters the pending-delete ledger.
 
-        Pending-delete ledger: [v_old, bucket, v_sup] = the leaf
-        v=<v_old>/__bucket=<b> was superseded by the version v_sup.
-        Snapshots v_old..v_sup-1 reference it, so it is safe to unlink
-        once the newest of those has aged past the retain_versions
-        window: v_sup-1 < v_new - R (R=1 is the original contract:
-        current + one grace version).  Superseded leaves are unlinked
-        by exact path — no directory walking on the hot path — and
-        entries stay in the ledger one extra version after deletion
-        (rmtree is idempotent), so a crash between flip and vacuum
-        heals on the next commit instead of leaking the leaf."""
-        v_new = m["version"] + 1
-        pending = m.get("pending", []) + [
-            [v_old, str(b), v_new]
+        Pending-delete ledger: [v_old, bucket, t_sup] = the leaf
+        v=<v_old>/__bucket=<b> was superseded by the commit made at
+        wall-clock time t_sup.  It is ripe once RETAIN_S seconds have
+        passed since then; an entry this commit adds never is.  Ripe
+        leaves are unlinked by exact path — no directory walking on the
+        hot path — before the flip, and the flip drops them from the
+        ledger.  A crash in between leaves them in the current
+        manifest's ledger, so the next commit unlinks them again
+        (rmtree is idempotent) instead of leaking them."""
+        now = time.time()
+        pending = m.get("pending", [])
+        ripe = [p for p in pending if p[2] <= now - RETAIN_S]
+        self._vacuum(ripe)
+        m["pending"] = [p for p in pending if p[2] > now - RETAIN_S] + [
+            [v_old, str(b), now]
             for b in rewritten
             for v_old in m["buckets"][str(b)]
         ]
-        r = self.retain_versions
-        ripe = [p for p in pending if p[2] < v_new - (r - 1)]
-        m["pending"] = [p for p in pending if p[2] >= v_new - r]
-        m["version"] = v_new
+        m["version"] += 1
         m["buckets"] = buckets
         self._flip(m)
-        self._vacuum(ripe)
 
     def _leaf(self, version: int, bucket: int | str) -> str:
         return os.path.join(self.path, f"v={version}", f"{_BUCKET}={bucket}")
@@ -206,8 +206,16 @@ class UpsertTable:
     # -- reads ------------------------------------------------------------
     def read(self, version: int | None = None) -> DataFrame | None:
         """Snapshot read.  version=None → current; version=N → time
-        travel to the state after merge N (requires N's data leaves to
-        still be within the retain_versions vacuum window)."""
+        travel to the state after merge N, while N's leaves are still
+        on disk.
+
+        Held-snapshot contract: the frame names the snapshot's leaves,
+        and a merge that supersedes them — one that starts after this
+        call read the manifest — leaves them on disk until the first
+        commit at least RETAIN_S seconds later.  So the frame stays
+        readable for RETAIN_S seconds after that merge, however many
+        merges run meanwhile; past that, reading it may fail on a
+        missing file."""
         if version is None:
             m = self._manifest()
         else:
@@ -229,25 +237,26 @@ class UpsertTable:
             gone = [p for p in paths if not os.path.isdir(p)]
             if gone:
                 raise ValueError(
-                    f"version {version} is older than the vacuum "
-                    f"retention window (retain_versions="
-                    f"{self.retain_versions}); {len(gone)} leaves "
-                    "deleted — raise retain_versions at write time to "
-                    "keep deeper history"
+                    f"version {version} is older than the retention "
+                    f"window (RETAIN_S={RETAIN_S} s): {len(gone)} of "
+                    "its leaves were deleted"
                 )
         return self.spark.read.parquet(*paths)
 
     def versions(self) -> list[int]:
-        """Snapshot versions with a manifest on disk (data availability
-        is narrower — governed by retain_versions)."""
-        try:
-            entries = os.listdir(self.path)
-        except FileNotFoundError:
+        """Published versions: those with a snapshot manifest on disk,
+        up to the current one — a crash before the flip can leave the
+        next version's snapshot behind.  Whether their leaves are still
+        on disk is governed by RETAIN_S."""
+        m = self._manifest()
+        if m is None:
             return []
         out = []
-        for e in entries:
+        for e in os.listdir(self.path):
             if e.startswith("manifest.v") and e.endswith(".json"):
-                out.append(int(e[len("manifest.v"):-len(".json")]))
+                v = int(e[len("manifest.v"):-len(".json")])
+                if v <= m["version"]:
+                    out.append(v)
         return sorted(out)
 
     # -- merge --------------------------------------------------------------
@@ -319,13 +328,11 @@ class UpsertTable:
             else:
                 slow.append(b)
 
-        merged = None
-        if fast:
-            merged = (
-                batch
-                if not slow
-                else batch.where(~F.col(_BUCKET).isin(slow))
-            )
+        # The new leaves: the whole batch, plus the slow buckets' stored
+        # rows whose keys the batch does not replace.  The anti-join may
+        # probe with every batch key: a key hashes to one bucket, so a
+        # fast bucket's key never matches a slow bucket's row.
+        merged = batch
         if slow:
             # One scan over every leaf of every slow bucket; _BUCKET is
             # recomputed from the keys (bucket assignment is a pure
@@ -337,15 +344,10 @@ class UpsertTable:
             current = self.spark.read.parquet(
                 *self._leaves(m, slow)
             ).withColumn(_BUCKET, self._bucket_col())
-            slow_batch = (
-                batch if not fast else batch.where(F.col(_BUCKET).isin(slow))
-            )
-            slow_merged = current.join(
-                batch.select(self.key_cols), self.key_cols, "left_anti"
-            ).unionByName(slow_batch)
-            merged = (
-                slow_merged if merged is None
-                else merged.unionByName(slow_merged)
+            merged = batch.unionByName(
+                current.join(
+                    batch.select(self.key_cols), self.key_cols, "left_anti"
+                )
             )
         v_new = m["version"] + 1
         # one job: partitionBy fans the touched buckets into their
@@ -369,8 +371,8 @@ class UpsertTable:
         self._commit(m, buckets, slow)
 
     def _vacuum(self, ripe: list) -> None:
-        """Unlink superseded-and-grace-expired leaves by exact path,
-        then drop any version root emptied by that.  Cost is O(leaves
+        """Unlink ripe leaves by exact path, then drop any version root
+        emptied by that.  Cost is O(leaves
         actually deleted) — a merge that supersedes nothing lists no
         directories at all."""
         if not ripe:

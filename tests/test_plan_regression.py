@@ -260,7 +260,7 @@ EXPECTED_SHUFFLES = {
     "kpi_avg_user_interactions": 2,  # user rollup + 1-row mean reduce
     "kpi_item_extrema": 2,  # item rollup + 1-row min/max reduce
     "top_users": 1,  # user partials; top-N is TakeOrdered
-    "latest_window_top_items": 2,  # 1-row max-ts sentinel + item rollup
+    "latest_window_top_items": 1,  # item rollup; T2 is one TakeOrdered scan
     "recent_user_windows": 1,  # user partials; recent-100 is TakeOrdered
     "null_hygiene_count": 1,  # conjunctive null filter + 1-row reduce
     "cast_hygiene": 1,  # try_cast map + 1-row reduce

@@ -299,6 +299,8 @@ def test_upsert_soak_bounded_versions_and_footprint(
 
     n_buckets = 4
     monkeypatch.setattr(sinks, "N_BUCKETS", n_buckets)
+    # no retention time: the bounds below count merges
+    monkeypatch.setattr(sinks, "RETAIN_S", 0)
     path = str(tmp_path / "soak")
     table = UpsertTable(spark, path, ["k"])
 

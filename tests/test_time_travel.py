@@ -1,7 +1,7 @@
 """UpsertTable time travel: per-version snapshot manifests +
-retain_versions-bounded historical reads.  The default (retain=1)
-keeps the original contract — current + one grace version — and deeper
-history must be bought explicitly at write time."""
+historical reads bounded by the sink's retention in seconds
+(`sinks.RETAIN_S`): version N reads back while its leaves are on disk,
+and raises once they are gone."""
 
 from __future__ import annotations
 
@@ -23,7 +23,7 @@ def _snap(table, version=None):
 
 def test_time_travel_reads_each_retained_version(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(sinks, "N_BUCKETS", 4)
-    t = UpsertTable(spark, str(tmp_path / "t"), ["k"], retain_versions=3)
+    t = UpsertTable(spark, str(tmp_path / "t"), ["k"])
     _merge(t, spark, [("a", 1), ("b", 1)])            # v1
     _merge(t, spark, [("b", 2), ("c", 2)])            # v2
     _merge(t, spark, [("a", 3)])                      # v3
@@ -36,9 +36,10 @@ def test_time_travel_reads_each_retained_version(spark, tmp_path, monkeypatch):
 
 def test_vacuumed_version_raises_not_wrong_data(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(sinks, "N_BUCKETS", 2)
-    t = UpsertTable(spark, str(tmp_path / "t"), ["k"], retain_versions=1)
+    monkeypatch.setattr(sinks, "RETAIN_S", 0)
+    t = UpsertTable(spark, str(tmp_path / "t"), ["k"])
     # same key every merge -> each merge supersedes the same bucket,
-    # so v1's leaf is vacuumed two merges later under retain=1
+    # so v1's leaf is vacuumed two merges later under RETAIN_S=0
     _merge(t, spark, [("a", 1)])
     _merge(t, spark, [("a", 2)])
     _merge(t, spark, [("a", 3)])

@@ -8,14 +8,17 @@ pin (a) result equivalence with the classic path on every sequence,
 (b) that appends really do not rewrite or supersede old leaves,
 (c) the STACK_MAX fold, (d) replay/overlap falling back to the
 rewrite path, (e) time travel over stacked leaves, (f) that a table's
-mode and bucket count are fixed when it is created, and (g) that
-marks order timestamps the way Spark does.
+mode and bucket count are fixed when it is created, (g) that marks
+order timestamps the way Spark does, and (h) that a held snapshot
+outlives the fold that supersedes it by RETAIN_S seconds, not by a
+count of merges.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -135,9 +138,7 @@ def test_stack_max_forces_fold(spark, tmp_path, monkeypatch):
 def test_time_travel_across_appended_versions(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(sinks, "N_BUCKETS", 2)
     path = str(tmp_path / "t")
-    t = UpsertTable(
-        spark, path, ["w", "k"], monotone_col="w", retain_versions=4
-    )
+    t = UpsertTable(spark, path, ["w", "k"], monotone_col="w")
     seen = []
     for w in (1, 2, 3):
         t.merge(_batch(spark, w, range(4)))
@@ -147,6 +148,50 @@ def test_time_travel_across_appended_versions(spark, tmp_path, monkeypatch):
             (r.w, r.k, r.v) for r in t.read(version=v).collect()
         )
         assert got == seen[i], v
+
+
+def test_held_snapshot_survives_merges(spark, tmp_path, monkeypatch):
+    """A dashboard reads the table while the stream keeps merging: the
+    frame `read()` returned must stay readable after a fold supersedes
+    its leaves and after further merges, for RETAIN_S seconds."""
+    monkeypatch.setattr(sinks, "N_BUCKETS", 1)
+    monkeypatch.setattr(sinks, "STACK_MAX", 2)
+    t = UpsertTable(spark, str(tmp_path / "t"), ["w", "k"], monotone_col="w")
+    t.merge(_batch(spark, 1, range(4)))
+    t.merge(_batch(spark, 2, range(4)))
+    held = t.read()
+    t.merge(_batch(spark, 3, range(4)))  # fold: supersedes held's leaves
+    assert held.count() == 8
+    t.merge(_batch(spark, 4, range(4)))
+    assert held.count() == 8
+
+
+def test_superseded_leaves_go_once_retain_s_has_passed(
+    spark, tmp_path, monkeypatch
+):
+    """The first commit RETAIN_S seconds after a fold unlinks the leaves
+    the fold superseded (and their emptied version roots), never the
+    leaves it supersedes itself, and keeps every leaf `_CURRENT`
+    names."""
+    monkeypatch.setattr(sinks, "N_BUCKETS", 1)
+    monkeypatch.setattr(sinks, "STACK_MAX", 2)
+    path = str(tmp_path / "t")
+    t = UpsertTable(spark, path, ["w", "k"], monotone_col="w")
+    for w in (1, 2, 3, 4):  # w=3 folds the stack [1, 2]
+        t.merge(_batch(spark, w, range(4)))
+    folded = [os.path.join(path, f"v={v}") for v in (1, 2)]
+    assert all(os.path.isdir(p) for p in folded)
+    later = time.time() + sinks.RETAIN_S
+    with monkeypatch.context() as mp:
+        mp.setattr(time, "time", lambda: later)
+        t.merge(_batch(spark, 5, range(4)))  # folds the stack [3, 4]
+    assert not any(os.path.exists(p) for p in folded)
+    m = _manifest(path)
+    assert m["buckets"]["0"] == [5]
+    for v in (3, 4, 5):
+        assert os.path.isdir(os.path.join(path, f"v={v}", "__bucket=0")), v
+    assert sorted(p[0] for p in m["pending"]) == [3, 4]
+    assert len(t.read().collect()) == 20
 
 
 def test_null_monotone_values_match_classic_semantics(

@@ -37,6 +37,8 @@ def test_merge_sequence_matches_dict_model(
     spark, tmp_path_factory, monkeypatch, seq
 ):
     monkeypatch.setattr(sinks, "N_BUCKETS", 4)
+    # no retention time: the layout bound below counts merges
+    monkeypatch.setattr(sinks, "RETAIN_S", 0)
     path = str(tmp_path_factory.mktemp("upsert_model"))
     table = UpsertTable(spark, path, ["k"])
     model: dict[int, int] = {}
