@@ -44,7 +44,7 @@ MEDIA_SCHEMA = StructType(
     ]
 )
 
-N_BUCKETS = 4  # byte-value histogram buckets: [0,64) [64,128) [128,192) [192,256)
+N_HIST_BUCKETS = 4  # byte-value histogram buckets: [0,64) [64,128) [128,192) [192,256)
 
 
 def attach_media(docs: DataFrame, payload_col: str = "text") -> DataFrame:
@@ -1088,7 +1088,7 @@ def byte_histogram(media_docs: DataFrame) -> DataFrame:
                     if data is not None
                     else np.zeros(0, np.uint8)
                 )
-                hist = np.bincount(arr >> 6, minlength=N_BUCKETS)[:N_BUCKETS]
+                hist = np.bincount(arr >> 6, minlength=N_HIST_BUCKETS)[:N_HIST_BUCKETS]
                 hists.append(hist.astype("int64").tolist())
             yield pd.DataFrame(
                 {
@@ -1170,7 +1170,7 @@ def byte_histogram_by_lang(media_docs: DataFrame) -> DataFrame:
         F.count("*").alias("n_docs"),
         *[
             F.sum(F.element_at("byte_hist", i + 1)).alias(f"b{i}")
-            for i in range(N_BUCKETS)
+            for i in range(N_HIST_BUCKETS)
         ],
     )
 

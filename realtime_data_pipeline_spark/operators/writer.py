@@ -15,7 +15,7 @@ what make the 100 TB read-side work:
     leaf directories per partition, one writer task each — no
     tiny-file explosion, no straggler file) and a bucket-addressable
     layout (a keyed reader or merge touches only the shard dirs its
-    keys hash to — same idea as the streaming UpsertTable buckets);
+    keys hash to);
   * rows sorted by key within each file → parquet min/max row-group
     statistics are tight, so key-range predicates skip row groups
     (data skipping without any table format);

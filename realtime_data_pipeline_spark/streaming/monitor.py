@@ -28,11 +28,15 @@ class BatchProgress:
     input_rows_per_second: float
     process_rows_per_second: float
     lag: int  # summed max(0, latest-processed) over source partitions
+    # input rows the stateful operators dropped as later than the
+    # watermark, summed over operators
+    dropped_by_watermark: int
 
 
 @dataclass
 class ProgressMonitor(StreamingQueryListener):
-    """W6: collects per-batch throughput and source lag."""
+    """W6: collects per-batch throughput, source lag and late drops;
+    a batch that dropped rows as late logs a warning."""
 
     history: list[BatchProgress] = field(default_factory=list)
 
@@ -44,16 +48,25 @@ class ProgressMonitor(StreamingQueryListener):
         lag = 0
         for src in p.sources:
             lag += _source_lag(src.endOffset, src.latestOffset)
-        self.history.append(
-            BatchProgress(
-                query_name=p.name or str(p.id),
-                batch_id=p.batchId,
-                num_input_rows=p.numInputRows,
-                input_rows_per_second=p.inputRowsPerSecond or 0.0,
-                process_rows_per_second=p.processedRowsPerSecond or 0.0,
-                lag=lag,
-            )
+        b = BatchProgress(
+            query_name=p.name or str(p.id),
+            batch_id=p.batchId,
+            num_input_rows=p.numInputRows,
+            input_rows_per_second=p.inputRowsPerSecond or 0.0,
+            process_rows_per_second=p.processedRowsPerSecond or 0.0,
+            lag=lag,
+            dropped_by_watermark=sum(
+                op.numRowsDroppedByWatermark for op in p.stateOperators
+            ),
         )
+        if b.dropped_by_watermark:
+            log.warning(
+                "query %s batch %d dropped %d rows later than the watermark",
+                b.query_name,
+                b.batch_id,
+                b.dropped_by_watermark,
+            )
+        self.history.append(b)
 
     def onQueryIdle(self, event):
         pass

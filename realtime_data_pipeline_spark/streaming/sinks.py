@@ -1,57 +1,54 @@
 """Keyed-upsert sink — the reference's Mongo upsert semantics
 (consumer/consumer.py:147-174: operationType=update, upsertDocument,
 composite idFieldList) re-implemented Mongo-free as a foreachBatch
-MERGE into a hash-bucketed, per-bucket-versioned parquet table.
+MERGE into a versioned parquet table.
 
 Layout and why:
 
-* rows hash-partition into N_BUCKETS buckets on the composite key
-  (Murmur3 `F.hash`, seed-stable across runs and engines' sessions);
-* a merge rewrites ONLY the buckets containing the batch's keys —
-  an untouched bucket's files are never touched again (asserted by
-  `test_upsert_untouched_buckets_not_rewritten`).  Round 1 rewrote the
-  ENTIRE table per micro-batch, which is quadratic-over-time I/O at any
-  real sink volume (VERDICT item 6);
+* a table is ONE stack of leaves, each leaf one parquet file; a merge
+  either appends a leaf or rewrites the stack into one leaf;
 * Spark cannot safely overwrite a parquet path it is reading in the
-  same job, so each touched bucket gets a new `v=<n>/__bucket=<k>`
-  directory and a `_CURRENT` JSON manifest (bucket → version) flips
-  atomically via os.replace.  Checkpoint replay of a micro-batch
-  re-merges the same rows under the same keys — idempotent, exactly the
-  property the reference gets from Mongo upsert (SURVEY §1.4.3).
+  same job, so each merge writes a new `v=<n>/__bucket=0` leaf and a
+  `_CURRENT` JSON manifest (stack → leaf versions) flips atomically via
+  os.replace.  Checkpoint replay of a micro-batch re-merges the same
+  rows under the same keys — idempotent, exactly the property the
+  reference gets from Mongo upsert (SURVEY §1.4.3);
+* the table used to be split over 16 hash buckets so a merge could
+  rewrite only the buckets its keys touch.  The measured traffic never
+  used that: every perfbench merge touched all 16, so each merge wrote
+  16 tiny leaves per table and a read listed 96–240 of them.  One
+  stack keeps the manifest format (one bucket, "0"; `n_buckets` 1).
 
 At scale this slot is filled by a real table format (Delta/Iceberg
-MERGE INTO — the same keyed upsert with file-level pruning; their
-data-skipping plays the role the bucket hash plays here); the interface
-is format-agnostic on purpose.
+MERGE INTO — the same keyed upsert with file-level pruning); the
+interface is format-agnostic on purpose.
 
 Fast-append mode (`monotone_col=`): the one per-batch cost that grows
-with table size is the bucket rewrite, even though append-mode
-batches only ever INSERT new keys (a finalized window emits once).
-When the caller declares a key column that is non-decreasing across
-merges (window_start in an append-mode stream), the table keeps a
-per-bucket high-water mark of that column.  A merge whose bucket
-minimum strictly exceeds the mark provably matches no stored key, so
-it APPENDS a new leaf to the bucket's manifest entry (a list of leaf
-versions, oldest first) instead of read+anti-join+rewrite — O(batch)
-I/O, independent of table size.  Overlapping or replayed batches, and
-buckets stacked to `STACK_MAX` leaves, take the rewrite path, which
-also folds the stack — LSM compaction in miniature, amortizing
-rewrites to O(table / STACK_MAX) per merge.  Null monotone values
-fall back to the rewrite path (SQL null-equality means they can
-never match anyway, but the conservative path keeps the reasoning
-local).
+with table size is the rewrite, even though append-mode batches only
+ever INSERT new keys (a finalized window emits once).  When the caller
+declares a key column that is non-decreasing across merges
+(window_start in an append-mode stream), the table keeps a high-water
+mark of that column.  A merge whose batch minimum strictly exceeds the
+mark provably matches no stored key, so it APPENDS a new leaf to the
+stack (a list of leaf versions, oldest first) instead of
+read+anti-join+rewrite — O(batch) I/O, independent of table size.
+Overlapping or replayed batches, and a stack at `STACK_MAX` leaves,
+take the rewrite path, which also folds the stack — LSM compaction in
+miniature, amortizing rewrites to O(table / STACK_MAX) per merge.
+Null monotone values fall back to the rewrite path (SQL null-equality
+means they can never match anyway, but the conservative path keeps the
+reasoning local).
 
 Mark soundness: a table's mode is fixed when it is created — the
-manifest records `monotone_col` beside `n_buckets`, and opening the
-table with a different one raises.  So every merge into a monotone
-table maintains the marks: a new bucket or an append records the
-batch maximum, and a rewrite raises the mark to the batch maximum.
-A bucket without a mark holds only null monotone values, so the first
-non-null rewrite sets a sound mark.  Marks and batch minima are engine
-integers (`unix_micros` of a TIMESTAMP, an integer column as is),
-computed and ordered in Spark: a timestamp collected to Python is a
-naive local-time value, whose order disagrees with Spark's around a
-DST fall-back.
+manifest records `monotone_col`, and opening the table with a
+different one raises.  So every merge into a monotone table maintains
+the mark: an append records the batch maximum, and a rewrite raises
+the mark to the batch maximum.  A table without a mark holds only null
+monotone values, so the first non-null rewrite sets a sound mark.
+Marks and batch minima are engine integers (`unix_micros` of a
+TIMESTAMP, an integer column as is), computed and ordered in Spark: a
+timestamp collected to Python is a naive local-time value, whose order
+disagrees with Spark's around a DST fall-back.
 
 Retention is counted in seconds, like Delta's
 deletedFileRetentionDuration: a leaf a merge supersedes stays on disk
@@ -74,11 +71,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType, TimestampType
 
 _CURRENT = "_CURRENT"
-_BUCKET = "__bucket"
-# Hash buckets per table.  The manifest records the count a table was
-# created with, and opening it under another count raises.
-N_BUCKETS = 16
-# A fast-append bucket folds back into one leaf once it stacks this many.
+# The manifest key of the one leaf stack, and its directory under each
+# version root: the one-bucket form of the hash-bucketed layout this
+# replaced, whose manifests (`n_buckets` above 1) a reopen refuses.
+_STACK = "0"
+_LEAF = "__bucket=0"
+# The leaf stack folds back into one leaf once it stacks this many.
 STACK_MAX = 8
 # Seconds a superseded leaf outlives the merge that superseded it: more
 # than ten times the slowest dashboard refresh measured (about 5 s).
@@ -110,15 +108,16 @@ class UpsertTable:
         self.monotone_col = monotone_col
 
     # -- manifest management --------------------------------------------
-    def _manifest(self) -> dict | None:
-        """{"version": int, "buckets": {bucket(str): [leaf version, ...]},
-        "n_buckets": int, "monotone_col": str | None, "pending": [...],
-        "marks": {bucket(str): int high-water mark} (monotone mode
-        only)}.
-        None only when the table does not exist yet; an unreadable
-        manifest raises rather than passing for an empty table."""
+    def _load(self, name: str) -> dict | None:
+        """The manifest file `name`: {"version": int, "buckets": {"0":
+        [leaf version, ...]}, "n_buckets": 1, "monotone_col": str |
+        None, "pending": [...], "marks": {"0": int high-water mark}
+        (monotone mode only)}.
+        None only when the file does not exist; an unreadable manifest,
+        or one written in another layout or mode, raises rather than
+        passing for an empty or differently keyed table."""
         try:
-            with open(os.path.join(self.path, _CURRENT)) as f:
+            with open(os.path.join(self.path, name)) as f:
                 m = json.load(f)
         except FileNotFoundError:
             return None
@@ -127,7 +126,7 @@ class UpsertTable:
                 f"table at {self.path} has an unreadable manifest: {e}"
             ) from e
         for field, value in (
-            ("n_buckets", N_BUCKETS),
+            ("n_buckets", 1),
             ("monotone_col", self.monotone_col),
         ):
             if m.get(field) != value:
@@ -136,6 +135,11 @@ class UpsertTable:
                     f"{field}={m.get(field)!r}, opened with {value!r}"
                 )
         return m
+
+    def _manifest(self) -> dict | None:
+        """The current manifest; None only when the table does not
+        exist yet."""
+        return self._load(_CURRENT)
 
     def _flip(self, manifest: dict) -> None:
         # The immutable snapshot of this version's manifest — the
@@ -151,40 +155,39 @@ class UpsertTable:
                 json.dump(manifest, f)
             os.replace(tmp, os.path.join(self.path, name))
 
-    def _commit(self, m: dict, buckets: dict, rewritten: list) -> None:
-        """Publish the next version of `m` with the bucket map
-        `buckets`.  Every leaf of the `rewritten` buckets is superseded
-        and enters the pending-delete ledger.
+    def _commit(self, m: dict, stack: list, superseded: list) -> None:
+        """Publish the next version of `m` with the leaf stack `stack`.
+        The `superseded` leaves enter the pending-delete ledger.
 
-        Pending-delete ledger: [v_old, bucket, t_sup] = the leaf
-        v=<v_old>/__bucket=<b> was superseded by the commit made at
-        wall-clock time t_sup.  It is ripe once RETAIN_S seconds have
-        passed since then; an entry this commit adds never is.  Ripe
-        leaves are unlinked by exact path — no directory walking on the
-        hot path — before the flip, and the flip drops them from the
-        ledger.  A crash in between leaves them in the current
-        manifest's ledger, so the next commit unlinks them again
-        (rmtree is idempotent) instead of leaking them."""
+        Pending-delete ledger: [v_old, "0", t_sup] = the leaf of version
+        v_old was superseded by the commit made at wall-clock time
+        t_sup.  It is ripe once RETAIN_S seconds have passed since then;
+        an entry this commit adds never is.  Ripe leaves are unlinked by
+        exact path — no directory walking on the hot path — before the
+        flip, and the flip drops them from the ledger.  A crash in
+        between leaves them in the current manifest's ledger, so the
+        next commit unlinks them again (rmtree is idempotent) instead of
+        leaking them."""
         now = time.time()
         pending = m.get("pending", [])
-        ripe = [p for p in pending if p[2] <= now - RETAIN_S]
-        self._vacuum(ripe)
+        for v_old, _stack, t_sup in pending:
+            if t_sup <= now - RETAIN_S:
+                # a version root holds its one leaf and nothing else
+                shutil.rmtree(
+                    os.path.join(self.path, f"v={v_old}"), ignore_errors=True
+                )
         m["pending"] = [p for p in pending if p[2] > now - RETAIN_S] + [
-            [v_old, str(b), now]
-            for b in rewritten
-            for v_old in m["buckets"][str(b)]
+            [v_old, _STACK, now] for v_old in superseded
         ]
         m["version"] += 1
-        m["buckets"] = buckets
+        m["buckets"] = {_STACK: stack}
         self._flip(m)
 
-    def _leaf(self, version: int, bucket: int | str) -> str:
-        return os.path.join(self.path, f"v={version}", f"{_BUCKET}={bucket}")
+    def _leaf(self, version: int) -> str:
+        return os.path.join(self.path, f"v={version}", _LEAF)
 
-    def _leaves(self, m: dict, buckets) -> list[str]:
-        return [
-            self._leaf(v, b) for b in buckets for v in m["buckets"][str(b)]
-        ]
+    def _leaves(self, m: dict) -> list[str]:
+        return [self._leaf(v) for v in m["buckets"][_STACK]]
 
     def _mono_image(self, batch: DataFrame) -> F.Column:
         """The monotone column as an engine integer whose order is
@@ -199,9 +202,6 @@ class UpsertTable:
             f"monotone_col {self.monotone_col!r} is {dtype.simpleString()}; "
             "it must be a TIMESTAMP or integer column"
         )
-
-    def _bucket_col(self) -> F.Column:
-        return F.pmod(F.hash(*self.key_cols), F.lit(N_BUCKETS))
 
     # -- reads ------------------------------------------------------------
     def read(self, version: int | None = None) -> DataFrame | None:
@@ -218,21 +218,16 @@ class UpsertTable:
         missing file."""
         if version is None:
             m = self._manifest()
+            if m is None:
+                return None
         else:
-            snap = os.path.join(self.path, f"manifest.v{version}.json")
-            try:
-                with open(snap) as f:
-                    m = json.load(f)
-            except FileNotFoundError:
+            m = self._load(f"manifest.v{version}.json")
+            if m is None:
                 raise ValueError(
                     f"no snapshot manifest for version {version}; "
                     f"available: {self.versions()}"
-                ) from None
-        if m is None:
-            return None
-        paths = self._leaves(m, sorted(m["buckets"]))
-        if not paths:
-            return None
+                )
+        paths = self._leaves(m)
         if version is not None:
             gone = [p for p in paths if not os.path.isdir(p)]
             if gone:
@@ -261,136 +256,74 @@ class UpsertTable:
 
     # -- merge --------------------------------------------------------------
     def merge(self, batch: DataFrame) -> None:
-        """Upsert: delete-matching-keys then insert (last write wins),
-        rewriting only the hash buckets the batch's keys land in.
+        """Upsert: delete-matching-keys then insert (last write wins).
 
         Within one batch, duplicate keys collapse to an arbitrary single
         row via dropDuplicates on the key — the streaming engine never
         emits duplicate finalized windows in one batch, so this only
         guards replay edge cases.
         """
-        batch = batch.dropDuplicates(self.key_cols).withColumn(
-            _BUCKET, self._bucket_col()
-        )
-        # Two actions consume `batch` (the touched-bucket probe and the
-        # merge write); inside foreachBatch each action would otherwise
+        # Two actions consume `batch` (the stats row and the leaf
+        # write); inside foreachBatch each action would otherwise
         # re-execute the whole micro-batch aggregation.  Persist once.
-        batch = batch.persist()
+        batch = batch.dropDuplicates(self.key_cols).persist()
         try:
             self._merge_persisted(batch)
         finally:
             batch.unpersist()
 
     def _merge_persisted(self, batch: DataFrame) -> None:
-        # ≤ N_BUCKETS rows — O(1) driver-side, not a collect of data.
-        # With a monotone column declared, the same tiny agg also
-        # yields the per-bucket min/max needed for the fast-append
-        # eligibility test.
-        if self.monotone_col:
-            mono = self._mono_image(batch)
-            stats = {
-                r["b"]: (r["lo"], r["hi"])
-                for r in batch.groupBy(F.col(_BUCKET).alias("b"))
-                .agg(F.min(mono).alias("lo"), F.max(mono).alias("hi"))
-                .collect()
-            }
-        else:
-            stats = {
-                r[0]: (None, None)
-                for r in batch.select(_BUCKET).distinct().collect()
-            }
-        touched = sorted(stats)
-        if not touched:
+        # One row, O(1) driver-side: the batch size and, with a
+        # monotone column declared, the min/max the append test needs.
+        mono = (
+            self._mono_image(batch)
+            if self.monotone_col
+            else F.lit(None).cast("long")
+        )
+        n, lo, hi = batch.agg(
+            F.count(F.lit(1)), F.min(mono), F.max(mono)
+        ).first()
+        if not n:
             return
         m = self._manifest() or {
             "version": 0,
             "buckets": {},
-            "n_buckets": N_BUCKETS,
+            "n_buckets": 1,
             "monotone_col": self.monotone_col,
         }
         marks = m.setdefault("marks", {}) if self.monotone_col else {}
-
-        # Classify each touched bucket.  "fast" = nothing stored to
-        # collide with: a new bucket, or (monotone mode) a bucket whose
-        # batch minimum is strictly above its high-water mark and whose
-        # leaf stack is still under STACK_MAX; everything else rewrites.
-        fast, slow = [], []
-        for b in touched:
-            entry = m["buckets"].get(str(b))
-            lo = stats[b][0]
-            if entry is None or (
-                lo is not None
-                and str(b) in marks
-                and lo > marks[str(b)]
-                and len(entry) < STACK_MAX
-            ):
-                fast.append(b)
-            else:
-                slow.append(b)
-
-        # The new leaves: the whole batch, plus the slow buckets' stored
-        # rows whose keys the batch does not replace.  The anti-join may
-        # probe with every batch key: a key hashes to one bucket, so a
-        # fast bucket's key never matches a slow bucket's row.
+        stack = m["buckets"].get(_STACK)
+        # Append when nothing stored can collide: a new table, or
+        # (monotone mode) a batch minimum strictly above the high-water
+        # mark while the stack is still under STACK_MAX.  Everything
+        # else rewrites: the batch plus the stored rows whose keys it
+        # does not replace.
+        append = stack is None or (
+            lo is not None
+            and _STACK in marks
+            and lo > marks[_STACK]
+            and len(stack) < STACK_MAX
+        )
         merged = batch
-        if slow:
-            # One scan over every leaf of every slow bucket; _BUCKET is
-            # recomputed from the keys (bucket assignment is a pure
-            # hash) rather than carried per-leaf — a per-leaf
-            # lit-column would need a unionByName chain whose Catalyst
-            # analysis cost is quadratic in leaf count, which round-13
-            # measured dominating fold batches at STACK_MAX leaves per
-            # bucket.
-            current = self.spark.read.parquet(
-                *self._leaves(m, slow)
-            ).withColumn(_BUCKET, self._bucket_col())
+        if not append:
+            stored = self.spark.read.parquet(*self._leaves(m))
             merged = batch.unionByName(
-                current.join(
+                stored.join(
                     batch.select(self.key_cols), self.key_cols, "left_anti"
                 )
             )
         v_new = m["version"] + 1
-        # one job: partitionBy fans the touched buckets into their
-        # v=<n>/__bucket=<k> leaves.  Repartition on the bucket column
-        # first so each leaf gets ~1 file instead of one per upstream
-        # task — without this, file count grows as
-        # O(merges x shuffle_partitions x buckets) and snapshot reads
-        # drown in small files.
-        merged.repartition(len(touched), F.col(_BUCKET)).write.mode(
-            "overwrite"
-        ).partitionBy(_BUCKET).parquet(os.path.join(self.path, f"v={v_new}"))
-        buckets = dict(m["buckets"])
-        for b in touched:
-            # a rewrite folds the stack; a fast append keeps every prior
-            # leaf live (nothing replaced it), so only `slow` supersedes
-            stack = [] if b in slow else buckets.get(str(b), [])
-            buckets[str(b)] = stack + [v_new]
-            hi = stats[b][1]
-            if self.monotone_col and hi is not None:
-                marks[str(b)] = max(marks.get(str(b), hi), hi)
-        self._commit(m, buckets, slow)
-
-    def _vacuum(self, ripe: list) -> None:
-        """Unlink ripe leaves by exact path, then drop any version root
-        emptied by that.  Cost is O(leaves
-        actually deleted) — a merge that supersedes nothing lists no
-        directories at all."""
-        if not ripe:
-            return
-        roots = set()
-        for ver, b, _v_sup in ripe:
-            shutil.rmtree(self._leaf(ver, b), ignore_errors=True)
-            roots.add(int(ver))
-        for ver in roots:
-            root = os.path.join(self.path, f"v={ver}")
-            try:
-                empty = not any(
-                    e.startswith(f"{_BUCKET}=") for e in os.listdir(root)
-                )
-            except FileNotFoundError:
-                continue
-            if empty:
-                shutil.rmtree(root, ignore_errors=True)
+        # One file per leaf, and no shuffle on the append path: a leaf
+        # of one file per upstream task would grow the file count as
+        # O(merges x shuffle_partitions) and drown reads in small files.
+        merged.coalesce(1).write.mode("overwrite").parquet(self._leaf(v_new))
+        if self.monotone_col and hi is not None:
+            marks[_STACK] = max(marks.get(_STACK, hi), hi)
+        if append:
+            self._commit(m, (stack or []) + [v_new], [])
+        else:
+            # a rewrite folds the stack and supersedes every leaf of it
+            self._commit(m, [v_new], stack)
 
 
 def upsert_sink(table: UpsertTable):

@@ -16,7 +16,7 @@ from realtime_data_pipeline_spark.tables import load_table
 
 from conftest import SF_DIR_MID
 
-N_BUCKETS = 8
+BUCKET_COUNT = 8
 
 
 @pytest.fixture(scope="module")
@@ -26,10 +26,10 @@ def bucketed_tables(spark):
     suffix = uuid.uuid4().hex[:8]
     to, tl = f"orders_b_{suffix}", f"lineitem_b_{suffix}"
     bucketing.write_bucketed(
-        load_table(spark, SF_DIR_MID, "orders"), to, "o_orderkey", N_BUCKETS
+        load_table(spark, SF_DIR_MID, "orders"), to, "o_orderkey", BUCKET_COUNT
     )
     bucketing.write_bucketed(
-        load_table(spark, SF_DIR_MID, "lineitem"), tl, "l_orderkey", N_BUCKETS
+        load_table(spark, SF_DIR_MID, "lineitem"), tl, "l_orderkey", BUCKET_COUNT
     )
     yield to, tl
     bucketing.drop_table(spark, to)

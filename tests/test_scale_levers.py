@@ -241,52 +241,6 @@ def test_minhash_bucket_cap_bounds_boilerplate_blowup(spark):
     assert pairs[(1000, 1001)] >= 0.5
 
 
-def test_upsert_untouched_buckets_not_rewritten(spark, tmp_path, monkeypatch):
-    """streaming/sinks.UpsertTable: a merge must rewrite only the hash
-    buckets containing the batch's keys.  Round 1 rewrote the whole
-    table per micro-batch — quadratic-over-time I/O at sink volume."""
-    import os
-
-    from realtime_data_pipeline_spark.streaming import sinks
-    from realtime_data_pipeline_spark.streaming.sinks import UpsertTable
-
-    monkeypatch.setattr(sinks, "N_BUCKETS", 8)
-    t = UpsertTable(spark, str(tmp_path / "t"), ["k"])
-    base = spark.createDataFrame(
-        [(i, f"val_{i}") for i in range(200)], "k long, payload string"
-    )
-    t.merge(base)
-
-    def leaf_files():
-        out = {}
-        for root, _, files in os.walk(str(tmp_path / "t")):
-            for f in files:
-                if f.endswith(".parquet"):
-                    p = os.path.join(root, f)
-                    out[p] = os.stat(p).st_mtime_ns
-        return out
-
-    before = leaf_files()
-    # single-key batch → exactly one bucket touched
-    t.merge(spark.createDataFrame([(7, "updated")], "k long, payload string"))
-    after = leaf_files()
-
-    surviving = set(before) & set(after)
-    assert surviving, "merge must not rewrite every bucket"
-    for p in surviving:
-        assert before[p] == after[p], f"untouched file rewritten: {p}"
-    # at most one of 8 buckets rewritten
-    assert len(set(before) - set(after)) <= len(before) // 4
-
-    got = {(r.k, r.payload) for r in t.read().collect()}
-    want = {(i, f"val_{i}") for i in range(200) if i != 7} | {(7, "updated")}
-    assert got == want
-
-    # replaying the same batch is idempotent
-    t.merge(spark.createDataFrame([(7, "updated")], "k long, payload string"))
-    assert {(r.k, r.payload) for r in t.read().collect()} == want
-
-
 def test_partition_pruning_reads_only_matching_partitions(spark, tmp_path):
     """Hive-style partitioned layout + a partition-key filter: the scan
     must prune at PLANNING time (PartitionFilters on the FileScan, one

@@ -6,8 +6,10 @@ file-replay sources and availableNow triggers.
 from __future__ import annotations
 
 import datetime as dt
+import time
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from realtime_data_pipeline_spark.streaming import sinks
@@ -92,6 +94,79 @@ def test_upsert_idempotent_replay(spark, parity_setup, tmp_path):
     assert after_df.groupBy(KEYS).count().where(F.col("count") > 1).count() == 0
 
 
+class Crash(Exception):
+    pass
+
+
+@pytest.mark.parametrize("after", [False, True], ids=["before", "after"])
+def test_restart_after_crash_at_flip_matches_batch(
+    spark, tmp_path, monkeypatch, after
+):
+    """A crash inside the sink's commit, on either side of the
+    `_CURRENT` replace, fails the query; restarting it from the same
+    checkpoint re-runs the uncommitted micro-batch through the sink,
+    and the table ends equal to the batch reference with no duplicate
+    keys — exactly-once from the checkpoint's WAL plus an idempotent
+    sink."""
+    events = _ref_shaped_events(spark)
+    replay = str(tmp_path / "replay")
+    # three event files in event-time order, so the watermark drops
+    # nothing and windows finalize across batches, then the sentinel
+    us = F.unix_micros("timestamp")
+    lo, hi = events.agg(F.min(us), F.max(us)).first()
+    third = F.floor((us - lo) * 3 / (hi - lo + 1))
+    for i in range(3):
+        events.where(third == i).coalesce(1).write.mode("append").parquet(
+            replay
+        )
+        time.sleep(1.1)  # distinct mtimes → stable file→batch order
+    max_ts = events.agg(F.max("timestamp")).first()[0]
+    spark.createDataFrame(
+        [(SENTINEL, SENTINEL, "flush", max_ts + dt.timedelta(days=2))],
+        schema=EVENT_SCHEMA,
+    ).coalesce(1).write.mode("append").parquet(replay)
+
+    def run():
+        stream = file_replay_stream(
+            spark, replay, EVENT_SCHEMA, max_files_per_trigger=1
+        )
+        table = UpsertTable(
+            spark, str(tmp_path / "table"), KEYS, monotone_col="window_start"
+        )
+        q = start_upsert_query(
+            windowed_stream_counts(stream, "user_id"),
+            table,
+            str(tmp_path / "ckpt"),
+            "crash_restart",
+            trigger_available_now=True,
+        )
+        q.awaitTermination(120)
+        return table
+
+    flip, flips = UpsertTable._flip, []
+
+    def crash_on_second_flip(self, manifest):
+        flips.append(manifest["version"])
+        if len(flips) == 2 and not after:
+            raise Crash
+        flip(self, manifest)
+        if len(flips) == 2:
+            raise Crash
+
+    with monkeypatch.context() as mp:
+        mp.setattr(UpsertTable, "_flip", crash_on_second_flip)
+        with pytest.raises(StreamingQueryException, match="Crash"):
+            run()
+    assert len(flips) == 2
+    table = run()  # the restart
+
+    got = table.read().where(F.col("user_id") != SENTINEL)
+    assert got.groupBy(KEYS).count().where(F.col("count") > 1).count() == 0
+    assert {tuple(r) for r in got.collect()} == {
+        tuple(r) for r in windowed_stream_counts(events, "user_id").collect()
+    }
+
+
 def test_monitor_collects_progress(parity_setup):
     _, _, mon, _ = parity_setup
     assert mon.total_rows > 0
@@ -99,8 +174,9 @@ def test_monitor_collects_progress(parity_setup):
 
 
 def test_watermark_drops_late_data(spark, tmp_path):
-    """Event later than the 10-min watermark is dropped; late-but-within
-    event still counts (SURVEY §1.4.2, consumer/consumer.py:112)."""
+    """Event later than the 10-min watermark is dropped and the progress
+    monitor reports the drop; late-but-within event still counts
+    (SURVEY §1.4.2, consumer/consumer.py:112)."""
     t0 = dt.datetime(2024, 6, 1, 0, 0, 0)
 
     def ev(minute, user="user_1"):
@@ -118,15 +194,30 @@ def test_watermark_drops_late_data(spark, tmp_path):
         [ev(7), ev(22)],          # 00:07 → both its windows end ≤ 00:20 → dropped
         [ev(60 * 48, SENTINEL)],  # flush: advance wm past every real window
     ]
-    import time
-
     for rows in batches:
         spark.createDataFrame(rows, EVENT_SCHEMA).coalesce(1).write.mode(
             "append"
         ).parquet(replay)
         time.sleep(1.1)  # distinct mtimes → stable file→batch order
 
-    table = _run_replay(spark, replay, str(tmp_path / "table"), str(tmp_path / "ckpt"))
+    mon = attach_monitor(spark)
+    try:
+        table = _run_replay(
+            spark, replay, str(tmp_path / "table"), str(tmp_path / "ckpt")
+        )
+        # progress events reach the listener asynchronously
+        deadline = time.time() + 30
+        while time.time() < deadline and not any(
+            b.query_name == "parity" and b.dropped_by_watermark
+            for b in mon.history
+        ):
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(mon)
+    # the drop is reported, not silently lost
+    assert sum(
+        b.dropped_by_watermark for b in mon.history if b.query_name == "parity"
+    ) >= 1
     got = {
         (r["window_start"].strftime("%H:%M"), r["total_interactions"])
         for r in table.read().where(F.col("user_id") != SENTINEL).collect()
@@ -291,14 +382,13 @@ def test_upsert_soak_bounded_versions_and_footprint(
     """VERDICT r2 item 8: 20-micro-batch soak on the keyed-upsert sink.
 
     Under sustained churn the on-disk state must stay BOUNDED — vacuum
-    has to reclaim superseded bucket versions as fast as merges create
-    them, keeping only the current mapping plus the one-version grace
-    window for in-flight readers.  Without vacuum the layout is
-    O(batches) versions; this pins it at O(n_buckets)."""
+    has to reclaim superseded leaves as fast as merges create them,
+    keeping only the current leaf plus the one its last merge
+    superseded (ripe at the next commit with no retention time).
+    Without vacuum the layout is O(batches) versions; this pins it at
+    two, of one part file each."""
     import os
 
-    n_buckets = 4
-    monkeypatch.setattr(sinks, "N_BUCKETS", n_buckets)
     # no retention time: the bounds below count merges
     monkeypatch.setattr(sinks, "RETAIN_S", 0)
     path = str(tmp_path / "soak")
@@ -308,7 +398,7 @@ def test_upsert_soak_bounded_versions_and_footprint(
     n_batches = 20
     for i in range(n_batches):
         # churn: each batch upserts 6 keys from a sliding range, so
-        # every bucket is touched repeatedly across the soak
+        # every merge rewrites stored keys
         rows = [(k, i) for k in range(i, i + 6)]
         for k, v in rows:
             expect[k] = v
@@ -320,27 +410,26 @@ def test_upsert_soak_bounded_versions_and_footprint(
 
     # bounded version roots: current + grace, not O(n_batches)
     versions = [d for d in os.listdir(path) if d.startswith("v=")]
-    assert len(versions) <= n_buckets + 1, versions
+    assert len(versions) <= 2, versions
 
-    # bounded leaf count: at most every bucket at its current version
-    # plus the grace copies vacuum deliberately retains
+    # bounded leaf count: the current leaf plus the grace copy vacuum
+    # deliberately retains
     leaves = [
         (v, leaf)
         for v in versions
         for leaf in os.listdir(os.path.join(path, v))
         if leaf.startswith("__bucket=")
     ]
-    assert len(leaves) <= 2 * n_buckets, leaves
+    assert len(leaves) <= 2, leaves
 
-    # bounded data files: current + grace copies of each bucket, at a
-    # couple of part files per leaf — O(n_buckets), not O(n_batches)
+    # bounded data files: one part file per leaf, not O(n_batches)
     n_parts = sum(
         1
         for _, _, files in os.walk(path)
         for f in files
         if f.startswith("part-") and f.endswith(".parquet")
     )
-    assert n_parts <= 4 * n_buckets, n_parts
+    assert n_parts <= 2, n_parts
 
 
 def test_streaming_topk_exact_across_multibatch_finalization(spark, tmp_path):

@@ -21,8 +21,7 @@ def _snap(table, version=None):
     )
 
 
-def test_time_travel_reads_each_retained_version(spark, tmp_path, monkeypatch):
-    monkeypatch.setattr(sinks, "N_BUCKETS", 4)
+def test_time_travel_reads_each_retained_version(spark, tmp_path):
     t = UpsertTable(spark, str(tmp_path / "t"), ["k"])
     _merge(t, spark, [("a", 1), ("b", 1)])            # v1
     _merge(t, spark, [("b", 2), ("c", 2)])            # v2
@@ -35,10 +34,9 @@ def test_time_travel_reads_each_retained_version(spark, tmp_path, monkeypatch):
 
 
 def test_vacuumed_version_raises_not_wrong_data(spark, tmp_path, monkeypatch):
-    monkeypatch.setattr(sinks, "N_BUCKETS", 2)
     monkeypatch.setattr(sinks, "RETAIN_S", 0)
     t = UpsertTable(spark, str(tmp_path / "t"), ["k"])
-    # same key every merge -> each merge supersedes the same bucket,
+    # same key every merge -> each merge supersedes the previous leaf,
     # so v1's leaf is vacuumed two merges later under RETAIN_S=0
     _merge(t, spark, [("a", 1)])
     _merge(t, spark, [("a", 2)])
@@ -48,8 +46,7 @@ def test_vacuumed_version_raises_not_wrong_data(spark, tmp_path, monkeypatch):
     assert _snap(t) == [("a", 3)]
 
 
-def test_unknown_version_lists_available(spark, tmp_path, monkeypatch):
-    monkeypatch.setattr(sinks, "N_BUCKETS", 2)
+def test_unknown_version_lists_available(spark, tmp_path):
     t = UpsertTable(spark, str(tmp_path / "t"), ["k"])
     _merge(t, spark, [("a", 1)])
     with pytest.raises(ValueError, match="available: \\[1\\]"):

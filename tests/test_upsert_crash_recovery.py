@@ -1,6 +1,6 @@
 """Crash recovery of the keyed-upsert sink's commit.
 
-A merge writes its leaves, unlinks ripe superseded leaves, writes the
+A merge writes its leaf, unlinks ripe superseded leaves, writes the
 version's snapshot manifest and flips `_CURRENT`.  A crash at any of
 those steps, followed by a replay of the same batch through a fresh
 `UpsertTable` (what a restart from the streaming checkpoint does), must
@@ -63,9 +63,10 @@ def _at_flip(after):
     return patch
 
 
-def _merge(spark, table, model, batch):
-    model.update(batch)
-    table.merge(spark.createDataFrame(list(batch.items()), "k int, v int"))
+def _merge(spark, table, model, w, batch):
+    model.update({(w, k): v for k, v in batch.items()})
+    rows = [(w, k, v) for k, v in batch.items()]
+    table.merge(spark.createDataFrame(rows, "w int, k int, v int"))
 
 
 def _on_disk_leaves(path):
@@ -79,11 +80,10 @@ def _on_disk_leaves(path):
 
 
 def _check(table, model):
-    assert {r.k: r.v for r in table.read().collect()} == model
+    assert {(r.w, r.k): r.v for r in table.read().collect()} == model
     with open(os.path.join(table.path, "_CURRENT")) as f:
         m = json.load(f)
-    named = set(table._leaves(m, m["buckets"]))
-    assert named <= _on_disk_leaves(table.path)
+    assert set(table._leaves(m)) <= _on_disk_leaves(table.path)
     assert table.versions() == list(range(1, m["version"] + 1))
     return m
 
@@ -94,34 +94,38 @@ def _check(table, model):
     ids=["after-leaf-write", "mid-vacuum", "before-flip", "after-flip"],
 )
 def test_replay_after_crash_restores_table(spark, tmp_path, monkeypatch, crash):
-    monkeypatch.setattr(sinks, "N_BUCKETS", 2)
     monkeypatch.setattr(sinks, "RETAIN_S", 0)
     path = str(tmp_path / "t")
-    model: dict[int, int] = {}
-    keys = range(8)  # touches both buckets, so every merge rewrites both
-    table = UpsertTable(spark, path, ["k"])
-    _merge(spark, table, model, {k: 1 for k in keys})
-    _merge(spark, table, model, {k: 2 for k in keys})  # 2 leaves pending
+    model: dict[tuple[int, int], int] = {}
+    keys = range(8)
 
-    crashed = {k: 3 for k in keys}
+    def open_table():
+        return UpsertTable(spark, path, ["w", "k"], monotone_col="w")
+
+    table = open_table()
+    _merge(spark, table, model, 1, {k: 1 for k in keys})
+    _merge(spark, table, model, 2, {k: 2 for k in keys})  # append: [1, 2]
+    # window 2 again collides: the rewrite folds the stack, so its 2
+    # leaves are pending and ripe at the crashed commit
+    _merge(spark, table, model, 2, {k: 3 for k in keys})
+
+    crashed = {k: 4 for k in keys}
     with monkeypatch.context() as mp:
         crash(mp)
         with pytest.raises(Crash):
-            table.merge(
-                spark.createDataFrame(list(crashed.items()), "k int, v int")
-            )
-    table = UpsertTable(spark, path, ["k"])  # the restart
-    _merge(spark, table, model, crashed)  # the checkpoint replay
+            _merge(spark, table, {}, 2, crashed)
+    table = open_table()  # the restart
+    _merge(spark, table, model, 2, crashed)  # the checkpoint replay
     _check(table, model)
 
     # RETAIN_S = 0 has passed by the next commit: the only leaves left
-    # on disk are the ones `_CURRENT` names and the ones that commit
+    # on disk are the ones `_CURRENT` names and the one that commit
     # superseded itself, and no version root is left without a leaf.
-    _merge(spark, table, model, {k: 4 for k in keys})
+    _merge(spark, table, model, 2, {k: 5 for k in keys})
     m = _check(table, model)
-    pending = {table._leaf(v, b) for v, b, _t in m["pending"]}
-    assert len({t for _v, _b, t in m["pending"]}) == 1
-    assert _on_disk_leaves(path) == set(table._leaves(m, m["buckets"])) | pending
+    pending = {table._leaf(v) for v, _stack, _t in m["pending"]}
+    assert len(m["pending"]) == 1
+    assert _on_disk_leaves(path) == set(table._leaves(m)) | pending
     roots = {os.path.dirname(p) for p in _on_disk_leaves(path)}
     assert roots == {
         os.path.join(path, d) for d in os.listdir(path) if d.startswith("v=")

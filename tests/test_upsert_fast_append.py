@@ -1,14 +1,14 @@
 """Fast-append mode of the keyed-upsert sink (round 13).
 
 The r13 streaming soak measured the one per-batch cost that grows
-with table size — the bucket rewrite — even though append-mode
+with table size — the rewrite — even though append-mode
 batches only insert new keys.  `monotone_col=` turns those merges
-into leaf APPENDS guarded by per-bucket high-water marks; these tests
+into leaf APPENDS guarded by a high-water mark; these tests
 pin (a) result equivalence with the classic path on every sequence,
 (b) that appends really do not rewrite or supersede old leaves,
 (c) the STACK_MAX fold, (d) replay/overlap falling back to the
 rewrite path, (e) time travel over stacked leaves, (f) that a table's
-mode and bucket count are fixed when it is created, (g) that marks
+mode and layout are fixed when it is created, (g) that marks
 order timestamps the way Spark does, and (h) that a held snapshot
 outlives the fold that supersedes it by RETAIN_S seconds, not by a
 count of merges.
@@ -55,10 +55,9 @@ def _leaf_mtimes(path):
     return out
 
 
-def test_fast_append_matches_classic_results(spark, tmp_path, monkeypatch):
+def test_fast_append_matches_classic_results(spark, tmp_path):
     """Any monotone batch sequence: fast-append table == classic
     table, row for row."""
-    monkeypatch.setattr(sinks, "N_BUCKETS", 4)
     fast = UpsertTable(
         spark, str(tmp_path / "fast"), ["w", "k"], monotone_col="w"
     )
@@ -69,10 +68,7 @@ def test_fast_append_matches_classic_results(spark, tmp_path, monkeypatch):
     assert _snapshot(fast) == _snapshot(classic)
 
 
-def test_fast_append_stacks_leaves_without_superseding(
-    spark, tmp_path, monkeypatch
-):
-    monkeypatch.setattr(sinks, "N_BUCKETS", 2)
+def test_fast_append_stacks_leaves_without_superseding(spark, tmp_path):
     path = str(tmp_path / "t")
     t = UpsertTable(spark, path, ["w", "k"], monotone_col="w")
     t.merge(_batch(spark, 1, range(8)))
@@ -80,9 +76,8 @@ def test_fast_append_stacks_leaves_without_superseding(
     files_before = _leaf_mtimes(path)
     t.merge(_batch(spark, 2, range(8)))
     m2 = _manifest(path)
-    # every bucket entry grew into a 2-leaf stack; nothing pending
-    for b, entry in m2["buckets"].items():
-        assert len(entry) == 2, (b, entry)
+    # the stack grew to 2 leaves; nothing pending
+    assert len(m2["buckets"]["0"]) == 2, m2["buckets"]
     assert m2.get("pending", []) == []
     # the v1 leaf files were not rewritten (same paths, same mtimes)
     files_after = _leaf_mtimes(path)
@@ -92,10 +87,7 @@ def test_fast_append_stacks_leaves_without_superseding(
     assert len(t.read().collect()) == 16
 
 
-def test_overlap_falls_back_to_rewrite_and_upserts(
-    spark, tmp_path, monkeypatch
-):
-    monkeypatch.setattr(sinks, "N_BUCKETS", 2)
+def test_overlap_falls_back_to_rewrite_and_upserts(spark, tmp_path):
     path = str(tmp_path / "t")
     t = UpsertTable(spark, path, ["w", "k"], monotone_col="w")
     t.merge(_batch(spark, 1, range(4)))
@@ -103,15 +95,13 @@ def test_overlap_falls_back_to_rewrite_and_upserts(
     # same w=2 again with different values: keys collide -> rewrite
     t.merge(_df(spark, [(2, k, 999) for k in range(4)]))
     m = _manifest(path)
-    for entry in m["buckets"].values():
-        assert len(entry) == 1, entry
+    assert len(m["buckets"]["0"]) == 1, m["buckets"]
     got = {(r.w, r.k): r.v for r in t.read().collect()}
     assert all(got[(2, k)] == 999 for k in range(4))
     assert len(got) == 8  # no duplicate keys after the fold
 
 
-def test_replay_of_appended_batch_is_idempotent(spark, tmp_path, monkeypatch):
-    monkeypatch.setattr(sinks, "N_BUCKETS", 2)
+def test_replay_of_appended_batch_is_idempotent(spark, tmp_path):
     path = str(tmp_path / "t")
     t = UpsertTable(spark, path, ["w", "k"], monotone_col="w")
     t.merge(_batch(spark, 1, range(4)))
@@ -122,21 +112,35 @@ def test_replay_of_appended_batch_is_idempotent(spark, tmp_path, monkeypatch):
 
 
 def test_stack_max_forces_fold(spark, tmp_path, monkeypatch):
-    monkeypatch.setattr(sinks, "N_BUCKETS", 1)
     monkeypatch.setattr(sinks, "STACK_MAX", 3)
     path = str(tmp_path / "t")
     t = UpsertTable(spark, path, ["w", "k"], monotone_col="w")
-    for w in range(1, 5):  # 4 merges, STACK_MAX=3
+
+    def parts_per_leaf():
+        m = _manifest(path)
+        leaves = [
+            os.path.join(path, f"v={v}", "__bucket=0")
+            for v in m["buckets"]["0"]
+        ]
+        return [
+            sum(
+                f.startswith("part-") and f.endswith(".parquet")
+                for f in os.listdir(leaf)
+            )
+            for leaf in leaves
+        ]
+
+    for w in range(1, 4):
         t.merge(_batch(spark, w, range(3)))
-    m = _manifest(path)
-    entry = m["buckets"]["0"]
-    # merge 4 found a 3-leaf stack -> fold: single leaf again
-    assert len(entry) == 1, entry
+    # three appends, one parquet file each, whatever the batch's tasks
+    assert parts_per_leaf() == [1, 1, 1]
+    t.merge(_batch(spark, 4, range(3)))  # 4 merges, STACK_MAX=3
+    # merge 4 found a 3-leaf stack -> fold: single leaf again, one file
+    assert parts_per_leaf() == [1]
     assert len(t.read().collect()) == 12
 
 
-def test_time_travel_across_appended_versions(spark, tmp_path, monkeypatch):
-    monkeypatch.setattr(sinks, "N_BUCKETS", 2)
+def test_time_travel_across_appended_versions(spark, tmp_path):
     path = str(tmp_path / "t")
     t = UpsertTable(spark, path, ["w", "k"], monotone_col="w")
     seen = []
@@ -154,7 +158,6 @@ def test_held_snapshot_survives_merges(spark, tmp_path, monkeypatch):
     """A dashboard reads the table while the stream keeps merging: the
     frame `read()` returned must stay readable after a fold supersedes
     its leaves and after further merges, for RETAIN_S seconds."""
-    monkeypatch.setattr(sinks, "N_BUCKETS", 1)
     monkeypatch.setattr(sinks, "STACK_MAX", 2)
     t = UpsertTable(spark, str(tmp_path / "t"), ["w", "k"], monotone_col="w")
     t.merge(_batch(spark, 1, range(4)))
@@ -173,7 +176,6 @@ def test_superseded_leaves_go_once_retain_s_has_passed(
     the fold superseded (and their emptied version roots), never the
     leaves it supersedes itself, and keeps every leaf `_CURRENT`
     names."""
-    monkeypatch.setattr(sinks, "N_BUCKETS", 1)
     monkeypatch.setattr(sinks, "STACK_MAX", 2)
     path = str(tmp_path / "t")
     t = UpsertTable(spark, path, ["w", "k"], monotone_col="w")
@@ -194,14 +196,11 @@ def test_superseded_leaves_go_once_retain_s_has_passed(
     assert len(t.read().collect()) == 20
 
 
-def test_null_monotone_values_match_classic_semantics(
-    spark, tmp_path, monkeypatch
-):
+def test_null_monotone_values_match_classic_semantics(spark, tmp_path):
     """An all-null monotone batch takes the rewrite path (its min is
     null, so fast eligibility cannot be proven); whatever SQL
     null-equality does to such keys, the fast table must do exactly
     what the classic table does."""
-    monkeypatch.setattr(sinks, "N_BUCKETS", 1)
     fast = UpsertTable(
         spark, str(tmp_path / "fast"), ["w", "k"], monotone_col="w"
     )
@@ -227,14 +226,11 @@ def test_monotone_col_must_be_a_key_col(spark, tmp_path):
         )
 
 
-def test_timestamp_monotone_marks_roundtrip_manifest(
-    spark, tmp_path, monkeypatch
-):
+def test_timestamp_monotone_marks_roundtrip_manifest(spark, tmp_path):
     """window_start is a timestamp — the mark must survive the JSON
     manifest and keep ordering (the production shape)."""
     import datetime as dt
 
-    monkeypatch.setattr(sinks, "N_BUCKETS", 1)
     path = str(tmp_path / "t")
     t = UpsertTable(spark, path, ["ws", "k"], monotone_col="ws")
 
@@ -257,7 +253,7 @@ def test_timestamp_monotone_marks_roundtrip_manifest(
     ids=["classic-to-w", "w-to-classic", "t-to-k"],
 )
 def test_reopen_with_different_monotone_col_raises(
-    spark, tmp_path, monkeypatch, written, reopened
+    spark, tmp_path, written, reopened
 ):
     """A table's mode is fixed when it is created: the manifest records
     `monotone_col`, and a reopen in another mode is refused before it
@@ -266,7 +262,6 @@ def test_reopen_with_different_monotone_col_raises(
     no marks, and marks on one column do not bound another — each
     would let a fast append skip the anti-join on a real key
     collision, so none of them is allowed."""
-    monkeypatch.setattr(sinks, "N_BUCKETS", 1)
     path = str(tmp_path / "t")
     keys = ["w", "k", "t"]
     rows = "w int, k int, t int, v int"
@@ -281,24 +276,31 @@ def test_reopen_with_different_monotone_col_raises(
     assert [r.v for r in t.read().collect()] == [1]
 
 
-def test_reopen_with_different_bucket_count_raises(
-    spark, tmp_path, monkeypatch
-):
-    """Bucket assignment is `hash(key) mod N_BUCKETS`, so a table
-    written under one bucket count cannot be merged into or read under
-    another: a key would land in a bucket that does not hold its
-    stored row."""
-    monkeypatch.setattr(sinks, "N_BUCKETS", 2)
-    path = str(tmp_path / "t")
-    t = UpsertTable(spark, path, ["w", "k"], monotone_col="w")
-    t.merge(_batch(spark, 1, range(4)))
-    monkeypatch.setattr(sinks, "N_BUCKETS", 4)
+def test_reopen_with_different_bucket_count_raises(spark, tmp_path):
+    """A table is one leaf stack, recorded as `n_buckets: 1`.  A table
+    written in the older 16-bucket layout keeps most of its rows in
+    buckets 1-15, which this sink never reads, so opening one must
+    raise instead of reading bucket 0 as the whole table."""
+    path = tmp_path / "t"
+    (path / "v=1" / "__bucket=3").mkdir(parents=True)
+    manifest = {
+        "version": 1,
+        "buckets": {"3": [1]},
+        "n_buckets": 16,
+        "monotone_col": "w",
+        "marks": {"3": 1},
+        "pending": [],
+    }
+    for name in ("_CURRENT", "manifest.v1.json"):
+        (path / name).write_text(json.dumps(manifest))
+    t = UpsertTable(spark, str(path), ["w", "k"], monotone_col="w")
     with pytest.raises(ValueError, match="n_buckets"):
-        t.merge(_batch(spark, 1, range(4)))
+        t.merge(_batch(spark, 2, range(4)))
     with pytest.raises(ValueError, match="n_buckets"):
         t.read()
-    monkeypatch.setattr(sinks, "N_BUCKETS", 2)
-    assert len(t.read().collect()) == 4
+    with pytest.raises(ValueError, match="n_buckets"):
+        t.read(version=1)
+    assert json.loads((path / "_CURRENT").read_text()) == manifest
 
 
 def test_timestamp_marks_follow_spark_order_across_dst(
@@ -311,7 +313,6 @@ def test_timestamp_marks_follow_spark_order_across_dst(
     mark of 06:05Z, fast-append it and store the key twice."""
     import time
 
-    monkeypatch.setattr(sinks, "N_BUCKETS", 1)
     path = str(tmp_path / "t")
     t = UpsertTable(spark, path, ["ws", "k"], monotone_col="ws")
 
@@ -347,13 +348,10 @@ def test_monotone_col_of_another_type_raises(spark, tmp_path):
         t.merge(spark.createDataFrame([("a", 1)], "s string, k int"))
 
 
-def test_corrupt_manifest_raises_instead_of_resetting(
-    spark, tmp_path, monkeypatch
-):
+def test_corrupt_manifest_raises_instead_of_resetting(spark, tmp_path):
     """An unreadable _CURRENT is not "no table": treating it as one
     would restart the table at version 1 and flip over the old
     manifest, silently dropping every stored row."""
-    monkeypatch.setattr(sinks, "N_BUCKETS", 2)
     path = str(tmp_path / "t")
     t = UpsertTable(spark, path, ["w", "k"], monotone_col="w")
     t.merge(_batch(spark, 1, range(40)))
@@ -372,9 +370,8 @@ def test_registry_windowed_twins_engage_fast_path(spark):
     twins run their replay through the fast-append sink
     (monotone_col="window_start") and the fast path actually ENGAGES —
     the final manifest records the window_start mode and carries a
-    multi-leaf bucket stack and its marks, proving the second emission
-    batch appended instead of silently falling back to the rewrite
-    path.  (Result parity with the classic sink is covered by the
+    multi-leaf stack and its mark, proving the second emission batch
+    appended instead of silently falling back to the rewrite path.  (Result parity with the classic sink is covered by the
     oracle suites; this pins the mechanism.)"""
     import json
 
@@ -386,7 +383,6 @@ def test_registry_windowed_twins_engage_fast_path(spark):
     assert df.count() > 0
     root = df.inputFiles()[0].split("/v=")[0].replace("file:", "")
     m = _manifest(root)
-    stacks = [e for e in m["buckets"].values() if len(e) > 1]
-    assert stacks, m["buckets"]  # >=1 bucket took a leaf APPEND
+    assert len(m["buckets"]["0"]) > 1, m["buckets"]  # a leaf APPEND
     assert m["monotone_col"] == "window_start"
-    assert m["marks"]
+    assert m["marks"]["0"]

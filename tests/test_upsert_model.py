@@ -1,9 +1,9 @@
 """Property-based model check for the keyed-upsert sink: any sequence
 of merges must leave the table equal to a last-write-wins dict, with
 vacuum keeping the on-disk layout bounded.  Complements the targeted
-tests (idempotent replay, untouched buckets, churn soak) with
-adversarial sequences hypothesis finds — e.g. re-merging an old key
-into a bucket whose version is far behind the manifest's.
+tests (idempotent replay, churn soak) with adversarial sequences
+hypothesis finds — e.g. re-merging an old key into a stack whose
+leaves are far behind the manifest's version.
 """
 
 from __future__ import annotations
@@ -36,7 +36,6 @@ _sequences = st.lists(_batch, min_size=1, max_size=6)
 def test_merge_sequence_matches_dict_model(
     spark, tmp_path_factory, monkeypatch, seq
 ):
-    monkeypatch.setattr(sinks, "N_BUCKETS", 4)
     # no retention time: the layout bound below counts merges
     monkeypatch.setattr(sinks, "RETAIN_S", 0)
     path = str(tmp_path_factory.mktemp("upsert_model"))
@@ -51,8 +50,9 @@ def test_merge_sequence_matches_dict_model(
     got = {r.k: r.v for r in table.read().collect()}
     assert got == model
 
+    # the current leaf plus the one its last merge superseded
     versions = [d for d in os.listdir(path) if d.startswith("v=")]
-    assert len(versions) <= 4 + 1, versions
+    assert len(versions) <= 2, versions
 
 
 # Fast-append mode model check: batches carry a window value that
@@ -82,7 +82,6 @@ _mono_sequences = st.lists(
 def test_monotone_merge_sequence_matches_dict_model(
     spark, tmp_path_factory, monkeypatch, seq
 ):
-    monkeypatch.setattr(sinks, "N_BUCKETS", 4)
     monkeypatch.setattr(sinks, "STACK_MAX", 3)
     path = str(tmp_path_factory.mktemp("upsert_mono_model"))
     table = UpsertTable(spark, path, ["w", "k"], monotone_col="w")
@@ -101,9 +100,9 @@ def test_monotone_merge_sequence_matches_dict_model(
 
         with open(os.path.join(path, "_CURRENT")) as f:
             m = json.load(f)
-        for b, stack in m["buckets"].items():
-            # layout bound: every bucket's stack is capped by STACK_MAX
-            assert 1 <= len(stack) <= 3, (b, stack)
-            for v in stack:
-                leaf = os.path.join(path, f"v={v}", f"__bucket={b}")
-                assert os.path.isdir(leaf), leaf
+        stack = m["buckets"]["0"]
+        # layout bound: the stack is capped by STACK_MAX
+        assert 1 <= len(stack) <= 3, stack
+        for v in stack:
+            leaf = os.path.join(path, f"v={v}", "__bucket=0")
+            assert os.path.isdir(leaf), leaf
