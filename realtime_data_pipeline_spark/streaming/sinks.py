@@ -57,6 +57,23 @@ A snapshot a reader holds — the frame `read()` returns — therefore
 stays readable for `RETAIN_S` seconds after the merge that supersedes
 it, however many merges run meanwhile; `read(version=N)` works while
 N's leaves are still on disk.
+
+Reads.  `read()` and `read(version=N)` return a `Snapshot`: a
+DataFrame over the version's leaves that also carries the table's
+creation id and the leaf versions.  Leaves are immutable, so the two
+together name the snapshot's rows, and what a reader derived from one
+snapshot holds for every later read with the same id and versions
+(`operators/kpis.py` answers dashboard panels that way).  The manifest records, at creation, `table_id`, a
+random creation id: a table deleted and recreated at the same path
+reuses version numbers, so only the id tells the two apart.  Every
+commit records `schema`, the schema of the frame it wrote; reads,
+including the rewrite's read of the stored rows, pass it to Spark
+(which makes every field nullable, as an inferring read would), so
+they start no schema-inference job.  A manifest without either field
+is refused on open.  Readers keep what they derive in memory and write
+nothing into the table directory: a file a reader wrote under `v=<N>/`
+could race a commit's unlink of that version root and recreate it
+outside the pending-delete ledger.
 """
 
 from __future__ import annotations
@@ -65,10 +82,12 @@ import json
 import os
 import shutil
 import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegralType, TimestampType
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+from pyspark.sql.types import IntegralType, StructType, TimestampType
 
 _CURRENT = "_CURRENT"
 # The manifest key of the one leaf stack, and its directory under each
@@ -81,6 +100,28 @@ STACK_MAX = 8
 # Seconds a superseded leaf outlives the merge that superseded it: more
 # than ten times the slowest dashboard refresh measured (about 5 s).
 RETAIN_S = 60.0
+
+
+class Snapshot(ClassicDataFrame):
+    """One version of an UpsertTable: a DataFrame over its leaves that
+    also names them.  Derived frames (`where`, `select`, ...) are plain
+    DataFrames.
+
+    `table_id` is the table's creation id, so a table deleted and
+    recreated at the same path, which reuses version numbers, is a
+    different table.  `versions` are the leaf versions, oldest first.
+    Leaves are immutable, so whatever a reader derives from a snapshot
+    stays true for as long as (`table_id`, `versions`) names it."""
+
+    table_id: str
+    versions: tuple[int, ...]
+
+    @classmethod
+    def _of(cls, spark, schema, leaves: dict[int, str], table_id):
+        df = spark.read.schema(schema).parquet(*leaves.values())
+        snap = cls(df._jdf, spark)
+        snap.table_id, snap.versions = table_id, tuple(leaves)
+        return snap
 
 
 class UpsertTable:
@@ -111,11 +152,13 @@ class UpsertTable:
     def _load(self, name: str) -> dict | None:
         """The manifest file `name`: {"version": int, "buckets": {"0":
         [leaf version, ...]}, "n_buckets": 1, "monotone_col": str |
-        None, "pending": [...], "marks": {"0": int high-water mark}
-        (monotone mode only)}.
+        None, "table_id": creation id, "schema": the schema of the
+        frame the last commit wrote (StructType JSON), "pending": [...], "marks":
+        {"0": int high-water mark} (monotone mode only)}.
         None only when the file does not exist; an unreadable manifest,
-        or one written in another layout or mode, raises rather than
-        passing for an empty or differently keyed table."""
+        or one written in another layout or mode, or without a schema
+        or creation id, raises rather than passing for an empty or
+        differently keyed table."""
         try:
             with open(os.path.join(self.path, name)) as f:
                 m = json.load(f)
@@ -133,6 +176,12 @@ class UpsertTable:
                 raise ValueError(
                     f"table at {self.path} was written with "
                     f"{field}={m.get(field)!r}, opened with {value!r}"
+                )
+        for field in ("schema", "table_id"):
+            if field not in m:
+                raise ValueError(
+                    f"table at {self.path} has a manifest without "
+                    f"{field!r}, written by an older version of this sink"
                 )
         return m
 
@@ -189,6 +238,16 @@ class UpsertTable:
     def _leaves(self, m: dict) -> list[str]:
         return [self._leaf(v) for v in m["buckets"][_STACK]]
 
+    def _snapshot(self, m: dict) -> Snapshot:
+        """The stored rows of manifest `m`, read with the manifest's
+        schema, so the read starts no schema-inference job."""
+        return Snapshot._of(
+            self.spark,
+            StructType.fromJson(m["schema"]),
+            dict(zip(m["buckets"][_STACK], self._leaves(m))),
+            m["table_id"],
+        )
+
     def _mono_image(self, batch: DataFrame) -> F.Column:
         """The monotone column as an engine integer whose order is
         Spark's order of the column."""
@@ -204,10 +263,11 @@ class UpsertTable:
         )
 
     # -- reads ------------------------------------------------------------
-    def read(self, version: int | None = None) -> DataFrame | None:
+    def read(self, version: int | None = None) -> Snapshot | None:
         """Snapshot read.  version=None → current; version=N → time
         travel to the state after merge N, while N's leaves are still
-        on disk.
+        on disk.  Either way the result is a `Snapshot`, read with the
+        schema the manifest records, so the read starts no Spark job.
 
         Held-snapshot contract: the frame names the snapshot's leaves,
         and a merge that supersedes them — one that starts after this
@@ -227,16 +287,15 @@ class UpsertTable:
                     f"no snapshot manifest for version {version}; "
                     f"available: {self.versions()}"
                 )
-        paths = self._leaves(m)
         if version is not None:
-            gone = [p for p in paths if not os.path.isdir(p)]
+            gone = [p for p in self._leaves(m) if not os.path.isdir(p)]
             if gone:
                 raise ValueError(
                     f"version {version} is older than the retention "
                     f"window (RETAIN_S={RETAIN_S} s): {len(gone)} of "
                     "its leaves were deleted"
                 )
-        return self.spark.read.parquet(*paths)
+        return self._snapshot(m)
 
     def versions(self) -> list[int]:
         """Published versions: those with a snapshot manifest on disk,
@@ -290,6 +349,7 @@ class UpsertTable:
             "buckets": {},
             "n_buckets": 1,
             "monotone_col": self.monotone_col,
+            "table_id": uuid.uuid4().hex,
         }
         marks = m.setdefault("marks", {}) if self.monotone_col else {}
         stack = m["buckets"].get(_STACK)
@@ -306,7 +366,7 @@ class UpsertTable:
         )
         merged = batch
         if not append:
-            stored = self.spark.read.parquet(*self._leaves(m))
+            stored = self._snapshot(m)
             merged = batch.unionByName(
                 stored.join(
                     batch.select(self.key_cols), self.key_cols, "left_anti"
@@ -317,6 +377,7 @@ class UpsertTable:
         # of one file per upstream task would grow the file count as
         # O(merges x shuffle_partitions) and drown reads in small files.
         merged.coalesce(1).write.mode("overwrite").parquet(self._leaf(v_new))
+        m["schema"] = merged.schema.jsonValue()
         if self.monotone_col and hi is not None:
             marks[_STACK] = max(marks.get(_STACK, hi), hi)
         if append:

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 from realtime_data_pipeline_spark.session import get_spark
@@ -12,6 +14,27 @@ SF_DIR_MID = "/root/testdata/sf0.01"
 def spark():
     s = get_spark(app_name="rdp-tests", master="local[8]", shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """`spark_jobs(fn)` runs fn() under its own job group and returns
+    (its result, the number of Spark jobs it started)."""
+    sc = spark.sparkContext
+    props = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+
+    def run(fn):
+        group = f"spark-jobs-{uuid.uuid4().hex}"
+        saved = {k: sc.getLocalProperty(k) for k in props}
+        sc.setJobGroup(group, group)
+        try:
+            result = fn()
+        finally:
+            for k, v in saved.items():
+                sc.setLocalProperty(k, v)
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 @pytest.fixture(scope="session")

@@ -9,9 +9,10 @@ pin (a) result equivalence with the classic path on every sequence,
 (c) the STACK_MAX fold, (d) replay/overlap falling back to the
 rewrite path, (e) time travel over stacked leaves, (f) that a table's
 mode and layout are fixed when it is created, (g) that marks
-order timestamps the way Spark does, and (h) that a held snapshot
+order timestamps the way Spark does, (h) that a held snapshot
 outlives the fold that supersedes it by RETAIN_S seconds, not by a
-count of merges.
+count of merges, and (i) that reads use the schema the manifest
+records.
 """
 
 from __future__ import annotations
@@ -301,6 +302,39 @@ def test_reopen_with_different_bucket_count_raises(spark, tmp_path):
     with pytest.raises(ValueError, match="n_buckets"):
         t.read(version=1)
     assert json.loads((path / "_CURRENT").read_text()) == manifest
+
+
+def test_read_uses_the_manifest_schema(spark, tmp_path, spark_jobs):
+    """Every commit records the leaves' schema, as a parquet read
+    returns it, in the manifest.  `read()` reads with it, so it starts
+    no schema-inference job, and its schema is the inferred one."""
+    t = UpsertTable(spark, str(tmp_path / "t"), ["w", "k"], monotone_col="w")
+    t.merge(_batch(spark, 1, range(4)))
+    t.merge(_batch(spark, 2, range(4)))
+    snap, jobs = spark_jobs(t.read)
+    assert jobs == 0
+    assert isinstance(snap, sinks.Snapshot) and snap.versions == (1, 2)
+    leaves = t._leaves(_manifest(t.path))
+    assert snap.schema == spark.read.parquet(*leaves).schema
+    assert isinstance(t.read(version=1), sinks.Snapshot)
+    assert _snapshot(t) == [(w, k, w * 100 + k) for w in (1, 2) for k in range(4)]
+
+
+@pytest.mark.parametrize("field", ["schema", "table_id"])
+def test_manifest_without_schema_or_creation_id_raises(spark, tmp_path, field):
+    """A manifest from before the schema and the creation id were
+    recorded is refused on open, like the 16-bucket layout."""
+    path = str(tmp_path / "t")
+    t = UpsertTable(spark, path, ["w", "k"], monotone_col="w")
+    t.merge(_batch(spark, 1, range(4)))
+    m = _manifest(path)
+    del m[field]
+    with open(os.path.join(path, "_CURRENT"), "w") as f:
+        json.dump(m, f)
+    with pytest.raises(ValueError, match=field):
+        t.read()
+    with pytest.raises(ValueError, match=field):
+        t.merge(_batch(spark, 2, range(4)))
 
 
 def test_timestamp_marks_follow_spark_order_across_dst(
