@@ -11,7 +11,7 @@ text analysis, multimodal columns) designed for 100 TB scale.
 Layout:
     session     — SparkSession factory (AQE, UTC, Arrow)
     tables      — testdata loaders (schema fixes, ns→µs timestamps)
-    operators/  — windowed aggs, KPIs, relational analytics
+    operators/  — KPIs, relational analytics
     functions/  — text analysis, dedup, similarity primitives
     sources/    — synthetic event generator, Kafka adapters
     streaming/  — watermark+window pipeline, upsert sink, monitor

@@ -29,8 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from realtime_data_pipeline_spark.operators import ranks, scd, snapshot, windows
-from realtime_data_pipeline_spark.plans.registry import _events, _t, register
+from realtime_data_pipeline_spark.operators import ranks, scd, snapshot
+from realtime_data_pipeline_spark.plans.registry import _events, _t, item_key, register
 
 # ---------------------------------------------------------------------------
 # Corpus snapshot diff (added / removed / changed / unchanged)
@@ -158,7 +158,7 @@ def q_purchase_window_views(spark, sf_dir):
     e = _events(spark, sf_dir).select(
         "event_id",
         "ts",
-        windows.item_key().alias("item"),
+        item_key().alias("item"),
         "event_type",
         # NTZ→timestamp cast is exact (session tz pinned UTC — the
         # plans/training.py:518 convention for epoch_us parity)
@@ -328,7 +328,7 @@ def q_pagerank_top_items(spark, sf_dir):
     # DuckDB NULLS LAST): filter identically in both
     ev = _events(spark, sf_dir).where(F.col("ts").isNotNull())
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    item = windows.item_key()
+    item = item_key()
     seq = ev.select(
         item.alias("item"), F.lead(item).over(w).alias("nxt")
     )
@@ -707,7 +707,7 @@ def q_join_skew_report(spark, sf_dir):
             "events.user_id",
             ev.select(F.col("user_id").cast("string").alias("k")),
         ),
-        ("events.item", ev.select(windows.item_key().alias("k"))),
+        ("events.item", ev.select(item_key().alias("k"))),
         (
             "orders.o_custkey",
             _t(spark, sf_dir, "orders").select(
@@ -1137,7 +1137,7 @@ def q_data_contract_violations(spark, sf_dir):
         ).alias("etype_bad"),
         c(F.col("value") < 0).alias("val_neg"),
         c(
-            F.col("props").isNull() | windows.item_key().isNull()
+            F.col("props").isNull() | item_key().isNull()
         ).alias("props_bad"),
     )
     ev_rules = ev_agg.selectExpr(
@@ -1798,9 +1798,9 @@ def q_item_covisitation_pairs(spark, sf_dir):
     base = ev.where(
         F.col("user_id").isNotNull()
         & F.col("ts").isNotNull()
-        & windows.item_key().isNotNull()
+        & item_key().isNotNull()
     ).select(
-        "user_id", windows.item_key().alias("item"), "ts", "event_id"
+        "user_id", item_key().alias("item"), "ts", "event_id"
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     us = F.unix_micros(F.col("ts").cast("timestamp"))

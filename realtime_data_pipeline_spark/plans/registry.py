@@ -23,7 +23,8 @@ from pyspark.sql import functions as F
 
 from realtime_data_pipeline_spark import session as _session
 from realtime_data_pipeline_spark import tables
-from realtime_data_pipeline_spark.operators import kpis, windows
+from realtime_data_pipeline_spark.operators import kpis
+from realtime_data_pipeline_spark.streaming.pipeline import windowed_stream_counts
 
 
 @dataclass(frozen=True)
@@ -85,23 +86,48 @@ def user_key() -> Column:
     return F.concat(F.lit("user_"), F.col("user_id").cast("string"))
 
 
+def item_key() -> Column:
+    """Item-key surrogate: the testdata carries the reference's item_id
+    inside the JSON props column ($.k) — extract with a JVM-side JSON
+    path (no UDF)."""
+    return F.get_json_object(F.col("props"), "$.k")
+
+
 def item_key_col() -> Column:
-    # Reference item ids are strings "item_N"; testdata hides the item id
-    # in props JSON ($.k) — JVM-side JSON path extraction, no UDF.
-    return F.concat(F.lit("item_"), windows.item_key())
+    # Reference item ids are strings "item_N"
+    return F.concat(F.lit("item_"), item_key())
+
+
+def _window_counts(
+    events: DataFrame, key: Column, key_name: str, slide: str | None
+) -> DataFrame:
+    """A1/A2/W2 over the events table: the stream's window operator,
+    run as a batch (consumer/consumer.py:116-140)."""
+    keyed = (
+        events
+        # Materialize the (possibly derived, e.g. JSON-extracted) key
+        # ONCE before using it twice — referenced directly in both the
+        # filter and the group key, get_json_object would be evaluated
+        # twice per row (~20% of A2's runtime at sf0.1).  Also prunes
+        # the scan to exactly (ts, key).
+        .select(F.col("ts"), key.alias(key_name))
+        # P4: null hygiene before aggregation (key or ts null → drop)
+        .where(F.col("ts").isNotNull() & F.col(key_name).isNotNull())
+    )
+    return windowed_stream_counts(
+        keyed, key_name, ts_col="ts", slide=slide, watermark=None
+    )
 
 
 def user_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1: sliding 10min/5min count per user (string key)."""
-    return windows.sliding_window_counts(
-        _events(spark, sf_dir), user_key(), "user_id"
-    )
+    return _window_counts(_events(spark, sf_dir), user_key(), "user_id", "5 minutes")
 
 
 def item_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2: sliding 10min/5min count per item-surrogate."""
-    return windows.sliding_window_counts(
-        _events(spark, sf_dir), item_key_col(), "item_id"
+    return _window_counts(
+        _events(spark, sf_dir), item_key_col(), "item_id", "5 minutes"
     )
 
 
@@ -174,9 +200,7 @@ def q_sliding_item_counts(spark, sf_dir):
     doc="W2 tumbling variant of the window operator (consumer/consumer.py:117)",
 )
 def q_tumbling_user_counts(spark, sf_dir):
-    return windows.tumbling_window_counts(
-        _events(spark, sf_dir), user_key(), "user_id"
-    )
+    return _window_counts(_events(spark, sf_dir), user_key(), "user_id", None)
 
 
 # ---------------------------------------------------------------------------
@@ -291,7 +315,7 @@ def q_null_hygiene(spark, sf_dir):
     clean = (
         F.col("ts").isNotNull()
         & F.col("user_id").isNotNull()
-        & windows.item_key().isNotNull()
+        & item_key().isNotNull()
     )
     return ev.agg(
         F.count("*").alias("n_total"),

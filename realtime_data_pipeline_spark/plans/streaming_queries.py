@@ -57,44 +57,14 @@ def q_streaming_replay_user_counts(spark, sf_dir):
         F.col("ts").cast("timestamp").alias("timestamp"),
     ).where(F.col("user_id").isNotNull() & F.col("timestamp").isNotNull())
 
-    base = scratch_dir(prefix="rdp_stream_")
-    replay = os.path.join(base, "replay")
-    # Single file → all real events in one micro-batch, so no intermediate
-    # watermark advance can drop out-of-order rows; the sentinel's own
-    # batch then flushes every window.  (Test-determinism measure only.)
-    # r15: max(timestamp) rides the replay write as an Observation —
-    # one corpus pass builds the file AND the sentinel bound (the
-    # separate agg job re-read the whole input per query).
-    obs = Observation()
-    events.observe(obs, F.max("timestamp").alias("m")).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(replay)
-    max_ts = obs.get["m"]
-    sentinel = spark.createDataFrame(
-        [(SENTINEL, SENTINEL, "flush", max_ts + dt.timedelta(days=2))],
-        schema=EVENT_SCHEMA,
-    )
-    sentinel.coalesce(1).write.mode("append").parquet(replay)
-
-    # maxFilesPerTrigger=1 → the sentinel lands in its own final batch,
-    # advancing the watermark so every real window is finalized/emitted.
+    base, replay = _replay_dir(events, spark, EVENT_SCHEMA)
     stream = file_replay_stream(spark, replay, EVENT_SCHEMA, max_files_per_trigger=1)
     agg = windowed_stream_counts(stream, "user_id")
-    # Deliberately still the CLASSIC sink: this face is parity-local
-    # (outside the r14 driver window), and the changed-plan-first rule
-    # requires any plan change to land driver-hashed the same round —
-    # switch to monotone_col="window_start" when it rotates back in
-    # (r15 candidate; the four in-window twins switched in r14).
+    # The classic rewrite sink: this twin keeps the rewrite path on a
+    # windowed stream under the oracle, while the other windowed twins
+    # take the fast-append path.
     table = UpsertTable(spark, os.path.join(base, "table"), KEYS)
-    q = start_upsert_query(
-        agg,
-        table,
-        os.path.join(base, "ckpt"),
-        "replay_user_counts",
-        trigger_available_now=True,
-    )
-    while q.isActive:
-        q.awaitTermination(5)
+    _drain(agg, table, base, "replay_user_counts")
     return table.read().where(F.col("user_id") != SENTINEL)
 
 
@@ -110,34 +80,64 @@ DEDUP_SCHEMA = StructType(
 _WIN_US = 600_000_000  # 10 minutes
 
 
-def _replay_dir(events, spark, schema, duplicate: bool = False):
+def _dedup_events(spark, sf_dir):
+    """The events table in DEDUP_SCHEMA's shape, rows with a user and
+    a timestamp only."""
+    return _events(spark, sf_dir).select(
+        F.col("event_id").cast("string").alias("event_id"),
+        F.concat(F.lit("user_"), F.col("user_id").cast("string")).alias("user_id"),
+        F.col("event_type").alias("interaction_type"),
+        F.col("ts").cast("timestamp").alias("timestamp"),
+    ).where(F.col("user_id").isNotNull() & F.col("timestamp").isNotNull())
+
+
+def _replay_dir(
+    events, spark, schema, duplicate: bool = False, sentinel_types=("flush",)
+):
     """Write events (optionally doubled — simulated at-least-once
-    redelivery) as batch 1, then a far-future sentinel as batch 2 that
-    advances the watermark past every real window."""
+    redelivery) as one file, then far-future sentinel rows, one per
+    entry of `sentinel_types` (their `interaction_type`), as a second.
+
+    Read with maxFilesPerTrigger=1, every real event lands in one
+    micro-batch, so no intermediate watermark advance can drop
+    out-of-order rows; the sentinels' own batch then advances the
+    watermark past every real window.  A stream filtered on
+    `interaction_type` (each side of a join) needs a sentinel of a kept
+    type: Catalyst pushes filters below the watermark operator, so a
+    filtered-out sentinel would advance nothing."""
     base = scratch_dir(prefix="rdp_stream_")
     replay = os.path.join(base, "replay")
     payload = events.unionAll(events) if duplicate else events
-    # max(timestamp) rides the write (r15, same idiom as the CC loop's
-    # convergence metric): no second pass over the input per replay.
+    # max(timestamp) rides the write: no second pass over the input
     obs = Observation()
     payload.observe(obs, F.max("timestamp").alias("m")).coalesce(1).write.mode(
         "overwrite"
     ).parquet(replay)
-    max_ts = obs.get["m"]
-    sentinel_row = [None] * len(schema.fields)
-    names = [f.name for f in schema.fields]
-    sentinel_row[names.index("user_id")] = SENTINEL
-    sentinel_row[names.index("timestamp")] = max_ts + dt.timedelta(days=2)
-    if "event_id" in names:
-        sentinel_row[names.index("event_id")] = SENTINEL
-    if "item_id" in names:
-        sentinel_row[names.index("item_id")] = SENTINEL
-    if "interaction_type" in names:
-        sentinel_row[names.index("interaction_type")] = "flush"
-    spark.createDataFrame([tuple(sentinel_row)], schema=schema).coalesce(
-        1
-    ).write.mode("append").parquet(replay)
+    fields = dict.fromkeys(("event_id", "user_id", "item_id"), SENTINEL)
+    fields["timestamp"] = obs.get["m"] + dt.timedelta(days=2)
+    rows = [
+        tuple({**fields, "interaction_type": kind}.get(f.name) for f in schema.fields)
+        for kind in sentinel_types
+    ]
+    spark.createDataFrame(rows, schema=schema).coalesce(1).write.mode(
+        "append"
+    ).parquet(replay)
     return base, replay
+
+
+def _drain(agg, table, base, name, output_mode="append"):
+    """Run `agg` into `table` under an availableNow trigger,
+    checkpointed below `base`, until the replay is drained."""
+    q = start_upsert_query(
+        agg,
+        table,
+        os.path.join(base, "ckpt"),
+        name,
+        trigger_available_now=True,
+        output_mode=output_mode,
+    )
+    while q.isActive:
+        q.awaitTermination(5)
 
 
 @register(
@@ -158,12 +158,7 @@ def _replay_dir(events, spark, schema, duplicate: bool = False):
     tags=("streaming",),
 )
 def q_streaming_dedup_user_counts(spark, sf_dir):
-    events = _events(spark, sf_dir).select(
-        F.col("event_id").cast("string").alias("event_id"),
-        F.concat(F.lit("user_"), F.col("user_id").cast("string")).alias("user_id"),
-        F.col("event_type").alias("interaction_type"),
-        F.col("ts").cast("timestamp").alias("timestamp"),
-    ).where(F.col("user_id").isNotNull() & F.col("timestamp").isNotNull())
+    events = _dedup_events(spark, sf_dir)
 
     base, replay = _replay_dir(events, spark, DEDUP_SCHEMA, duplicate=True)
     stream = file_replay_stream(spark, replay, DEDUP_SCHEMA, max_files_per_trigger=1)
@@ -172,20 +167,12 @@ def q_streaming_dedup_user_counts(spark, sf_dir):
     )
     agg = windowed_stream_counts(deduped, "user_id", slide=None, watermark=None)
     # append-mode finalized windows are non-decreasing in window_start
-    # across merges -> fast-append sink (r13 soak: 5x per-batch at 10x
-    # stream length; results proven identical to the classic path)
+    # across merges -> fast-append sink (same results as the rewrite
+    # path, without rewriting the table on every merge)
     table = UpsertTable(
         spark, os.path.join(base, "table"), KEYS, monotone_col="window_start"
     )
-    q = start_upsert_query(
-        agg,
-        table,
-        os.path.join(base, "ckpt"),
-        "dedup_user_counts",
-        trigger_available_now=True,
-    )
-    while q.isActive:
-        q.awaitTermination(5)
+    _drain(agg, table, base, "dedup_user_counts")
     return table.read().where(F.col("user_id") != SENTINEL)
 
 
@@ -207,27 +194,13 @@ def q_streaming_dedup_user_counts(spark, sf_dir):
 def q_streaming_running_user_totals(spark, sf_dir):
     from realtime_data_pipeline_spark.streaming.stateful import running_user_totals
 
-    events = _events(spark, sf_dir).select(
-        F.col("event_id").cast("string").alias("event_id"),
-        F.concat(F.lit("user_"), F.col("user_id").cast("string")).alias("user_id"),
-        F.col("event_type").alias("interaction_type"),
-        F.col("ts").cast("timestamp").alias("timestamp"),
-    ).where(F.col("user_id").isNotNull() & F.col("timestamp").isNotNull())
+    events = _dedup_events(spark, sf_dir)
 
     base, replay = _replay_dir(events, spark, DEDUP_SCHEMA)
     stream = file_replay_stream(spark, replay, DEDUP_SCHEMA, max_files_per_trigger=1)
     totals = running_user_totals(stream)
     table = UpsertTable(spark, os.path.join(base, "table"), ["user_id"])
-    q = start_upsert_query(
-        totals,
-        table,
-        os.path.join(base, "ckpt"),
-        "running_user_totals",
-        trigger_available_now=True,
-        output_mode="update",
-    )
-    while q.isActive:
-        q.awaitTermination(5)
+    _drain(totals, table, base, "running_user_totals", output_mode="update")
     return table.read().where(F.col("user_id") != SENTINEL)
 
 
@@ -251,32 +224,13 @@ def q_streaming_running_user_totals(spark, sf_dir):
     tags=("streaming",),
 )
 def q_streaming_click_purchase_join(spark, sf_dir):
-    events = _events(spark, sf_dir).select(
-        F.col("event_id").cast("string").alias("event_id"),
-        F.concat(F.lit("user_"), F.col("user_id").cast("string")).alias("user_id"),
-        F.col("event_type").alias("interaction_type"),
-        F.col("ts").cast("timestamp").alias("timestamp"),
-    ).where(F.col("user_id").isNotNull() & F.col("timestamp").isNotNull())
+    events = _dedup_events(spark, sf_dir)
 
-    base = scratch_dir(prefix="rdp_stream_")
-    replay = os.path.join(base, "replay")
-    obs = Observation()
-    events.observe(obs, F.max("timestamp").alias("m")).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(replay)
-    # Sentinel rows pass BOTH event-type filters so the watermark of each
-    # join side advances past every real event (a filtered-out sentinel
-    # would advance nothing: Catalyst pushes filters below the watermark
-    # operator).  They join only each other; excluded on read-back.
-    max_ts = obs.get["m"]
-    flush_ts = max_ts + dt.timedelta(days=2)
-    sentinel = spark.createDataFrame(
-        [(SENTINEL, SENTINEL, "click", flush_ts),
-         (SENTINEL, SENTINEL, "purchase", flush_ts)],
-        schema=DEDUP_SCHEMA,
+    # Sentinels pass both event-type filters, so both sides' watermarks
+    # advance; they join only each other and are excluded on read-back.
+    base, replay = _replay_dir(
+        events, spark, DEDUP_SCHEMA, sentinel_types=("click", "purchase")
     )
-    sentinel.coalesce(1).write.mode("append").parquet(replay)
-
     stream = file_replay_stream(spark, replay, DEDUP_SCHEMA, max_files_per_trigger=1)
     clicks = (
         stream.withWatermark("timestamp", "10 minutes")
@@ -304,15 +258,7 @@ def q_streaming_click_purchase_join(spark, sf_dir):
     ).select("click_id", "purchase_id", "user_id", "click_ts", "purchase_ts")
 
     table = UpsertTable(spark, os.path.join(base, "table"), ["click_id", "purchase_id"])
-    q = start_upsert_query(
-        joined,
-        table,
-        os.path.join(base, "ckpt"),
-        "click_purchase_join",
-        trigger_available_now=True,
-    )
-    while q.isActive:
-        q.awaitTermination(5)
+    _drain(joined, table, base, "click_purchase_join")
     return table.read().where(F.col("user_id") != SENTINEL)
 
 
@@ -346,12 +292,7 @@ def q_streaming_click_purchase_join(spark, sf_dir):
     tags=("streaming",),
 )
 def q_streaming_session_counts(spark, sf_dir):
-    events = _events(spark, sf_dir).select(
-        F.col("event_id").cast("string").alias("event_id"),
-        F.concat(F.lit("user_"), F.col("user_id").cast("string")).alias("user_id"),
-        F.col("event_type").alias("interaction_type"),
-        F.col("ts").cast("timestamp").alias("timestamp"),
-    ).where(F.col("user_id").isNotNull() & F.col("timestamp").isNotNull())
+    events = _dedup_events(spark, sf_dir)
 
     base, replay = _replay_dir(events, spark, DEDUP_SCHEMA)
     stream = file_replay_stream(spark, replay, DEDUP_SCHEMA, max_files_per_trigger=1)
@@ -369,33 +310,23 @@ def q_streaming_session_counts(spark, sf_dir):
             "n_events",
         )
     )
-    # Classic sink (changed-plan-first: parity-local this round).  A
-    # session window's start is NOT width-tied to its end, so unlike
-    # the fixed-width twins, later-finalized sessions can START
-    # earlier than already-stored ones — monotone_col would be sound
-    # (the mark test just never proves eligibility) but mostly
-    # useless; this face stays on the rewrite path by design.
+    # Classic rewrite sink.  A session window's start is not tied to
+    # its end, so unlike the fixed-width twins, later-finalized
+    # sessions can START earlier than already-stored ones —
+    # monotone_col would be sound but would rarely engage.
     table = UpsertTable(
         spark,
         os.path.join(base, "table"),
         ["session_start", "session_end", "user_id"],
     )
-    q = start_upsert_query(
-        agg,
-        table,
-        os.path.join(base, "ckpt"),
-        "session_counts",
-        trigger_available_now=True,
-    )
-    while q.isActive:
-        q.awaitTermination(5)
+    _drain(agg, table, base, "session_counts")
     return table.read().where(F.col("user_id") != SENTINEL)
 
 
 # The wire path's P4 null filter (parse_events) drops rows with a NULL
 # item_id TOO — unlike the plain replay, whose oracle USER_AGG_CTE only
 # requires (ts, user_id).  The oracle must carry the same predicate or
-# NULL-props rows diverge (caught by the NULL-injection harness, r6).
+# NULL-props rows diverge (the NULL-injection parity tests catch it).
 _WIRE_USER_AGG_CTE = USER_AGG_CTE.replace(
     "WHERE ts IS NOT NULL AND user_id IS NOT NULL",
     "WHERE ts IS NOT NULL AND user_id IS NOT NULL "
@@ -464,15 +395,7 @@ def q_streaming_json_wire_counts(spark, sf_dir):
     table = UpsertTable(
         spark, os.path.join(base, "table"), KEYS, monotone_col="window_start"
     )
-    q = start_upsert_query(
-        agg,
-        table,
-        os.path.join(base, "ckpt"),
-        "json_wire_counts",
-        trigger_available_now=True,
-    )
-    while q.isActive:
-        q.awaitTermination(5)
+    _drain(agg, table, base, "json_wire_counts")
     return table.read().where(F.col("user_id") != SENTINEL)
 
 
@@ -498,29 +421,13 @@ def q_streaming_json_wire_counts(spark, sf_dir):
     tags=("streaming",),
 )
 def q_streaming_purchase_attribution_outer(spark, sf_dir):
-    events = _events(spark, sf_dir).select(
-        F.col("event_id").cast("string").alias("event_id"),
-        F.concat(F.lit("user_"), F.col("user_id").cast("string")).alias("user_id"),
-        F.col("event_type").alias("interaction_type"),
-        F.col("ts").cast("timestamp").alias("timestamp"),
-    ).where(F.col("user_id").isNotNull() & F.col("timestamp").isNotNull())
+    events = _dedup_events(spark, sf_dir)
 
-    base = scratch_dir(prefix="rdp_stream_")
-    replay = os.path.join(base, "replay")
-    obs = Observation()
-    events.observe(obs, F.max("timestamp").alias("m")).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(replay)
-    max_ts = obs.get["m"]
-    flush_ts = max_ts + dt.timedelta(days=2)
     # Sentinels pass both side filters so both watermarks advance and
     # the unmatched-left rows flush; excluded on read-back.
-    spark.createDataFrame(
-        [(SENTINEL, SENTINEL, "click", flush_ts),
-         (SENTINEL, SENTINEL, "purchase", flush_ts)],
-        schema=DEDUP_SCHEMA,
-    ).coalesce(1).write.mode("append").parquet(replay)
-
+    base, replay = _replay_dir(
+        events, spark, DEDUP_SCHEMA, sentinel_types=("click", "purchase")
+    )
     stream = file_replay_stream(spark, replay, DEDUP_SCHEMA, max_files_per_trigger=1)
     purchases = (
         stream.withWatermark("timestamp", "10 minutes")
@@ -562,15 +469,7 @@ def q_streaming_purchase_attribution_outer(spark, sf_dir):
     table = UpsertTable(
         spark, os.path.join(base, "table"), ["purchase_id", "click_id"]
     )
-    q = start_upsert_query(
-        joined,
-        table,
-        os.path.join(base, "ckpt"),
-        "purchase_attribution_outer",
-        trigger_available_now=True,
-    )
-    while q.isActive:
-        q.awaitTermination(5)
+    _drain(joined, table, base, "purchase_attribution_outer")
     return table.read().where(F.col("user_id") != SENTINEL)
 
 
@@ -632,16 +531,7 @@ def q_streaming_doc_quality_counts(spark, sf_dir):
         )
     )
     table = UpsertTable(spark, os.path.join(base, "table"), ["lang"])
-    q = start_upsert_query(
-        agg,
-        table,
-        os.path.join(base, "ckpt"),
-        "doc_quality_counts",
-        trigger_available_now=True,
-        output_mode="update",
-    )
-    while q.isActive:
-        q.awaitTermination(5)
+    _drain(agg, table, base, "doc_quality_counts", output_mode="update")
     return table.read()
 
 
@@ -932,15 +822,7 @@ def q_streaming_enriched_segment_counts(spark, sf_dir):
         # streaming_dedup_user_counts; identical-results contract)
         monotone_col="window_start",
     )
-    q = start_upsert_query(
-        agg,
-        table,
-        os.path.join(base, "ckpt"),
-        "enriched_segment_counts",
-        trigger_available_now=True,
-    )
-    while q.isActive:
-        q.awaitTermination(5)
+    _drain(agg, table, base, "enriched_segment_counts")
     return table.read()
 
 
@@ -1109,16 +991,7 @@ def q_streaming_model_scored_counts(spark, sf_dir):
         F.round(F.max("score"), 6).alias("max_score"),
     )
     table = UpsertTable(spark, os.path.join(base, "table"), ["source"])
-    q = start_upsert_query(
-        agg,
-        table,
-        os.path.join(base, "ckpt"),
-        "model_scored_counts",
-        trigger_available_now=True,
-        output_mode="update",
-    )
-    while q.isActive:
-        q.awaitTermination(5)
+    _drain(agg, table, base, "model_scored_counts", output_mode="update")
     return table.read()
 
 
@@ -1164,16 +1037,7 @@ def q_streaming_frequent_terms(spark, sf_dir):
         .agg(F.count("*").alias("cnt"))
     )
     table = UpsertTable(spark, os.path.join(base, "table"), ["term"])
-    q = start_upsert_query(
-        counts,
-        table,
-        os.path.join(base, "ckpt"),
-        "frequent_terms",
-        trigger_available_now=True,
-        output_mode="update",
-    )
-    while q.isActive:
-        q.awaitTermination(5)
+    _drain(counts, table, base, "frequent_terms", output_mode="update")
     t = table.read()
     n_tok = t.agg(F.sum("cnt").alias("n_tok"))
     phi = 0.005  # mirrors northstar._FREQ_PHI (asserted in the attach below)

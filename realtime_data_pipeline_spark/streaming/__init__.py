@@ -4,6 +4,5 @@ from realtime_data_pipeline_spark.streaming.pipeline import (  # noqa: F401
     windowed_stream_counts,
 )
 from realtime_data_pipeline_spark.streaming.sinks import (  # noqa: F401
-    upsert_sink,
     start_upsert_query,
 )

@@ -3,14 +3,14 @@
 The reference polls query.lastProgress every 30 s and hand-parses
 Kafka offset JSON to compute per-partition lag
 (consumer/consumer.py:185-286).  We use the structured APIs instead:
-a StreamingQueryListener receiving typed progress events — no string
-parsing, no per-batch dedup bookkeeping (the listener fires once per
-batch by construction).
+a StreamingQueryListener receiving typed progress events, with lag
+read from each source's own progress metrics — no offset parsing, no
+per-batch dedup bookkeeping (the listener fires once per batch by
+construction).
 """
 
 from __future__ import annotations
 
-import json
 import logging
 from dataclasses import dataclass, field
 
@@ -27,7 +27,10 @@ class BatchProgress:
     num_input_rows: int
     input_rows_per_second: float
     process_rows_per_second: float
-    lag: int  # summed max(0, latest-processed) over source partitions
+    # offsets the source is behind its latest offset, as the source
+    # reports it: Kafka's maxOffsetsBehindLatest (its worst partition),
+    # summed over sources; 0 for a source that reports none (files)
+    lag: int
     # input rows the stateful operators dropped as later than the
     # watermark, summed over operators
     dropped_by_watermark: int
@@ -45,16 +48,16 @@ class ProgressMonitor(StreamingQueryListener):
 
     def onQueryProgress(self, event):
         p = event.progress
-        lag = 0
-        for src in p.sources:
-            lag += _source_lag(src.endOffset, src.latestOffset)
         b = BatchProgress(
             query_name=p.name or str(p.id),
             batch_id=p.batchId,
             num_input_rows=p.numInputRows,
             input_rows_per_second=p.inputRowsPerSecond or 0.0,
             process_rows_per_second=p.processedRowsPerSecond or 0.0,
-            lag=lag,
+            lag=sum(
+                int(src.metrics.get("maxOffsetsBehindLatest", 0))
+                for src in p.sources
+            ),
             dropped_by_watermark=sum(
                 op.numRowsDroppedByWatermark for op in p.stateOperators
             ),
@@ -77,28 +80,6 @@ class ProgressMonitor(StreamingQueryListener):
     @property
     def total_rows(self) -> int:
         return sum(b.num_input_rows for b in self.history)
-
-
-def _source_lag(end_offset: str | None, latest_offset: str | None) -> int:
-    """Per-partition lag = max(0, latest - processed), summed — the
-    reference's arithmetic (consumer/consumer.py:254-267) on structured
-    offsets.  Kafka offsets arrive as {"topic": {"0": n, ...}}."""
-    if not end_offset or not latest_offset:
-        return 0
-    try:
-        end, latest = json.loads(end_offset), json.loads(latest_offset)
-    except (ValueError, TypeError):
-        return 0
-    if not isinstance(end, dict) or not isinstance(latest, dict):
-        return 0
-    lag = 0
-    for topic, parts in latest.items():
-        if not isinstance(parts, dict):
-            continue
-        done = end.get(topic, {})
-        for part, off in parts.items():
-            lag += max(0, int(off) - int(done.get(part, 0)))
-    return lag
 
 
 def attach_monitor(spark: SparkSession) -> ProgressMonitor:

@@ -105,10 +105,11 @@ def windowed_stream_counts(
     (consumer/consumer.py:112-140).
 
     Works identically on batch DataFrames (withWatermark is a no-op in
-    batch) — the basis of the batch–stream parity tests.  Pass
-    watermark=None when the input already carries one (an upstream
-    stateful operator such as dropDuplicatesWithinWatermark) — Spark
-    forbids redefining it.
+    batch) — the basis of the batch–stream parity tests, and the
+    registry's batch A1/A2/W2 queries run it as is.  slide=None gives
+    tumbling windows (W2).  Pass watermark=None when the input already
+    carries one (an upstream stateful operator such as
+    dropDuplicatesWithinWatermark) — Spark forbids redefining it.
     """
     win = (
         F.window(F.col(ts_col), window, slide)

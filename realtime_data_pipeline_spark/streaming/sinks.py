@@ -13,11 +13,8 @@ Layout and why:
   os.replace.  Checkpoint replay of a micro-batch re-merges the same
   rows under the same keys — idempotent, exactly the property the
   reference gets from Mongo upsert (SURVEY §1.4.3);
-* the table used to be split over 16 hash buckets so a merge could
-  rewrite only the buckets its keys touch.  The measured traffic never
-  used that: every perfbench merge touched all 16, so each merge wrote
-  16 tiny leaves per table and a read listed 96–240 of them.  One
-  stack keeps the manifest format (one bucket, "0"; `n_buckets` 1).
+* the manifest keeps a one-bucket form (bucket "0", `n_buckets` 1)
+  because perfbench's traced run reads `buckets` from `_CURRENT`.
 
 At scale this slot is filled by a real table format (Delta/Iceberg
 MERGE INTO — the same keyed upsert with file-level pruning); the
@@ -387,15 +384,6 @@ class UpsertTable:
             self._commit(m, [v_new], stack)
 
 
-def upsert_sink(table: UpsertTable):
-    """foreachBatch hook: merge each micro-batch by composite key (W4)."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        table.merge(batch_df)
-
-    return _sink
-
-
 def start_upsert_query(
     agg: DataFrame,
     table: UpsertTable,
@@ -405,7 +393,8 @@ def start_upsert_query(
     output_mode: str = "append",
 ):
     """W3+W4: streaming write into the keyed-upsert table, checkpointed
-    for exactly-once-ish replay (consumer/consumer.py:147-159).
+    for exactly-once-ish replay (consumer/consumer.py:147-159); each
+    micro-batch merges by composite key.
 
     append (default) emits finalized windows only; update is for
     arbitrary-stateful operators (applyInPandasWithState) that re-emit
@@ -416,7 +405,7 @@ def start_upsert_query(
         agg.writeStream.outputMode(output_mode)
         .queryName(query_name)
         .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(upsert_sink(table))
+        .foreachBatch(lambda batch, _id: table.merge(batch))
     )
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)

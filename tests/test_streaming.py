@@ -173,6 +173,66 @@ def test_monitor_collects_progress(parity_setup):
     assert all(b.lag >= 0 for b in mon.history)
 
 
+def _progress_event(batch_id, source, dropped):
+    """A QueryProgressEvent as Spark serializes one: `source` is one
+    SourceProgress dict, `dropped` the late drops per state operator."""
+    from pyspark.sql.streaming.listener import (
+        QueryProgressEvent,
+        StreamingQueryProgress,
+    )
+
+    op = {
+        "operatorName": "stateStoreSave", "numRowsTotal": 5,
+        "numRowsUpdated": 1, "numRowsRemoved": 0, "allUpdatesTimeMs": 1,
+        "allRemovalsTimeMs": 0, "commitTimeMs": 1, "memoryUsedBytes": 100,
+        "numShufflePartitions": 4, "numStateStoreInstances": 4,
+    }
+    return QueryProgressEvent(StreamingQueryProgress.fromJson({
+        "id": "00000000-0000-0000-0000-000000000001",
+        "runId": "00000000-0000-0000-0000-000000000002",
+        "name": "lag", "timestamp": "2024-06-01T00:00:00.000Z",
+        "batchId": batch_id, "batchDuration": 10,
+        "numInputRows": source["numInputRows"],
+        "inputRowsPerSecond": 1.0, "processedRowsPerSecond": 2.0,
+        "stateOperators": [{**op, "numRowsDroppedByWatermark": d} for d in dropped],
+        "sources": [source],
+        "sink": {"description": "ForeachBatchSink", "numOutputRows": -1},
+    }))
+
+
+def test_monitor_reads_lag_from_source_metrics():
+    """Lag is what each source reports of itself: Kafka's
+    maxOffsetsBehindLatest, and 0 for the file source, which reports
+    no lag metric (its offsets are a log position, not a backlog)."""
+    from realtime_data_pipeline_spark.streaming.monitor import ProgressMonitor
+
+    kafka = {
+        "description": "KafkaV2[Subscribe[interactions]]",
+        "startOffset": {"interactions": {"0": 100, "1": 90}},
+        "endOffset": {"interactions": {"0": 110, "1": 95}},
+        "latestOffset": {"interactions": {"0": 150, "1": 120}},
+        "numInputRows": 15, "inputRowsPerSecond": 1.0,
+        "processedRowsPerSecond": 2.0,
+        "metrics": {
+            "avgOffsetsBehindLatest": "32.5",
+            "maxOffsetsBehindLatest": "40",
+            "minOffsetsBehindLatest": "25",
+        },
+    }
+    files = {
+        "description": "FileStreamSource[file:/replay]",
+        "startOffset": {"logOffset": 2}, "endOffset": {"logOffset": 3},
+        "latestOffset": None, "numInputRows": 7,
+        "inputRowsPerSecond": 1.0, "processedRowsPerSecond": 2.0,
+    }
+    mon = ProgressMonitor()
+    mon.onQueryProgress(_progress_event(0, kafka, [2, 3]))
+    mon.onQueryProgress(_progress_event(1, files, [1]))
+    assert [(b.batch_id, b.lag) for b in mon.history] == [(0, 40), (1, 0)]
+    assert sum(b.dropped_by_watermark for b in mon.history) == 6
+    assert mon.total_rows == 22
+
+
 def test_watermark_drops_late_data(spark, tmp_path):
     """Event later than the 10-min watermark is dropped and the progress
     monitor reports the drop; late-but-within event still counts
