@@ -34,12 +34,22 @@ class BatchProgress:
     # input rows the stateful operators dropped as later than the
     # watermark, summed over operators
     dropped_by_watermark: int
+    # where the trigger's time went: Spark's durationMs breakdown
+    # (triggerExecution, queryPlanning, addBatch, walCommit, ...)
+    duration_ms: dict[str, int]
+    # the event-time watermark the batch ran with (ISO-8601 UTC), or
+    # None for a query without one
+    watermark: str | None
+    # state-store partitions the stateful operators ran, summed over
+    # operators; each one is loaded and committed every batch
+    state_store_instances: int
 
 
 @dataclass
 class ProgressMonitor(StreamingQueryListener):
-    """W6: collects per-batch throughput, source lag and late drops;
-    a batch that dropped rows as late logs a warning."""
+    """W6: collects per-batch throughput, source lag, late drops, the
+    duration breakdown, the watermark and the state-store partition
+    count; a batch that dropped rows as late logs a warning."""
 
     history: list[BatchProgress] = field(default_factory=list)
 
@@ -60,6 +70,11 @@ class ProgressMonitor(StreamingQueryListener):
             ),
             dropped_by_watermark=sum(
                 op.numRowsDroppedByWatermark for op in p.stateOperators
+            ),
+            duration_ms=dict(p.durationMs),
+            watermark=p.eventTime.get("watermark"),
+            state_store_instances=sum(
+                op.numStateStoreInstances for op in p.stateOperators
             ),
         )
         if b.dropped_by_watermark:

@@ -16,6 +16,20 @@ Layout and why:
 * the manifest keeps a one-bucket form (bucket "0", `n_buckets` 1)
   because perfbench's traced run reads `buckets` from `_CURRENT`.
 
+One Spark job per merge.  A merge writes its batch once, as one file,
+to the table's `_staging` directory; that write carries an Observation
+of the batch's row count and monotone min/max, so no separate stats
+job runs and nothing is cached.  An append then moves the staged file
+into place as the new leaf; a rewrite reads it back as the batch and
+folds it with the stored rows in a second job.  The merge does not
+deduplicate: a batch holds each key at most once (see `merge`).
+`start_upsert_query` runs its stateful aggregate on one shuffle
+partition: a state store is loaded and committed per partition and per
+batch, whatever its row count, and one leaf file means the batch's rows
+meet in one task anyway, so with one partition the write runs inside
+the stateful stage.  `merge` returns a `MergeStats` record of what it
+did.
+
 At scale this slot is filled by a real table format (Delta/Iceberg
 MERGE INTO — the same keyed upsert with file-level pruning); the
 interface is format-agnostic on purpose.
@@ -78,10 +92,12 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import time
 import uuid
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 from pyspark.sql.types import IntegralType, StructType, TimestampType
@@ -97,6 +113,19 @@ STACK_MAX = 8
 # Seconds a superseded leaf outlives the merge that superseded it: more
 # than ten times the slowest dashboard refresh measured (about 5 s).
 RETAIN_S = 60.0
+
+
+@dataclass(frozen=True)
+class MergeStats:
+    """What one `UpsertTable.merge` did."""
+
+    # the version it published; after an empty batch, the current one
+    # (0 before the table's first commit)
+    version: int
+    kind: str  # "append", "rewrite" or "empty"
+    rows: int  # rows in the batch
+    leaves: int  # leaves in the stack after the merge
+    ms: float  # wall time
 
 
 class Snapshot(ClassicDataFrame):
@@ -311,37 +340,62 @@ class UpsertTable:
         return sorted(out)
 
     # -- merge --------------------------------------------------------------
-    def merge(self, batch: DataFrame) -> None:
+    def merge(self, batch: DataFrame) -> MergeStats:
         """Upsert: delete-matching-keys then insert (last write wins).
 
-        Within one batch, duplicate keys collapse to an arbitrary single
-        row via dropDuplicates on the key — the streaming engine never
-        emits duplicate finalized windows in one batch, so this only
-        guards replay edge cases.
-        """
-        # Two actions consume `batch` (the stats row and the leaf
-        # write); inside foreachBatch each action would otherwise
-        # re-execute the whole micro-batch aggregation.  Persist once.
-        batch = batch.dropDuplicates(self.key_cols).persist()
-        try:
-            self._merge_persisted(batch)
-        finally:
-            batch.unpersist()
+        Precondition: a batch holds each key at most once; a merge does
+        not deduplicate it.  Every caller meets it by construction:
 
-    def _merge_persisted(self, batch: DataFrame) -> None:
-        # One row, O(1) driver-side: the batch size and, with a
-        # monotone column declared, the min/max the append test needs.
+        * an append-mode aggregate emits each finalized group once;
+        * an update-mode aggregate, and `running_user_totals`
+          (applyInPandasWithState), emit one row per key per batch;
+        * `window_topk_items` ranks each window with `row_number`, so
+          its (window_start, rk) keys are distinct.
+
+        One Spark job for an append or an empty batch, two for a
+        rewrite.  The batch is written once, as one file
+        (`coalesce(1)`), to the table's `_staging` directory, and that
+        write carries an Observation of the row count and the min and
+        max of the monotone column, which the append test needs.  Then:
+
+        * append: the staged leaf moves into place with os.replace;
+        * rewrite: the staged leaf is read back as the batch, the
+          batch and the stored rows it does not replace are written as
+          one leaf at the same version, and the staging directory is
+          deleted;
+        * empty batch: the staging directory is deleted and nothing is
+          published.
+
+        A crash leaves at most a staging directory or an unpublished
+        leaf behind; the replayed merge overwrites both.
+        """
+        t0 = time.perf_counter()
+        m = self._manifest()  # an unreadable or mismatched table raises first
         mono = (
             self._mono_image(batch)
             if self.monotone_col
             else F.lit(None).cast("long")
         )
-        n, lo, hi = batch.agg(
-            F.count(F.lit(1)), F.min(mono), F.max(mono)
-        ).first()
+        staging = os.path.join(self.path, "_staging")
+        obs = Observation()
+        # One file per leaf: a leaf of one file per upstream task would
+        # grow the file count as O(merges x partitions) and drown reads
+        # in small files.
+        batch.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.min(mono).alias("lo"),
+            F.max(mono).alias("hi"),
+        ).coalesce(1).write.mode("overwrite").parquet(staging)
+        n, lo, hi = (obs.get[k] for k in ("n", "lo", "hi"))
         if not n:
-            return
-        m = self._manifest() or {
+            shutil.rmtree(staging, ignore_errors=True)
+            stack = m["buckets"][_STACK] if m else []
+            return MergeStats(
+                m["version"] if m else 0, "empty", 0, len(stack),
+                (time.perf_counter() - t0) * 1000.0,
+            )
+        m = m or {
             "version": 0,
             "buckets": {},
             "n_buckets": 1,
@@ -361,27 +415,48 @@ class UpsertTable:
             and lo > marks[_STACK]
             and len(stack) < STACK_MAX
         )
-        merged = batch
-        if not append:
-            stored = self._snapshot(m)
-            merged = batch.unionByName(
-                stored.join(
-                    batch.select(self.key_cols), self.key_cols, "left_anti"
-                )
-            )
-        v_new = m["version"] + 1
-        # One file per leaf, and no shuffle on the append path: a leaf
-        # of one file per upstream task would grow the file count as
-        # O(merges x shuffle_partitions) and drown reads in small files.
-        merged.coalesce(1).write.mode("overwrite").parquet(self._leaf(v_new))
-        m["schema"] = merged.schema.jsonValue()
         if self.monotone_col and hi is not None:
             marks[_STACK] = max(marks.get(_STACK, hi), hi)
+        v_new = m["version"] + 1
+        leaf = self._leaf(v_new)
         if append:
+            if os.path.exists(leaf):  # left by a crash before the flip
+                shutil.rmtree(leaf)
+            os.makedirs(os.path.dirname(leaf), exist_ok=True)
+            os.replace(staging, leaf)
+            m["schema"] = batch.schema.jsonValue()
             self._commit(m, (stack or []) + [v_new], [])
         else:
+            # Read in the batch's session: inside foreachBatch that is
+            # the stream's, which runs without adaptive execution, so a
+            # shuffled join's stages run inside the write's job; a
+            # broadcast would collect the batch's keys in a job of its
+            # own.
+            staged = batch.sparkSession.read.schema(batch.schema).parquet(staging)
+            merged = staged.unionByName(
+                self._snapshot(m).join(
+                    staged.select(self.key_cols).hint("shuffle_hash"),
+                    self.key_cols,
+                    "left_anti",
+                )
+            )
+            merged.coalesce(1).write.mode("overwrite").parquet(leaf)
+            m["schema"] = merged.schema.jsonValue()
             # a rewrite folds the stack and supersedes every leaf of it
             self._commit(m, [v_new], stack)
+            shutil.rmtree(staging, ignore_errors=True)
+        return MergeStats(
+            v_new,
+            "append" if append else "rewrite",
+            n,
+            len(m["buckets"][_STACK]),
+            (time.perf_counter() - t0) * 1000.0,
+        )
+
+
+# Serializes start_upsert_query's set-and-restore of the session's
+# shuffle partitions against concurrent starts.
+_start_lock = threading.Lock()
 
 
 def start_upsert_query(
@@ -400,6 +475,15 @@ def start_upsert_query(
     arbitrary-stateful operators (applyInPandasWithState) that re-emit
     a key's latest value each batch — the keyed merge makes either mode
     last-write-wins idempotent.
+
+    The query starts with one shuffle partition, so its stateful
+    operator runs one state-store partition.  A state store's load and
+    commit cost is paid per partition, not per row, and a merge writes
+    each batch as one file anyway, so more partitions only add state
+    commits.  The query keeps the value it saw at start(), and Spark
+    records it in the checkpoint's offset log, so a restart keeps the
+    count its checkpoint was made with; the session's own value is
+    restored once the query has started.
     """
     writer = (
         agg.writeStream.outputMode(output_mode)
@@ -409,4 +493,11 @@ def start_upsert_query(
     )
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
-    return writer.start()
+    conf = agg.sparkSession.conf
+    with _start_lock:
+        saved = conf.get("spark.sql.shuffle.partitions")
+        conf.set("spark.sql.shuffle.partitions", "1")
+        try:
+            return writer.start()
+        finally:
+            conf.set("spark.sql.shuffle.partitions", saved)

@@ -173,9 +173,10 @@ def test_monitor_collects_progress(parity_setup):
     assert all(b.lag >= 0 for b in mon.history)
 
 
-def _progress_event(batch_id, source, dropped):
+def _progress_event(batch_id, source, dropped, **fields):
     """A QueryProgressEvent as Spark serializes one: `source` is one
-    SourceProgress dict, `dropped` the late drops per state operator."""
+    SourceProgress dict, `dropped` the late drops per state operator,
+    `fields` further top-level progress fields."""
     from pyspark.sql.streaming.listener import (
         QueryProgressEvent,
         StreamingQueryProgress,
@@ -197,6 +198,7 @@ def _progress_event(batch_id, source, dropped):
         "stateOperators": [{**op, "numRowsDroppedByWatermark": d} for d in dropped],
         "sources": [source],
         "sink": {"description": "ForeachBatchSink", "numOutputRows": -1},
+        **fields,
     }))
 
 
@@ -231,6 +233,178 @@ def test_monitor_reads_lag_from_source_metrics():
     assert [(b.batch_id, b.lag) for b in mon.history] == [(0, 40), (1, 0)]
     assert sum(b.dropped_by_watermark for b in mon.history) == 6
     assert mon.total_rows == 22
+
+
+def test_monitor_records_durations_watermark_and_state_partitions():
+    """Each batch's record carries Spark's durationMs breakdown, the
+    watermark it ran with and its state-store partitions; a batch
+    without an event-time watermark records None."""
+    from realtime_data_pipeline_spark.streaming.monitor import ProgressMonitor
+
+    files = {
+        "description": "FileStreamSource[file:/replay]",
+        "startOffset": {"logOffset": 2}, "endOffset": {"logOffset": 3},
+        "latestOffset": None, "numInputRows": 7,
+        "inputRowsPerSecond": 1.0, "processedRowsPerSecond": 2.0,
+    }
+    durations = {
+        "triggerExecution": 500, "queryPlanning": 20, "getBatch": 5,
+        "walCommit": 30, "addBatch": 400, "commitOffsets": 30,
+    }
+    mon = ProgressMonitor()
+    mon.onQueryProgress(_progress_event(
+        0, files, [0, 0], durationMs=durations,
+        eventTime={
+            "max": "2024-06-01T00:30:00.000Z",
+            "watermark": "2024-06-01T00:20:00.000Z",
+        },
+    ))
+    mon.onQueryProgress(_progress_event(1, files, []))
+    first, second = mon.history
+    assert first.duration_ms == durations
+    assert first.watermark == "2024-06-01T00:20:00.000Z"
+    assert first.state_store_instances == 8  # two operators, 4 each
+    assert (second.duration_ms, second.watermark) == ({}, None)
+    assert second.state_store_instances == 0
+
+
+def _offset_log_conf(ckpt, batch_id):
+    """The SQL confs the checkpoint's offset log records for a batch."""
+    import json
+    import os
+
+    with open(os.path.join(ckpt, "offsets", str(batch_id))) as f:
+        return json.loads(f.read().splitlines()[1])["conf"]
+
+
+def _state_partitions(ckpt):
+    import os
+
+    return sorted(
+        d for d in os.listdir(os.path.join(ckpt, "state", "0")) if d.isdigit()
+    )
+
+
+def test_upsert_query_runs_one_state_partition(spark, tmp_path):
+    """start_upsert_query starts its query with one shuffle partition,
+    so the windowed aggregate keeps one state-store partition; Spark
+    records the count in the offset log, and the session's own conf is
+    left as it was."""
+    events = _ref_shaped_events(spark).limit(2000)
+    replay = str(tmp_path / "replay")
+    _write_replay_fixture(spark, events, replay)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    ckpt = str(tmp_path / "ckpt")
+    table = _run_replay(spark, replay, str(tmp_path / "table"), ckpt)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before != "1"
+    assert _offset_log_conf(ckpt, 0)["spark.sql.shuffle.partitions"] == "1"
+    assert _state_partitions(ckpt) == ["0"]
+    streamed = {
+        tuple(r) for r in table.read().where(F.col("user_id") != SENTINEL).collect()
+    }
+    assert streamed == {
+        tuple(r) for r in windowed_stream_counts(events, "user_id").collect()
+    }
+
+
+def test_concurrent_starts_restore_the_session_conf(spark, tmp_path):
+    """start_upsert_query sets the session's shuffle partitions around
+    start() and restores them; starts from several threads at once must
+    still leave the session's own value in place."""
+    import sys
+    import threading
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    queries, errors = [], []
+
+    def start(i):
+        try:
+            for j in range(2):
+                stream = spark.readStream.schema(EVENT_SCHEMA).parquet(str(empty))
+                queries.append(start_upsert_query(
+                    stream,
+                    UpsertTable(spark, str(tmp_path / f"t{i}_{j}"), ["user_id"]),
+                    str(tmp_path / f"ckpt{i}_{j}"),
+                    f"concurrent_{i}_{j}",
+                    trigger_available_now=True,
+                ))
+        except Exception as e:  # the thread's failure, asserted below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=start, args=(i,)) for i in range(6)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+    finally:
+        sys.setswitchinterval(interval)
+    for q in queries:
+        q.awaitTermination(60)
+    assert not any(t.is_alive() for t in threads) and errors == []
+    assert len(queries) == 12 and not any(q.isActive for q in queries)
+    assert spark.conf.get(key) == before
+
+
+def test_restart_keeps_the_checkpoints_partition_count(spark, tmp_path):
+    """A checkpoint made with 4 shuffle partitions keeps 4 when
+    start_upsert_query restarts it: Spark takes the count from the
+    offset log, and state stays where its partitions put it."""
+    events = _ref_shaped_events(spark)
+    us = F.unix_micros("timestamp")
+    cut = events.agg(F.percentile_approx(us, 0.5)).first()[0]
+    replay = str(tmp_path / "replay")
+    ckpt = str(tmp_path / "ckpt")
+    table = UpsertTable(
+        spark, str(tmp_path / "table"), KEYS, monotone_col="window_start"
+    )
+
+    def agg():
+        stream = file_replay_stream(
+            spark, replay, EVENT_SCHEMA, max_files_per_trigger=1
+        )
+        return windowed_stream_counts(stream, "user_id")
+
+    events.where(us < cut).coalesce(1).write.mode("append").parquet(replay)
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "4")
+    try:
+        q = (
+            agg().writeStream.outputMode("append")
+            .option("checkpointLocation", ckpt)
+            .foreachBatch(lambda batch, _id: table.merge(batch))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+    finally:
+        spark.conf.set(key, saved)
+    assert _state_partitions(ckpt) == ["0", "1", "2", "3"]
+
+    time.sleep(1.1)  # distinct mtimes → stable file→batch order
+    events.where(us >= cut).coalesce(1).write.mode("append").parquet(replay)
+    time.sleep(1.1)
+    max_ts = events.agg(F.max("timestamp")).first()[0]
+    spark.createDataFrame(
+        [(SENTINEL, SENTINEL, "flush", max_ts + dt.timedelta(days=2))],
+        schema=EVENT_SCHEMA,
+    ).coalesce(1).write.mode("append").parquet(replay)
+    q = start_upsert_query(agg(), table, ckpt, "restart_4", trigger_available_now=True)
+    q.awaitTermination(120)
+    last = q.lastProgress["batchId"]
+    assert _offset_log_conf(ckpt, last)[key] == "4"
+    assert _state_partitions(ckpt) == ["0", "1", "2", "3"]
+    got = table.read().where(F.col("user_id") != SENTINEL)
+    assert got.groupBy(KEYS).count().where(F.col("count") > 1).count() == 0
+    assert {tuple(r) for r in got.collect()} == {
+        tuple(r) for r in windowed_stream_counts(events, "user_id").collect()
+    }
 
 
 def test_watermark_drops_late_data(spark, tmp_path):

@@ -1,7 +1,9 @@
 """Crash recovery of the keyed-upsert sink's commit.
 
-A merge writes its leaf, unlinks ripe superseded leaves, writes the
-version's snapshot manifest and flips `_CURRENT`.  A crash at any of
+A merge stages the batch, moves it into place as its leaf (an append)
+or folds it with the stored rows into the leaf (a rewrite), unlinks
+ripe superseded leaves, writes the version's snapshot manifest and
+flips `_CURRENT`.  A crash at any of
 those steps, followed by a replay of the same batch through a fresh
 `UpsertTable` (what a restart from the streaming checkpoint does), must
 leave the table equal to a last-write-wins model, every leaf
@@ -17,12 +19,26 @@ import shutil
 
 import pytest
 
+from pyspark.sql.readwriter import DataFrameWriter
+
 from realtime_data_pipeline_spark.streaming import sinks
 from realtime_data_pipeline_spark.streaming.sinks import UpsertTable
 
 
 class Crash(Exception):
     pass
+
+
+def _after_staged_write(mp):
+    """Crash once the batch is staged: a merge's first parquet write
+    is the staged batch, before it moves into place or is folded."""
+    parquet = DataFrameWriter.parquet
+
+    def write_then_crash(self, path, *args, **kwargs):
+        parquet(self, path, *args, **kwargs)
+        raise Crash
+
+    mp.setattr(DataFrameWriter, "parquet", write_then_crash)
 
 
 def _after_leaf_write(mp):
@@ -90,8 +106,20 @@ def _check(table, model):
 
 @pytest.mark.parametrize(
     "crash",
-    [_after_leaf_write, _mid_vacuum, _at_flip(after=False), _at_flip(after=True)],
-    ids=["after-leaf-write", "mid-vacuum", "before-flip", "after-flip"],
+    [
+        _after_staged_write,
+        _after_leaf_write,
+        _mid_vacuum,
+        _at_flip(after=False),
+        _at_flip(after=True),
+    ],
+    ids=[
+        "after-staged-write",
+        "after-leaf-write",
+        "mid-vacuum",
+        "before-flip",
+        "after-flip",
+    ],
 )
 def test_replay_after_crash_restores_table(spark, tmp_path, monkeypatch, crash):
     monkeypatch.setattr(sinks, "RETAIN_S", 0)
@@ -130,3 +158,41 @@ def test_replay_after_crash_restores_table(spark, tmp_path, monkeypatch, crash):
     assert roots == {
         os.path.join(path, d) for d in os.listdir(path) if d.startswith("v=")
     }
+
+
+@pytest.mark.parametrize(
+    "crash",
+    [_after_staged_write, _after_leaf_write, _at_flip(after=False), _at_flip(after=True)],
+    ids=["after-staged-write", "after-leaf-move", "before-flip", "after-flip"],
+)
+def test_replay_after_crash_in_append_restores_table(
+    spark, tmp_path, monkeypatch, crash
+):
+    """The append path moves the staged leaf into place.  A crash before
+    the move, after it, or on either side of the flip, then the replay,
+    leaves the table equal to the model, and neither the staged batch
+    nor an unpublished leaf behind."""
+    path = str(tmp_path / "t")
+    model: dict[tuple[int, int], int] = {}
+    keys = range(8)
+
+    def open_table():
+        return UpsertTable(spark, path, ["w", "k"], monotone_col="w")
+
+    table = open_table()
+    _merge(spark, table, model, 1, {k: 1 for k in keys})
+    _merge(spark, table, model, 2, {k: 2 for k in keys})
+    crashed = {k: 3 for k in keys}
+    with monkeypatch.context() as mp:
+        crash(mp)
+        with pytest.raises(Crash):
+            _merge(spark, table, {}, 3, crashed)  # an append: w=3 > mark
+    table = open_table()  # the restart
+    _merge(spark, table, model, 3, crashed)  # the checkpoint replay
+    m = _check(table, model)
+    names = {f"v={v}" for v in m["buckets"]["0"]} | {
+        f"v={v}" for v, _stack, _t in m.get("pending", [])
+    }
+    assert {d for d in os.listdir(path) if not d.startswith("manifest.v")} == (
+        names | {"_CURRENT"}
+    )

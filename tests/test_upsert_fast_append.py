@@ -11,8 +11,9 @@ rewrite path, (e) time travel over stacked leaves, (f) that a table's
 mode and layout are fixed when it is created, (g) that marks
 order timestamps the way Spark does, (h) that a held snapshot
 outlives the fold that supersedes it by RETAIN_S seconds, not by a
-count of merges, and (i) that reads use the schema the manifest
-records.
+count of merges, (i) that reads use the schema the manifest
+records, and (j) that an append or an empty batch is one Spark job
+and a merge leaves no staging directory behind.
 """
 
 from __future__ import annotations
@@ -100,6 +101,73 @@ def test_overlap_falls_back_to_rewrite_and_upserts(spark, tmp_path):
     got = {(r.w, r.k): r.v for r in t.read().collect()}
     assert all(got[(2, k)] == 999 for k in range(4))
     assert len(got) == 8  # no duplicate keys after the fold
+
+
+def _table_entries(path):
+    """What a table directory holds besides its manifests and leaves."""
+    return [
+        e
+        for e in os.listdir(path)
+        if e != "_CURRENT"
+        and not e.startswith("v=")
+        and not (e.startswith("manifest.v") and e.endswith(".json"))
+    ]
+
+
+def test_append_merge_is_one_job(spark, tmp_path, spark_jobs):
+    """An append writes the batch once: the write carries the count and
+    the monotone min/max, and the staged leaf moves into place."""
+    path = str(tmp_path / "t")
+    t = UpsertTable(spark, path, ["w", "k"], monotone_col="w")
+    t.merge(_batch(spark, 1, range(4)))
+    stats, jobs = spark_jobs(lambda: t.merge(_batch(spark, 2, range(3))))
+    assert jobs == 1
+    assert (stats.version, stats.kind, stats.rows, stats.leaves) == (
+        2, "append", 3, 2,
+    )
+    assert stats.ms > 0
+    assert _manifest(path)["buckets"]["0"] == [1, 2]
+    assert _table_entries(path) == []
+    assert len(_snapshot(t)) == 7
+
+
+def test_empty_batch_is_one_job_and_publishes_nothing(
+    spark, tmp_path, spark_jobs
+):
+    path = str(tmp_path / "t")
+    t = UpsertTable(spark, path, ["w", "k"], monotone_col="w")
+    empty = _df(spark, [])
+    stats, jobs = spark_jobs(lambda: t.merge(empty))
+    assert jobs == 1
+    assert (stats.version, stats.kind, stats.rows, stats.leaves) == (
+        0, "empty", 0, 0,
+    )
+    assert t.read() is None and t.versions() == []
+    t.merge(_batch(spark, 1, range(4)))
+    stats, jobs = spark_jobs(lambda: t.merge(empty))
+    assert jobs == 1
+    assert (stats.version, stats.kind, stats.rows, stats.leaves) == (
+        1, "empty", 0, 1,
+    )
+    assert t.versions() == [1]
+    assert not os.path.exists(os.path.join(path, "v=2"))
+    assert _table_entries(path) == []
+
+
+def test_rewrite_leaves_no_staging_and_contiguous_versions(spark, tmp_path):
+    path = str(tmp_path / "t")
+    t = UpsertTable(spark, path, ["w", "k"], monotone_col="w")
+    t.merge(_batch(spark, 1, range(4)))
+    t.merge(_batch(spark, 2, range(4)))
+    stats = t.merge(_df(spark, [(2, k, 999) for k in range(2)]))
+    assert (stats.version, stats.kind, stats.rows, stats.leaves) == (
+        3, "rewrite", 2, 1,
+    )
+    assert _table_entries(path) == []
+    assert t.versions() == [1, 2, 3]
+    got = {(r.w, r.k): r.v for r in t.read().collect()}
+    assert len(got) == 8 and got[(2, 0)] == got[(2, 1)] == 999
+    assert got[(2, 2)] == 202
 
 
 def test_replay_of_appended_batch_is_idempotent(spark, tmp_path):

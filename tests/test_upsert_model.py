@@ -19,8 +19,9 @@ from realtime_data_pipeline_spark.streaming.sinks import UpsertTable
 
 # a batch: 1-6 unique keys from a small key space so sequences collide
 # ACROSS batches (collisions are where upsert bugs live).  Unique keys
-# within a batch because dropDuplicates keeps an arbitrary row per key
-# — an intra-batch duplicate has no defined model value.
+# within a batch because that is the sink's precondition: a merge does
+# not deduplicate, and the streaming callers never emit a key twice in
+# one batch.
 _batch = st.dictionaries(
     st.integers(0, 12), st.integers(0, 10**6), min_size=1, max_size=6
 )
