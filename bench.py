@@ -35,8 +35,8 @@ WARMUP_SF_DIR = "/root/testdata/sf0.001"
 # start on a quiet host or carry an explicit annotation — r11's
 # headline was recorded at loadavg 5.5 (minutes after soak workers
 # exited) and showed a phantom +14.6% that cost a manual re-run to
-# adjudicate.  Wait-and-retry like scale_probe._measure, bounded so an
-# inherently busy host still produces an (annotated) artifact.
+# adjudicate.  Wait and retry, bounded so an inherently busy host
+# still produces an (annotated) artifact.
 # r12 verdict tightened the default from 2.0 to 1.0: a gate passed at
 # 1.99 on this 32-cpu box still admitted ~15% inflation in the
 # committed r12 artifact vs the idle-host number (20.06 s vs 17.3 s).

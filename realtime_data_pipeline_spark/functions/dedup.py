@@ -41,14 +41,14 @@ N_PERMS = 12  # MinHash permutations
 # across the corpus — becomes a candidate: bucket populations grow
 # LINEARLY with corpus size and candidate pairs QUADRATICALLY, which
 # the 10×-data scale probe measured directly (22.6× time ratio at the
-# 500k→5M-doc step, scripts/scale_probe.py).  r=2, b=6 puts the
-# threshold at (1/6)^(1/2) ≈ 0.41 — right under the 0.5 est_jaccard
-# edge the dedup clustering uses — and drops a J=0.1 junk pair's
-# candidate probability from 0.72 to 0.06 while keeping planted
-# near-dups (J ≈ 0.8) at 1-(1-0.64)^6 ≈ 0.998 recall.  Buckets keyed
-# by a signature PAIR only fill when two independent permutation
-# minima agree (prob ~J² per unrelated pair), so bucket width stays
-# O(true-duplicate cluster size) as the corpus grows.
+# 500k→5M-doc step; the probe's artifacts are in history/).  r=2,
+# b=6 puts the threshold at (1/6)^(1/2) ≈ 0.41 — right under the
+# 0.5 est_jaccard edge the dedup clustering uses — and drops a J=0.1
+# junk pair's candidate probability from 0.72 to 0.06 while keeping
+# planted near-dups (J ≈ 0.8) at 1-(1-0.64)^6 ≈ 0.998 recall.
+# Buckets keyed by a signature PAIR only fill when two independent
+# permutation minima agree (prob ~J² per unrelated pair), so bucket
+# width stays O(true-duplicate cluster size) as the corpus grows.
 BAND_R = 2
 N_BANDS = N_PERMS // BAND_R
 
@@ -612,11 +612,11 @@ def ngram_jaccard_pairs(
          (df ≤ 128): on Heaps-law vocabularies the df<128 regime's
          Σ C(df,2) pair mass grows ~quadratically far past 2M docs —
          the r9 open-vocab soak measured 15.75× time on a 4× doc step
-         (SOAK_r09_ngram4x.json) and exhausted 76 GiB of scratch in
+         (history/SOAK_r09_ngram4x.json) and exhausted 76 GiB of scratch in
          shuffle spill at the 10× step.  Banding is the fix the
          engine already proved: the same generator holds
          corpus_curation_stats at 1.86× on 10× docs
-         (SOAK_r09_curation.json).
+         (history/SOAK_r09_curation.json).
       2. EXACT Jaccard for every candidate, computed over the FULL
          distinct shingle sets: the pair list joins the COMPACT
          per-doc array relation (one row per doc, never the exploded

@@ -1981,8 +1981,7 @@ def q_upsert_time_travel_stats(spark, sf_dir):
     v2 = ev.groupBy("user_id").agg(F.count("*").alias("n_events"))
 
     tbl = UpsertTable(spark, scratch_dir(prefix="rdp_tt_"), key_cols=["user_id"])
-    tbl.merge(v1)
-    m1 = tbl._manifest()  # None iff the v1 merge had zero rows (no-op)
+    s1 = tbl.merge(v1)  # kind "empty" iff v1 had zero rows (no snapshot)
     tbl.merge(v2)
 
     def _snap(df, label):
@@ -2009,7 +2008,7 @@ def q_upsert_time_travel_stats(spark, sf_dir):
             ),
         )
 
-    old_df = tbl.read(version=m1["version"]) if m1 is not None else None
+    old_df = tbl.read(version=s1.version) if s1.kind != "empty" else None
     cur_df = tbl.read()
     old = _snap(old_df, "v1") if old_df is not None else _empty("v1")
     cur = _snap(cur_df, "current") if cur_df is not None else _empty("current")

@@ -372,7 +372,8 @@ def q_simhash_near_dups(spark, sf_dir):
     "verify stage on the sublinear generator (r=2×6 banded buckets, "
     "width-capped).  Re-scoped in round 10: the previous shared-rare-"
     "shingle generation (posting df <= 128) measured 15.75x time on a "
-    "4x doc step on Heaps-law vocabularies (SOAK_r09_ngram4x.json) — "
+    "4x doc step on Heaps-law vocabularies "
+    "(history/SOAK_r09_ngram4x.json) — "
     "Σ C(df,2) candidate mass is ~quadratic in corpus size there, so "
     "that operator cannot exist at 100 TB.  Jaccard is exact over the "
     "FULL distinct shingle sets (int64 polynomial token-hashes), never "

@@ -72,81 +72,6 @@ def _norm_jvm_mem(value: str) -> str:
     )
 
 
-def _mem_bytes(value: str) -> int:
-    """JVM heap string ('12g', '512m', bare-digit MiB) -> bytes."""
-    v = _norm_jvm_mem(value)
-    return int(v[:-1]) * {
-        "k": 1024, "m": 1024**2, "g": 1024**3, "t": 1024**4
-    }[v[-1]]
-
-
-# Measured provisioning floor (round-8 open-vocabulary soak, 5M docs of
-# ~50 tokens): the shingle-explode posting-list aggregation needs
-# ~0.7 GiB of execution memory PER CONCURRENT TASK — below it, the
-# hash-map-to-external-sorter spill handoff itself starves
-# (UNABLE_TO_ACQUIRE_MEMORY inside destructAndCreateExternalSorter; 32
-# tasks on a 12 GiB heap is ~225 MB/slot and dies, the same step at
-# 48 GiB runs).  The plan spills gracefully ABOVE the floor, so this is
-# executor sizing, not a plan defect — encode it as code so the 100 TB
-# provisioning rule ships with the engine.
-SHINGLE_AGG_TASK_FLOOR_BYTES = 700 * 1024**2
-# Fraction of the heap Spark's unified memory manager makes available
-# for execution+storage (spark.memory.fraction default).
-_SPARK_MEMORY_FRACTION = 0.6
-
-
-def max_concurrent_tasks_for_heap(
-    heap: str,
-    floor_bytes: int = SHINGLE_AGG_TASK_FLOOR_BYTES,
-    memory_fraction: float = _SPARK_MEMORY_FRACTION,
-) -> int:
-    """Max task slots an executor heap supports for the shingle-explode
-    aggregation family (the engine's hungriest per-task consumer).
-
-    Cluster rule: set `spark.executor.cores` (or local[N]) to at most
-    this for corpus-dedup workloads, or equivalently size
-    `spark.executor.memory` to cores × ~0.7 GiB / 0.6.  Always >= 1 —
-    a single task below the floor may still complete by spilling
-    earlier; the floor is where CONCURRENT peak demand starves the
-    spill handoff.
-    """
-    usable = _mem_bytes(heap) * memory_fraction
-    return max(1, int(usable // floor_bytes))
-
-
-# Measured per-task volume sweet spot (round-11 partition-lever soak,
-# 10M open-vocab docs / 100M events, SOAK_r11_20x_parts{2x,4x}.json vs
-# the round-10 protocol point): shuffle partitions sized to ~175k
-# event-equivalent rows per task cut corpus_curation_stats' memory
-# spill 27% and wall 16% versus the classic 350k, while halving again
-# (87.5k) over-partitioned — iterative operators (connected
-# components, PageRank) re-pay per-task scheduling overhead every
-# superstep, and wall regressed 63%.  MERGE-join external-sort spill
-# (the ngram verify joins) is partition-INELASTIC across the whole
-# range — that spill is the designed degradation path, not a sizing
-# defect.
-CORPUS_ROWS_PER_TASK = 175_000
-# one ~50-token document ≈ 20 events of shuffle volume; one 64-float
-# embedding ≈ 3 (the staging/probe equivalences, scale_probe.py)
-DOC_EVENT_EQUIV = 20
-VEC_EVENT_EQUIV = 3
-
-
-def corpus_shuffle_partitions(
-    n_events: int = 0, n_docs: int = 0, n_vecs: int = 0,
-    rows_per_task: int = CORPUS_ROWS_PER_TASK,
-) -> int:
-    """Shuffle-partition count for a corpus-scale job, from whichever
-    table carries the volume — the measured-sweet-spot embodiment of
-    'a real cluster holds per-task volume constant as data grows'.
-    Floors at default_parallelism() so small jobs still use every
-    core."""
-    eff = max(
-        n_events, DOC_EVENT_EQUIV * n_docs, VEC_EVENT_EQUIV * n_vecs
-    )
-    return max(default_parallelism(), eff // rows_per_task)
-
-
 def tune(spark: SparkSession) -> SparkSession:
     """Apply runtime confs to an existing (possibly driver-owned) session."""
     for k, v in RUNTIME_CONFS.items():
@@ -179,10 +104,8 @@ def get_spark(
         # uncommits idle heap back to the OS between query bursts and
         # re-faults (kernel-zeroes) it on the next allocation spike,
         # adding recurring sys-time to whatever query runs next.  (Not
-        # a cure-all: this box also shows minutes-long HOST-side
-        # memory-reclaim storms — sys >> user with steal blips — that
-        # hit pinned heaps too; scripts/scale_probe.py detects and
-        # retries those.)
+        # a cure-all: a shared host's memory-reclaim storms — sys >>
+        # user with steal blips — hit pinned heaps too.)
         # Only effective when THIS process launches the gateway JVM —
         # a silent no-op on an already-running session, by design.
         .config("spark.driver.extraJavaOptions", f"-Xms{driver_mem}")

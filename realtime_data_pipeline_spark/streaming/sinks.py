@@ -42,7 +42,7 @@ declares a key column that is non-decreasing across merges
 mark of that column.  A merge whose batch minimum strictly exceeds the
 mark provably matches no stored key, so it APPENDS a new leaf to the
 stack (a list of leaf versions, oldest first) instead of
-read+anti-join+rewrite — O(batch) I/O, independent of table size.
+read+fold+rewrite — O(batch) I/O, independent of table size.
 Overlapping or replayed batches, and a stack at `STACK_MAX` leaves,
 take the rewrite path, which also folds the stack — LSM compaction in
 miniature, amortizing rewrites to O(table / STACK_MAX) per merge.
@@ -90,14 +90,16 @@ outside the pending-delete ledger.
 from __future__ import annotations
 
 import json
+import operator
 import os
 import shutil
 import threading
 import time
 import uuid
 from dataclasses import dataclass
+from functools import reduce
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 from pyspark.sql.types import IntegralType, StructType, TimestampType
@@ -427,20 +429,28 @@ class UpsertTable:
             m["schema"] = batch.schema.jsonValue()
             self._commit(m, (stack or []) + [v_new], [])
         else:
-            # Read in the batch's session: inside foreachBatch that is
-            # the stream's, which runs without adaptive execution, so a
-            # shuffled join's stages run inside the write's job; a
-            # broadcast would collect the batch's keys in a job of its
-            # own.
-            staged = batch.sparkSession.read.schema(batch.schema).parquet(staging)
-            merged = staged.unionByName(
-                self._snapshot(m).join(
-                    staged.select(self.key_cols).hint("shuffle_hash"),
-                    self.key_cols,
-                    "left_anti",
-                )
+            # Fold without a join: the staged rows, tagged newest, and
+            # the stored rows meet in one partition, where a key keeps
+            # its newest row.  Over one partition the window needs no
+            # exchange, so the fold is the write's one job in any
+            # session.  A key with a null part matches nothing under
+            # SQL null-equality, so every such row stays.
+            staged = self.spark.read.schema(batch.schema).parquet(staging)
+            rank = F.row_number().over(
+                Window.partitionBy(*self.key_cols).orderBy(F.desc("__new"))
             )
-            merged.coalesce(1).write.mode("overwrite").parquet(leaf)
+            null_key = reduce(
+                operator.or_, [F.col(k).isNull() for k in self.key_cols]
+            )
+            merged = (
+                staged.withColumn("__new", F.lit(1))
+                .unionByName(self._snapshot(m).withColumn("__new", F.lit(0)))
+                .coalesce(1)
+                .withColumn("__rank", rank)
+                .where((F.col("__rank") == 1) | null_key)
+                .drop("__new", "__rank")
+            )
+            merged.write.mode("overwrite").parquet(leaf)
             m["schema"] = merged.schema.jsonValue()
             # a rewrite folds the stack and supersedes every leaf of it
             self._commit(m, [v_new], stack)

@@ -301,7 +301,7 @@ EXPECTED_SHUFFLES = {
     # materializes the cached sets once, so the real data motion is:
     # bucket rollup, candidate distinct, two joins, map-side
     # array_intersect — candidate mass S-curve-bounded, never
-    # vocabulary-quadratic (SOAK_r09_ngram4x.json measured the old
+    # vocabulary-quadratic (history/SOAK_r09_ngram4x.json measured the old
     # posting-join generation at 15.75x on 4x open-vocab docs)
     "ngram_jaccard_pairs": 9,
     "multimodal_byte_histogram": 1,  # Arrow kernel map + one rollup

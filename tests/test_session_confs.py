@@ -1,30 +1,17 @@
 """Session-factory contract tests (no SparkSession needed).
 
-Two round-8 lessons live here as code:
-
-* `_norm_jvm_mem` (ADVICE r8): `spark.driver.memory` reads a bare
-  number as MiB but `-Xms1500` means 1500 BYTES, so interpolating the
-  `SPARK_GRAFT_DRIVER_MEM` env value verbatim into extraJavaOptions
-  made such a value fail JVM launch.  Bare digits must gain an 'm';
-  garbage must fail loudly at the factory, not inside the JVM.
-
-* `max_concurrent_tasks_for_heap` (VERDICT r8 #6): the open-vocab soak
-  measured a ~0.7 GiB/task-slot execution-memory floor for the
-  shingle-explode aggregation family (32 tasks on 12 GiB starved the
-  spill handoff itself; 48 GiB ran).  The 100 TB provisioning rule
-  ships as a helper, not prose.
+`_norm_jvm_mem` (ADVICE r8): `spark.driver.memory` reads a bare number
+as MiB but `-Xms1500` means 1500 BYTES, so interpolating the
+`SPARK_GRAFT_DRIVER_MEM` env value verbatim into extraJavaOptions made
+such a value fail JVM launch.  Bare digits must gain an 'm'; garbage
+must fail loudly at the factory, not inside the JVM.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from realtime_data_pipeline_spark.session import (
-    SHINGLE_AGG_TASK_FLOOR_BYTES,
-    _mem_bytes,
-    _norm_jvm_mem,
-    max_concurrent_tasks_for_heap,
-)
+from realtime_data_pipeline_spark.session import _norm_jvm_mem
 
 
 @pytest.mark.parametrize(
@@ -46,56 +33,3 @@ def test_norm_jvm_mem_accepts_and_normalizes(raw, want):
 def test_norm_jvm_mem_rejects_non_jvm_sizes(raw):
     with pytest.raises(ValueError):
         _norm_jvm_mem(raw)
-
-
-def test_mem_bytes():
-    assert _mem_bytes("1g") == 1024**3
-    assert _mem_bytes("512m") == 512 * 1024**2
-    assert _mem_bytes("2048") == 2048 * 1024**2  # bare digits = MiB
-
-
-def test_task_floor_is_the_measured_value():
-    # the soak's number: ~0.7 GiB per concurrent task slot
-    assert SHINGLE_AGG_TASK_FLOOR_BYTES == 700 * 1024**2
-
-
-def test_max_concurrent_tasks_reproduces_the_soak():
-    # 12 GiB heap @ 0.6 memory fraction = 7.2 GiB usable -> 10 slots;
-    # the soak ran 32 concurrent tasks on it and starved.  The helper
-    # must say "10", i.e. 32 was over-subscribed.
-    assert max_concurrent_tasks_for_heap("12g") == 10
-    assert max_concurrent_tasks_for_heap("12g") < 32
-    # 48 GiB (the heap that ran the same step green) supports 32+ slots
-    assert max_concurrent_tasks_for_heap("48g") >= 32
-    # tiny heaps never return 0 — a single task spills earlier instead
-    assert max_concurrent_tasks_for_heap("512m") == 1
-
-def test_corpus_shuffle_partitions_reproduces_the_lever_soak():
-    """The round-11 partition-lever artifacts
-    (SOAK_r11_20x_parts{2x,4x}.json): at 10M docs / 100M events the
-    2x setting (1142 partitions from 175k rows/task) was the measured
-    spill/wall sweet spot.  The helper must reproduce that sizing from
-    the corpus volumes, track the volume-carrying table, and floor at
-    the core count for small jobs."""
-    from realtime_data_pipeline_spark.session import (
-        CORPUS_ROWS_PER_TASK,
-        corpus_shuffle_partitions,
-        default_parallelism,
-    )
-
-    assert CORPUS_ROWS_PER_TASK == 175_000
-    n = default_parallelism()
-    # the lever soak's sweet-spot point: eff = max(100M, 20*10M) = 200M;
-    # expectations take the core-count floor so the test holds on any
-    # host (a >1142-core box legitimately floors higher)
-    assert corpus_shuffle_partitions(
-        n_events=100_000_000, n_docs=10_000_000
-    ) == max(n, 200_000_000 // 175_000)
-    assert 200_000_000 // 175_000 == 1142  # the artifact's number
-    # docs-only and vecs-only volumes carry their equivalences
-    assert corpus_shuffle_partitions(n_docs=10_000_000) == max(n, 1142)
-    assert corpus_shuffle_partitions(n_vecs=10_000_000) == max(
-        n, 30_000_000 // 175_000
-    )
-    # small jobs floor at the core count
-    assert corpus_shuffle_partitions(n_events=1000) == n

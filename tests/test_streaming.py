@@ -170,7 +170,8 @@ def test_restart_after_crash_at_flip_matches_batch(
 def test_monitor_collects_progress(parity_setup):
     _, _, mon, _ = parity_setup
     assert mon.total_rows > 0
-    assert all(b.lag >= 0 for b in mon.history)
+    # a file source reports no backlog metric, so every batch's lag is 0
+    assert mon.history and all(b.lag == 0 for b in mon.history)
 
 
 def _progress_event(batch_id, source, dropped, **fields):

@@ -12,8 +12,10 @@ mode and layout are fixed when it is created, (g) that marks
 order timestamps the way Spark does, (h) that a held snapshot
 outlives the fold that supersedes it by RETAIN_S seconds, not by a
 count of merges, (i) that reads use the schema the manifest
-records, and (j) that an append or an empty batch is one Spark job
-and a merge leaves no staging directory behind.
+records, (j) that an append or an empty batch is one Spark job
+and a merge leaves no staging directory behind, and (k) that a
+rewrite is two jobs on an adaptive session and keeps every row whose
+key has a null part.
 """
 
 from __future__ import annotations
@@ -168,6 +170,33 @@ def test_rewrite_leaves_no_staging_and_contiguous_versions(spark, tmp_path):
     got = {(r.w, r.k): r.v for r in t.read().collect()}
     assert len(got) == 8 and got[(2, 0)] == got[(2, 1)] == 999
     assert got[(2, 2)] == 202
+
+
+def test_rewrite_is_two_jobs_on_an_adaptive_session(
+    spark, tmp_path, spark_jobs
+):
+    """The fold has no join, so adaptive execution, which runs each
+    shuffle stage as a job of its own, finds no stage to split: a
+    rewrite is the staged write and the fold's write."""
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    t = UpsertTable(spark, str(tmp_path / "t"), ["w", "k"], monotone_col="w")
+    t.merge(_batch(spark, 1, range(4)))
+    stats, jobs = spark_jobs(
+        lambda: t.merge(_df(spark, [(1, k, 999) for k in range(2)]))
+    )
+    assert jobs == 2
+    assert (stats.kind, stats.rows, stats.leaves) == ("rewrite", 2, 1)
+    assert _snapshot(t) == [(1, 0, 999), (1, 1, 999), (1, 2, 102), (1, 3, 103)]
+
+
+def test_rewrite_keeps_every_null_key_row(spark, tmp_path):
+    """Under SQL null-equality a key with a null part matches no stored
+    key, so a rewrite replaces none of its rows."""
+    t = UpsertTable(spark, str(tmp_path / "t"), ["w", "k"])
+    t.merge(_df(spark, [(None, 9, 1), (1, 1, 1)]))
+    stats = t.merge(_df(spark, [(None, 9, 77), (1, 1, 2)]))
+    assert stats.kind == "rewrite"
+    assert _snapshot(t) == [(1, 1, 2), (None, 9, 1), (None, 9, 77)]
 
 
 def test_replay_of_appended_batch_is_idempotent(spark, tmp_path):
