@@ -32,8 +32,8 @@ unchanged snapshot starts no Spark job, and one over a snapshot with a
 new leaf reruns the panels over the whole snapshot.  T1, A6/T2 and T3
 collect their own Spark query.  A3 and A4/A5 share one aggregate over
 the snapshot, with A3's rounding done by that query (Spark's HALF_UP
-`round`), so a refresh's first call of either answers both; A4/A5
-asks for it with A3's default digits.
+`round` to 2 digits), so a refresh's first call of either answers
+both.
 
 The memo keeps the `_MEMO_MAX` most recently used entries, keyed by
 (table id, leaf versions, panel, arguments), in this process's memory.
@@ -106,8 +106,8 @@ def _memoized(panel):
     return run
 
 
-def _avg(ndigits: int):
-    return F.round(F.avg("total_interactions"), ndigits).alias("avg_interactions")
+def _avg():
+    return F.round(F.avg("total_interactions"), 2).alias("avg_interactions")
 
 
 def _extrema():
@@ -119,26 +119,26 @@ def _extrema():
 
 
 @_memoized
-def _aggregates(agg: DataFrame, ndigits: int) -> DataFrame:
+def _aggregates(agg: DataFrame) -> DataFrame:
     """A3's and A4/A5's aggregates in one query, so that over a
     Snapshot one miss answers both panels.  One partition: one job, with
     no exchange before the final aggregate."""
-    return agg.coalesce(1).agg(_avg(ndigits), *_extrema())
+    return agg.coalesce(1).agg(_avg(), *_extrema())
 
 
-def avg_interactions(agg: DataFrame, ndigits: int = 2) -> DataFrame | PanelRows:
-    """A3: global mean of total_interactions over aggregate rows."""
+def avg_interactions(agg: DataFrame) -> DataFrame | PanelRows:
+    """A3: global mean of total_interactions over aggregate rows, to 2
+    digits."""
     if isinstance(agg, Snapshot):
-        (row,) = _aggregates(agg, ndigits).collect()
+        (row,) = _aggregates(agg).collect()
         return PanelRows([Row(avg_interactions=row.avg_interactions)])
-    return agg.agg(_avg(ndigits))
+    return agg.agg(_avg())
 
 
 def interaction_extrema(agg: DataFrame) -> DataFrame | PanelRows:
     """A4+A5: global max/min of total_interactions over aggregate rows."""
     if isinstance(agg, Snapshot):
-        # A3's default digits: a refresh asks for both panels
-        (row,) = _aggregates(agg, 2).collect()
+        (row,) = _aggregates(agg).collect()
         return PanelRows([Row(
             max_interactions=row.max_interactions,
             min_interactions=row.min_interactions,

@@ -97,11 +97,10 @@ def windowed_stream_counts(
     events: DataFrame,
     key_col: str,
     ts_col: str = "timestamp",
-    window: str = "10 minutes",
     slide: str | None = "5 minutes",
     watermark: str | None = "10 minutes",
 ) -> DataFrame:
-    """W1+A1/A2: watermarked sliding-window count per key
+    """W1+A1/A2: watermarked 10-minute sliding-window count per key
     (consumer/consumer.py:112-140).
 
     Works identically on batch DataFrames (withWatermark is a no-op in
@@ -111,11 +110,7 @@ def windowed_stream_counts(
     carries one (an upstream stateful operator such as
     dropDuplicatesWithinWatermark) — Spark forbids redefining it.
     """
-    win = (
-        F.window(F.col(ts_col), window, slide)
-        if slide
-        else F.window(F.col(ts_col), window)
-    )
+    win = F.window(F.col(ts_col), "10 minutes", slide)
     return (
         (events.withWatermark(ts_col, watermark) if watermark else events)
         .groupBy(win.alias("window"), F.col(key_col))

@@ -8,13 +8,15 @@ Layout and why:
 * a table is ONE stack of leaves, each leaf one parquet file; a merge
   either appends a leaf or rewrites the stack into one leaf;
 * Spark cannot safely overwrite a parquet path it is reading in the
-  same job, so each merge writes a new `v=<n>/__bucket=0` leaf and a
-  `_CURRENT` JSON manifest (stack → leaf versions) flips atomically via
-  os.replace.  Checkpoint replay of a micro-batch re-merges the same
-  rows under the same keys — idempotent, exactly the property the
-  reference gets from Mongo upsert (SURVEY §1.4.3);
-* the manifest keeps a one-bucket form (bucket "0", `n_buckets` 1)
-  because perfbench's traced run reads `buckets` from `_CURRENT`.
+  same job, so each merge writes a new leaf, the directory `v=<n>/`,
+  and the table's one metadata file, the `_CURRENT` JSON manifest,
+  flips atomically via os.replace.  Checkpoint replay of a micro-batch
+  re-merges the same rows under the same keys — idempotent, exactly
+  the property the reference gets from Mongo upsert (SURVEY §1.4.3);
+* the manifest lists every readable version: `versions` maps each
+  published version whose leaves are all still on disk to its leaf
+  versions, oldest first.  The table directory holds `_CURRENT`, the
+  `v=<n>/` leaves and, during a merge, `_staging` — nothing else.
 
 One Spark job per merge.  A merge writes its batch once, as one file,
 to the table's `_staging` directory; that write carries an Observation
@@ -66,25 +68,28 @@ deletedFileRetentionDuration: a leaf a merge supersedes stays on disk
 until the first commit at least `RETAIN_S` seconds after that merge.
 A snapshot a reader holds — the frame `read()` returns — therefore
 stays readable for `RETAIN_S` seconds after the merge that supersedes
-it, however many merges run meanwhile; `read(version=N)` works while
-N's leaves are still on disk.
+it, however many merges run meanwhile.  The commit that unlinks a leaf
+drops from `versions` every version that names it, so a version stays
+listed, and `read(version=N)` works, exactly while N's leaves are on
+disk; an expired version leaves no file behind.
 
 Reads.  `read()` and `read(version=N)` return a `Snapshot`: a
 DataFrame over the version's leaves that also carries the table's
 creation id and the leaf versions.  Leaves are immutable, so the two
 together name the snapshot's rows, and what a reader derived from one
 snapshot holds for every later read with the same id and versions
-(`operators/kpis.py` answers dashboard panels that way).  The manifest records, at creation, `table_id`, a
-random creation id: a table deleted and recreated at the same path
-reuses version numbers, so only the id tells the two apart.  Every
-commit records `schema`, the schema of the frame it wrote; reads,
-including the rewrite's read of the stored rows, pass it to Spark
-(which makes every field nullable, as an inferring read would), so
-they start no schema-inference job.  A manifest without either field
-is refused on open.  Readers keep what they derive in memory and write
-nothing into the table directory: a file a reader wrote under `v=<N>/`
-could race a commit's unlink of that version root and recreate it
-outside the pending-delete ledger.
+(`operators/kpis.py` answers dashboard panels that way).  The manifest
+records, at creation, `table_id`, a random creation id: a table
+deleted and recreated at the same path reuses version numbers, so only
+the id tells the two apart.  Every commit records `schema`, the schema
+of the frame it wrote; reads, including the rewrite's read of the
+stored rows, pass it to Spark (which makes every field nullable, as an
+inferring read would), so they start no schema-inference job.  A
+manifest without `schema`, `table_id` or `versions` was written by an
+older version of this sink and is refused on open.  Readers keep what
+they derive in memory and write nothing into the table directory: a
+file a reader wrote under `v=<N>/` could race a commit's unlink of
+that leaf and recreate it outside the pending-delete ledger.
 """
 
 from __future__ import annotations
@@ -105,11 +110,6 @@ from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 from pyspark.sql.types import IntegralType, StructType, TimestampType
 
 _CURRENT = "_CURRENT"
-# The manifest key of the one leaf stack, and its directory under each
-# version root: the one-bucket form of the hash-bucketed layout this
-# replaced, whose manifests (`n_buckets` above 1) a reopen refuses.
-_STACK = "0"
-_LEAF = "__bucket=0"
 # The leaf stack folds back into one leaf once it stacks this many.
 STACK_MAX = 8
 # Seconds a superseded leaf outlives the merge that superseded it: more
@@ -177,18 +177,19 @@ class UpsertTable:
         self.monotone_col = monotone_col
 
     # -- manifest management --------------------------------------------
-    def _load(self, name: str) -> dict | None:
-        """The manifest file `name`: {"version": int, "buckets": {"0":
-        [leaf version, ...]}, "n_buckets": 1, "monotone_col": str |
-        None, "table_id": creation id, "schema": the schema of the
-        frame the last commit wrote (StructType JSON), "pending": [...], "marks":
-        {"0": int high-water mark} (monotone mode only)}.
-        None only when the file does not exist; an unreadable manifest,
-        or one written in another layout or mode, or without a schema
-        or creation id, raises rather than passing for an empty or
-        differently keyed table."""
+    def _manifest(self) -> dict | None:
+        """The manifest `_CURRENT`: {"version": int, "versions": {"<N>":
+        [leaf version, ...]} for every readable version N, "buckets":
+        {"0": the current stack}, "monotone_col": str | None,
+        "table_id": creation id, "schema": the schema of the frame the
+        last commit wrote (StructType JSON), "pending": [[leaf version,
+        superseded at], ...], "mark": int high-water mark (monotone
+        mode only)}.  None only when the table does not exist yet; an
+        unreadable manifest, or one written in another mode or by an
+        older version of this sink, raises rather than passing for an
+        empty or differently keyed table."""
         try:
-            with open(os.path.join(self.path, name)) as f:
+            with open(os.path.join(self.path, _CURRENT)) as f:
                 m = json.load(f)
         except FileNotFoundError:
             return None
@@ -196,16 +197,12 @@ class UpsertTable:
             raise ValueError(
                 f"table at {self.path} has an unreadable manifest: {e}"
             ) from e
-        for field, value in (
-            ("n_buckets", 1),
-            ("monotone_col", self.monotone_col),
-        ):
-            if m.get(field) != value:
-                raise ValueError(
-                    f"table at {self.path} was written with "
-                    f"{field}={m.get(field)!r}, opened with {value!r}"
-                )
-        for field in ("schema", "table_id"):
+        if m.get("monotone_col") != self.monotone_col:
+            raise ValueError(
+                f"table at {self.path} was written with monotone_col="
+                f"{m.get('monotone_col')!r}, opened with {self.monotone_col!r}"
+            )
+        for field in ("schema", "table_id", "versions"):
             if field not in m:
                 raise ValueError(
                     f"table at {self.path} has a manifest without "
@@ -213,66 +210,57 @@ class UpsertTable:
                 )
         return m
 
-    def _manifest(self) -> dict | None:
-        """The current manifest; None only when the table does not
-        exist yet."""
-        return self._load(_CURRENT)
-
     def _flip(self, manifest: dict) -> None:
-        # The immutable snapshot of this version's manifest — the
-        # metadata log that makes read(version=N) possible, kept forever
-        # like a table-format transaction log — is written BEFORE the
-        # flip, so every published version has one.  A crash in between
-        # leaves a snapshot above the current version, which versions()
-        # ignores and the retried commit overwrites.
         os.makedirs(self.path, exist_ok=True)
-        for name in (f"manifest.v{manifest['version']}.json", _CURRENT):
-            tmp = os.path.join(self.path, name + ".tmp")
-            with open(tmp, "w") as f:
-                json.dump(manifest, f)
-            os.replace(tmp, os.path.join(self.path, name))
+        tmp = os.path.join(self.path, _CURRENT + ".tmp")
+        with open(tmp, "w") as f:
+            json.dump(manifest, f)
+        os.replace(tmp, os.path.join(self.path, _CURRENT))
 
     def _commit(self, m: dict, stack: list, superseded: list) -> None:
         """Publish the next version of `m` with the leaf stack `stack`.
         The `superseded` leaves enter the pending-delete ledger.
 
-        Pending-delete ledger: [v_old, "0", t_sup] = the leaf of version
+        Pending-delete ledger: [v_old, t_sup] = the leaf of version
         v_old was superseded by the commit made at wall-clock time
         t_sup.  It is ripe once RETAIN_S seconds have passed since then;
         an entry this commit adds never is.  Ripe leaves are unlinked by
         exact path — no directory walking on the hot path — before the
-        flip, and the flip drops them from the ledger.  A crash in
-        between leaves them in the current manifest's ledger, so the
-        next commit unlinks them again (rmtree is idempotent) instead of
-        leaking them."""
+        flip, and the flip drops them from the ledger and every version
+        that names one of them from `versions`.  A crash in between
+        leaves them in the current manifest's ledger, so the next
+        commit unlinks them again (rmtree is idempotent) instead of
+        leaking them; until then the versions that name them stay
+        listed, and reading one fails on a missing file."""
         now = time.time()
-        pending = m.get("pending", [])
-        for v_old, _stack, t_sup in pending:
-            if t_sup <= now - RETAIN_S:
-                # a version root holds its one leaf and nothing else
-                shutil.rmtree(
-                    os.path.join(self.path, f"v={v_old}"), ignore_errors=True
-                )
-        m["pending"] = [p for p in pending if p[2] > now - RETAIN_S] + [
-            [v_old, _STACK, now] for v_old in superseded
+        ripe = {v for v, t_sup in m["pending"] if t_sup <= now - RETAIN_S}
+        for v_old in ripe:
+            shutil.rmtree(self._leaf(v_old), ignore_errors=True)
+        m["pending"] = [p for p in m["pending"] if p[0] not in ripe] + [
+            [v_old, now] for v_old in superseded
         ]
         m["version"] += 1
-        m["buckets"] = {_STACK: stack}
+        m["versions"] = {
+            n: leaves
+            for n, leaves in m["versions"].items()
+            if ripe.isdisjoint(leaves)
+        }
+        m["versions"][str(m["version"])] = stack
+        # perfbench's traced run reads the current stack here; this goes
+        # once it reads `MergeStats` instead
+        m["buckets"] = {"0": stack}
         self._flip(m)
 
     def _leaf(self, version: int) -> str:
-        return os.path.join(self.path, f"v={version}", _LEAF)
+        return os.path.join(self.path, f"v={version}")
 
-    def _leaves(self, m: dict) -> list[str]:
-        return [self._leaf(v) for v in m["buckets"][_STACK]]
-
-    def _snapshot(self, m: dict) -> Snapshot:
-        """The stored rows of manifest `m`, read with the manifest's
+    def _snapshot(self, m: dict, stack: list) -> Snapshot:
+        """The rows of the leaves `stack`, read with the manifest's
         schema, so the read starts no schema-inference job."""
         return Snapshot._of(
             self.spark,
             StructType.fromJson(m["schema"]),
-            dict(zip(m["buckets"][_STACK], self._leaves(m))),
+            {v: self._leaf(v) for v in stack},
             m["table_id"],
         )
 
@@ -304,42 +292,28 @@ class UpsertTable:
         readable for RETAIN_S seconds after that merge, however many
         merges run meanwhile; past that, reading it may fail on a
         missing file."""
+        m = self._manifest()
         if version is None:
-            m = self._manifest()
-            if m is None:
-                return None
-        else:
-            m = self._load(f"manifest.v{version}.json")
-            if m is None:
-                raise ValueError(
-                    f"no snapshot manifest for version {version}; "
-                    f"available: {self.versions()}"
-                )
-        if version is not None:
-            gone = [p for p in self._leaves(m) if not os.path.isdir(p)]
-            if gone:
+            return None if m is None else self._snapshot(m, _stack(m))
+        stack = m["versions"].get(str(version)) if m else None
+        if stack is None:
+            if m and 1 <= version <= m["version"]:
                 raise ValueError(
                     f"version {version} is older than the retention "
-                    f"window (RETAIN_S={RETAIN_S} s): {len(gone)} of "
-                    "its leaves were deleted"
+                    f"window (RETAIN_S={RETAIN_S} s): its leaves were "
+                    "deleted"
                 )
-        return self._snapshot(m)
+            raise ValueError(
+                f"no version {version}; available: {self.versions()}"
+            )
+        return self._snapshot(m, stack)
 
     def versions(self) -> list[int]:
-        """Published versions: those with a snapshot manifest on disk,
-        up to the current one — a crash before the flip can leave the
-        next version's snapshot behind.  Whether their leaves are still
-        on disk is governed by RETAIN_S."""
+        """The readable versions: those whose leaves are all still on
+        disk, the current one included.  How long a superseded version
+        stays readable is governed by RETAIN_S."""
         m = self._manifest()
-        if m is None:
-            return []
-        out = []
-        for e in os.listdir(self.path):
-            if e.startswith("manifest.v") and e.endswith(".json"):
-                v = int(e[len("manifest.v"):-len(".json")])
-                if v <= m["version"]:
-                    out.append(v)
-        return sorted(out)
+        return sorted(map(int, m["versions"])) if m else []
 
     # -- merge --------------------------------------------------------------
     def merge(self, batch: DataFrame) -> MergeStats:
@@ -392,42 +366,40 @@ class UpsertTable:
         n, lo, hi = (obs.get[k] for k in ("n", "lo", "hi"))
         if not n:
             shutil.rmtree(staging, ignore_errors=True)
-            stack = m["buckets"][_STACK] if m else []
             return MergeStats(
-                m["version"] if m else 0, "empty", 0, len(stack),
+                m["version"] if m else 0, "empty", 0,
+                len(_stack(m)) if m else 0,
                 (time.perf_counter() - t0) * 1000.0,
             )
         m = m or {
             "version": 0,
-            "buckets": {},
-            "n_buckets": 1,
+            "versions": {},
+            "pending": [],
             "monotone_col": self.monotone_col,
             "table_id": uuid.uuid4().hex,
         }
-        marks = m.setdefault("marks", {}) if self.monotone_col else {}
-        stack = m["buckets"].get(_STACK)
+        stack, mark = _stack(m), m.get("mark")
         # Append when nothing stored can collide: a new table, or
         # (monotone mode) a batch minimum strictly above the high-water
         # mark while the stack is still under STACK_MAX.  Everything
         # else rewrites: the batch plus the stored rows whose keys it
         # does not replace.
-        append = stack is None or (
+        append = not stack or (
             lo is not None
-            and _STACK in marks
-            and lo > marks[_STACK]
+            and mark is not None
+            and lo > mark
             and len(stack) < STACK_MAX
         )
         if self.monotone_col and hi is not None:
-            marks[_STACK] = max(marks.get(_STACK, hi), hi)
+            m["mark"] = hi if mark is None else max(mark, hi)
         v_new = m["version"] + 1
         leaf = self._leaf(v_new)
         if append:
             if os.path.exists(leaf):  # left by a crash before the flip
                 shutil.rmtree(leaf)
-            os.makedirs(os.path.dirname(leaf), exist_ok=True)
             os.replace(staging, leaf)
             m["schema"] = batch.schema.jsonValue()
-            self._commit(m, (stack or []) + [v_new], [])
+            self._commit(m, stack + [v_new], [])
         else:
             # Fold without a join: the staged rows, tagged newest, and
             # the stored rows meet in one partition, where a key keeps
@@ -444,7 +416,7 @@ class UpsertTable:
             )
             merged = (
                 staged.withColumn("__new", F.lit(1))
-                .unionByName(self._snapshot(m).withColumn("__new", F.lit(0)))
+                .unionByName(self._snapshot(m, stack).withColumn("__new", F.lit(0)))
                 .coalesce(1)
                 .withColumn("__rank", rank)
                 .where((F.col("__rank") == 1) | null_key)
@@ -459,9 +431,15 @@ class UpsertTable:
             v_new,
             "append" if append else "rewrite",
             n,
-            len(m["buckets"][_STACK]),
+            len(_stack(m)),
             (time.perf_counter() - t0) * 1000.0,
         )
+
+
+def _stack(m: dict) -> list[int]:
+    """The current leaf stack of manifest `m`, oldest first; empty
+    before the table's first commit."""
+    return m["versions"][str(m["version"])] if m["version"] else []
 
 
 # Serializes start_upsert_query's set-and-restore of the session's

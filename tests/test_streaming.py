@@ -67,8 +67,11 @@ def parity_setup(spark, tmp_path_factory):
     replay = str(base / "replay")
     _write_replay_fixture(spark, events, replay)
     mon = attach_monitor(spark)
-    table = _run_replay(spark, replay, str(base / "table"), str(base / "ckpt"))
-    return events, table, mon, base
+    try:
+        table = _run_replay(spark, replay, str(base / "table"), str(base / "ckpt"))
+        yield events, table, mon, base
+    finally:
+        spark.streams.removeListener(mon)
 
 
 def test_batch_stream_parity(spark, parity_setup):
@@ -621,7 +624,7 @@ def test_upsert_soak_bounded_versions_and_footprint(
     keeping only the current leaf plus the one its last merge
     superseded (ripe at the next commit with no retention time).
     Without vacuum the layout is O(batches) versions; this pins it at
-    two, of one part file each."""
+    two, of one part file each, next to the one metadata file."""
     import os
 
     # no retention time: the bounds below count merges
@@ -643,19 +646,12 @@ def test_upsert_soak_bounded_versions_and_footprint(
     got = {r.k: r.v for r in table.read().collect()}
     assert got == expect
 
-    # bounded version roots: current + grace, not O(n_batches)
+    # bounded version roots: current + grace, not O(n_batches); and
+    # bounded metadata: `_CURRENT` is the directory's only other entry
     versions = [d for d in os.listdir(path) if d.startswith("v=")]
     assert len(versions) <= 2, versions
-
-    # bounded leaf count: the current leaf plus the grace copy vacuum
-    # deliberately retains
-    leaves = [
-        (v, leaf)
-        for v in versions
-        for leaf in os.listdir(os.path.join(path, v))
-        if leaf.startswith("__bucket=")
-    ]
-    assert len(leaves) <= 2, leaves
+    assert sorted(os.listdir(path)) == sorted(versions + ["_CURRENT"])
+    assert len(table.versions()) == len(versions)
 
     # bounded data files: one part file per leaf, not O(n_batches)
     n_parts = sum(

@@ -1,5 +1,5 @@
-"""UpsertTable time travel: per-version snapshot manifests +
-historical reads bounded by the sink's retention in seconds
+"""UpsertTable time travel: `_CURRENT` lists every readable version,
+and historical reads are bounded by the sink's retention in seconds
 (`sinks.RETAIN_S`): version N reads back while its leaves are on disk,
 and raises once they are gone."""
 
@@ -43,6 +43,8 @@ def test_vacuumed_version_raises_not_wrong_data(spark, tmp_path, monkeypatch):
     _merge(t, spark, [("a", 3)])
     with pytest.raises(ValueError, match="retention window"):
         t.read(version=1)
+    assert t.versions() == [2, 3]
+    assert _snap(t, 2) == [("a", 2)]
     assert _snap(t) == [("a", 3)]
 
 

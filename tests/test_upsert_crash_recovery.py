@@ -2,13 +2,13 @@
 
 A merge stages the batch, moves it into place as its leaf (an append)
 or folds it with the stored rows into the leaf (a rewrite), unlinks
-ripe superseded leaves, writes the version's snapshot manifest and
-flips `_CURRENT`.  A crash at any of
-those steps, followed by a replay of the same batch through a fresh
-`UpsertTable` (what a restart from the streaming checkpoint does), must
-leave the table equal to a last-write-wins model, every leaf
-`_CURRENT` names on disk, every published version listed, and nothing
-leaked once RETAIN_S has passed.
+ripe superseded leaves and flips `_CURRENT`, the table's one metadata
+file.  A crash at any of those steps, followed by a replay of the same
+batch through a fresh `UpsertTable` (what a restart from the streaming
+checkpoint does), must leave the table equal to a last-write-wins
+model, every leaf `_CURRENT` names on disk, exactly the versions whose
+leaves are all on disk listed, and nothing leaked once RETAIN_S has
+passed.
 """
 
 from __future__ import annotations
@@ -79,28 +79,48 @@ def _at_flip(after):
     return patch
 
 
-def _merge(spark, table, model, w, batch):
+def _manifest(path):
+    with open(os.path.join(path, "_CURRENT")) as f:
+        return json.load(f)
+
+
+def _merge(spark, table, model, published, w, batch):
+    """Merge `batch` into window `w`, and record in `published` the leaf
+    stack of the version current afterwards, also when the merge
+    crashes (a crash after the flip has published it)."""
     model.update({(w, k): v for k, v in batch.items()})
     rows = [(w, k, v) for k, v in batch.items()]
-    table.merge(spark.createDataFrame(rows, "w int, k int, v int"))
+    try:
+        table.merge(spark.createDataFrame(rows, "w int, k int, v int"))
+    finally:
+        m = _manifest(table.path)
+        published[m["version"]] = m["versions"][str(m["version"])]
 
 
 def _on_disk_leaves(path):
+    """The leaves on disk: `v=<N>` directories holding a part file."""
     return {
-        os.path.join(path, v, b)
+        os.path.join(path, v)
         for v in os.listdir(path)
         if v.startswith("v=")
-        for b in os.listdir(os.path.join(path, v))
-        if b.startswith("__bucket=")
+        and any(f.startswith("part-") for f in os.listdir(os.path.join(path, v)))
     }
 
 
-def _check(table, model):
+def _check(table, model, published):
+    """The table equals the model, and the listed versions are exactly
+    the published ones whose leaves are all on disk, the current one
+    included."""
     assert {(r.w, r.k): r.v for r in table.read().collect()} == model
-    with open(os.path.join(table.path, "_CURRENT")) as f:
-        m = json.load(f)
-    assert set(table._leaves(m)) <= _on_disk_leaves(table.path)
-    assert table.versions() == list(range(1, m["version"] + 1))
+    m = _manifest(table.path)
+    on_disk = _on_disk_leaves(table.path)
+    readable = [
+        n
+        for n, stack in sorted(published.items())
+        if {table._leaf(v) for v in stack} <= on_disk
+    ]
+    assert m["version"] in readable
+    assert table.versions() == readable
     return m
 
 
@@ -125,39 +145,47 @@ def test_replay_after_crash_restores_table(spark, tmp_path, monkeypatch, crash):
     monkeypatch.setattr(sinks, "RETAIN_S", 0)
     path = str(tmp_path / "t")
     model: dict[tuple[int, int], int] = {}
+    published: dict[int, list[int]] = {}
     keys = range(8)
 
     def open_table():
         return UpsertTable(spark, path, ["w", "k"], monotone_col="w")
 
     table = open_table()
-    _merge(spark, table, model, 1, {k: 1 for k in keys})
-    _merge(spark, table, model, 2, {k: 2 for k in keys})  # append: [1, 2]
+    _merge(spark, table, model, published, 1, {k: 1 for k in keys})
+    # an append: [1, 2]
+    _merge(spark, table, model, published, 2, {k: 2 for k in keys})
     # window 2 again collides: the rewrite folds the stack, so its 2
     # leaves are pending and ripe at the crashed commit
-    _merge(spark, table, model, 2, {k: 3 for k in keys})
+    _merge(spark, table, model, published, 2, {k: 3 for k in keys})
 
     crashed = {k: 4 for k in keys}
     with monkeypatch.context() as mp:
         crash(mp)
         with pytest.raises(Crash):
-            _merge(spark, table, {}, 2, crashed)
+            _merge(spark, table, {}, published, 2, crashed)
     table = open_table()  # the restart
-    _merge(spark, table, model, 2, crashed)  # the checkpoint replay
-    _check(table, model)
+    _merge(spark, table, model, published, 2, crashed)  # the checkpoint replay
+    _check(table, model, published)
 
     # RETAIN_S = 0 has passed by the next commit: the only leaves left
     # on disk are the ones `_CURRENT` names and the one that commit
     # superseded itself, and no version root is left without a leaf.
-    _merge(spark, table, model, 2, {k: 5 for k in keys})
-    m = _check(table, model)
-    pending = {table._leaf(v) for v, _stack, _t in m["pending"]}
+    _merge(spark, table, model, published, 2, {k: 5 for k in keys})
+    m = _check(table, model, published)
+    pending = {table._leaf(v) for v, _t in m["pending"]}
     assert len(m["pending"]) == 1
-    assert _on_disk_leaves(path) == set(table._leaves(m)) | pending
-    roots = {os.path.dirname(p) for p in _on_disk_leaves(path)}
-    assert roots == {
+    stack = {table._leaf(v) for v in m["versions"][str(m["version"])]}
+    assert _on_disk_leaves(path) == stack | pending
+    assert _on_disk_leaves(path) == {
         os.path.join(path, d) for d in os.listdir(path) if d.startswith("v=")
     }
+    # the listed versions are the current one and the one that named
+    # the pending leaf; no other metadata is left in the directory
+    assert len(table.versions()) == 2
+    assert sorted(os.listdir(path)) == sorted(
+        ["_CURRENT"] + [os.path.basename(p) for p in stack | pending]
+    )
 
 
 @pytest.mark.parametrize(
@@ -174,25 +202,25 @@ def test_replay_after_crash_in_append_restores_table(
     nor an unpublished leaf behind."""
     path = str(tmp_path / "t")
     model: dict[tuple[int, int], int] = {}
+    published: dict[int, list[int]] = {}
     keys = range(8)
 
     def open_table():
         return UpsertTable(spark, path, ["w", "k"], monotone_col="w")
 
     table = open_table()
-    _merge(spark, table, model, 1, {k: 1 for k in keys})
-    _merge(spark, table, model, 2, {k: 2 for k in keys})
+    _merge(spark, table, model, published, 1, {k: 1 for k in keys})
+    _merge(spark, table, model, published, 2, {k: 2 for k in keys})
     crashed = {k: 3 for k in keys}
     with monkeypatch.context() as mp:
         crash(mp)
         with pytest.raises(Crash):
-            _merge(spark, table, {}, 3, crashed)  # an append: w=3 > mark
+            # an append: w=3 > mark
+            _merge(spark, table, {}, published, 3, crashed)
     table = open_table()  # the restart
-    _merge(spark, table, model, 3, crashed)  # the checkpoint replay
-    m = _check(table, model)
-    names = {f"v={v}" for v in m["buckets"]["0"]} | {
-        f"v={v}" for v, _stack, _t in m.get("pending", [])
+    _merge(spark, table, model, published, 3, crashed)  # the checkpoint replay
+    m = _check(table, model, published)
+    names = {f"v={v}" for v in m["versions"][str(m["version"])]} | {
+        f"v={v}" for v, _t in m["pending"]
     }
-    assert {d for d in os.listdir(path) if not d.startswith("manifest.v")} == (
-        names | {"_CURRENT"}
-    )
+    assert set(os.listdir(path)) == names | {"_CURRENT"}

@@ -8,14 +8,16 @@ pin (a) result equivalence with the classic path on every sequence,
 (b) that appends really do not rewrite or supersede old leaves,
 (c) the STACK_MAX fold, (d) replay/overlap falling back to the
 rewrite path, (e) time travel over stacked leaves, (f) that a table's
-mode and layout are fixed when it is created, (g) that marks
-order timestamps the way Spark does, (h) that a held snapshot
-outlives the fold that supersedes it by RETAIN_S seconds, not by a
-count of merges, (i) that reads use the schema the manifest
+mode is fixed when it is created and a manifest of an older format is
+refused, (g) that marks order timestamps the way Spark does, (h) that
+a held snapshot outlives the fold that supersedes it by RETAIN_S
+seconds, not by a count of merges, and a version stops being listed
+when its leaves go, (i) that reads use the schema the manifest
 records, (j) that an append or an empty batch is one Spark job
 and a merge leaves no staging directory behind, and (k) that a
 rewrite is two jobs on an adaptive session and keeps every row whose
-key has a null part.
+key has a null part, and (l) that a leaf path adds no partition
+column.
 """
 
 from __future__ import annotations
@@ -50,6 +52,11 @@ def _manifest(path):
         return json.load(f)
 
 
+def _stack(m):
+    """The current leaf stack the manifest `m` lists."""
+    return m["versions"][str(m["version"])]
+
+
 def _leaf_mtimes(path):
     out = {}
     for root, _dirs, files in os.walk(path):
@@ -81,12 +88,12 @@ def test_fast_append_stacks_leaves_without_superseding(spark, tmp_path):
     t.merge(_batch(spark, 2, range(8)))
     m2 = _manifest(path)
     # the stack grew to 2 leaves; nothing pending
-    assert len(m2["buckets"]["0"]) == 2, m2["buckets"]
-    assert m2.get("pending", []) == []
+    assert _stack(m2) == [1, 2], m2["versions"]
+    assert m2["pending"] == []
     # the v1 leaf files were not rewritten (same paths, same mtimes)
     files_after = _leaf_mtimes(path)
     for p, mt in files_before.items():
-        if f"v={m1['version']}" in p and "manifest" not in p:
+        if f"v={m1['version']}" in p and "_CURRENT" not in p:
             assert files_after.get(p) == mt, p
     assert len(t.read().collect()) == 16
 
@@ -99,20 +106,16 @@ def test_overlap_falls_back_to_rewrite_and_upserts(spark, tmp_path):
     # same w=2 again with different values: keys collide -> rewrite
     t.merge(_df(spark, [(2, k, 999) for k in range(4)]))
     m = _manifest(path)
-    assert len(m["buckets"]["0"]) == 1, m["buckets"]
+    assert _stack(m) == [3], m["versions"]
     got = {(r.w, r.k): r.v for r in t.read().collect()}
     assert all(got[(2, k)] == 999 for k in range(4))
     assert len(got) == 8  # no duplicate keys after the fold
 
 
 def _table_entries(path):
-    """What a table directory holds besides its manifests and leaves."""
+    """What a table directory holds besides its manifest and leaves."""
     return [
-        e
-        for e in os.listdir(path)
-        if e != "_CURRENT"
-        and not e.startswith("v=")
-        and not (e.startswith("manifest.v") and e.endswith(".json"))
+        e for e in os.listdir(path) if e != "_CURRENT" and not e.startswith("v=")
     ]
 
 
@@ -128,7 +131,7 @@ def test_append_merge_is_one_job(spark, tmp_path, spark_jobs):
         2, "append", 3, 2,
     )
     assert stats.ms > 0
-    assert _manifest(path)["buckets"]["0"] == [1, 2]
+    assert _stack(_manifest(path)) == [1, 2]
     assert _table_entries(path) == []
     assert len(_snapshot(t)) == 7
 
@@ -215,11 +218,7 @@ def test_stack_max_forces_fold(spark, tmp_path, monkeypatch):
     t = UpsertTable(spark, path, ["w", "k"], monotone_col="w")
 
     def parts_per_leaf():
-        m = _manifest(path)
-        leaves = [
-            os.path.join(path, f"v={v}", "__bucket=0")
-            for v in m["buckets"]["0"]
-        ]
+        leaves = [os.path.join(path, f"v={v}") for v in _stack(_manifest(path))]
         return [
             sum(
                 f.startswith("part-") and f.endswith(".parquet")
@@ -287,10 +286,14 @@ def test_superseded_leaves_go_once_retain_s_has_passed(
         t.merge(_batch(spark, 5, range(4)))  # folds the stack [3, 4]
     assert not any(os.path.exists(p) for p in folded)
     m = _manifest(path)
-    assert m["buckets"]["0"] == [5]
+    assert _stack(m) == [5]
     for v in (3, 4, 5):
-        assert os.path.isdir(os.path.join(path, f"v={v}", "__bucket=0")), v
+        assert os.path.isdir(os.path.join(path, f"v={v}")), v
     assert sorted(p[0] for p in m["pending"]) == [3, 4]
+    # the versions that named leaf 1 or 2 expired with them
+    assert t.versions() == [3, 4, 5]
+    with pytest.raises(ValueError, match="retention window"):
+        t.read(version=2)
     assert len(t.read().collect()) == 20
 
 
@@ -340,7 +343,7 @@ def test_timestamp_monotone_marks_roundtrip_manifest(spark, tmp_path):
 
     t.merge(b(1, range(3)))
     t.merge(b(2, range(3)))  # strictly later -> append
-    assert len(_manifest(path)["buckets"]["0"]) == 2
+    assert len(_stack(_manifest(path))) == 2
     t.merge(b(2, range(3)))  # replay -> fold
     assert len(t.read().collect()) == 6
 
@@ -374,31 +377,38 @@ def test_reopen_with_different_monotone_col_raises(
     assert [r.v for r in t.read().collect()] == [1]
 
 
-def test_reopen_with_different_bucket_count_raises(spark, tmp_path):
-    """A table is one leaf stack, recorded as `n_buckets: 1`.  A table
-    written in the older 16-bucket layout keeps most of its rows in
-    buckets 1-15, which this sink never reads, so opening one must
-    raise instead of reading bucket 0 as the whole table."""
+def test_manifest_of_an_older_format_is_refused(spark, tmp_path):
+    """A manifest without `versions`, as the sink wrote before `_CURRENT`
+    listed every readable version (a one-bucket form with `n_buckets`,
+    marks and ledger entries keyed by bucket "0", leaves under
+    `__bucket=0`, and one `manifest.v<N>.json` per version), is refused
+    on open: merge, read and time travel raise, and nothing in the
+    directory is written."""
     path = tmp_path / "t"
-    (path / "v=1" / "__bucket=3").mkdir(parents=True)
-    manifest = {
+    batch = _batch(spark, 1, range(4))
+    batch.coalesce(1).write.parquet(str(path / "v=1" / "__bucket=0"))
+    manifest = json.dumps({
         "version": 1,
-        "buckets": {"3": [1]},
-        "n_buckets": 16,
+        "buckets": {"0": [1]},
+        "n_buckets": 1,
         "monotone_col": "w",
-        "marks": {"3": 1},
+        "table_id": "0" * 32,
+        "schema": batch.schema.jsonValue(),
         "pending": [],
-    }
+        "marks": {"0": 1},
+    })
     for name in ("_CURRENT", "manifest.v1.json"):
-        (path / name).write_text(json.dumps(manifest))
+        (path / name).write_text(manifest)
+    before = sorted(os.listdir(path))
     t = UpsertTable(spark, str(path), ["w", "k"], monotone_col="w")
-    with pytest.raises(ValueError, match="n_buckets"):
+    with pytest.raises(ValueError, match="older version of this sink"):
         t.merge(_batch(spark, 2, range(4)))
-    with pytest.raises(ValueError, match="n_buckets"):
+    with pytest.raises(ValueError, match="older version of this sink"):
         t.read()
-    with pytest.raises(ValueError, match="n_buckets"):
+    with pytest.raises(ValueError, match="older version of this sink"):
         t.read(version=1)
-    assert json.loads((path / "_CURRENT").read_text()) == manifest
+    assert (path / "_CURRENT").read_text() == manifest
+    assert sorted(os.listdir(path)) == before
 
 
 def test_read_uses_the_manifest_schema(spark, tmp_path, spark_jobs):
@@ -411,16 +421,27 @@ def test_read_uses_the_manifest_schema(spark, tmp_path, spark_jobs):
     snap, jobs = spark_jobs(t.read)
     assert jobs == 0
     assert isinstance(snap, sinks.Snapshot) and snap.versions == (1, 2)
-    leaves = t._leaves(_manifest(t.path))
+    leaves = [t._leaf(v) for v in snap.versions]
     assert snap.schema == spark.read.parquet(*leaves).schema
     assert isinstance(t.read(version=1), sinks.Snapshot)
     assert _snapshot(t) == [(w, k, w * 100 + k) for w in (1, 2) for k in range(4)]
 
 
+def test_leaf_paths_add_no_partition_column(spark, tmp_path):
+    """A leaf is the directory `v=<N>` itself; an inferring read of
+    several leaves finds no partition column `v` in their paths."""
+    t = UpsertTable(spark, str(tmp_path / "t"), ["w", "k"], monotone_col="w")
+    for w in (1, 2):
+        t.merge(_df(spark, [(w, 0, 0)]).select("w", "k"))
+    leaves = [t._leaf(v) for v in t.read().versions]
+    assert leaves[-1].endswith("v=2")
+    assert spark.read.parquet(*leaves).columns == ["w", "k"]
+
+
 @pytest.mark.parametrize("field", ["schema", "table_id"])
 def test_manifest_without_schema_or_creation_id_raises(spark, tmp_path, field):
     """A manifest from before the schema and the creation id were
-    recorded is refused on open, like the 16-bucket layout."""
+    recorded is refused on open, like one without `versions`."""
     path = str(tmp_path / "t")
     t = UpsertTable(spark, path, ["w", "k"], monotone_col="w")
     t.merge(_batch(spark, 1, range(4)))
@@ -492,8 +513,11 @@ def test_corrupt_manifest_raises_instead_of_resetting(spark, tmp_path):
         t.merge(_batch(spark, 2, [0]))
     with pytest.raises(ValueError, match="unreadable manifest"):
         t.read()
-    # nothing was overwritten: the version-1 snapshot is still whole
-    assert t.read(version=1).count() == 40
+    with pytest.raises(ValueError, match="unreadable manifest"):
+        t.read(version=1)
+    # nothing was overwritten: the version-1 leaf is still whole
+    assert spark.read.parquet(t._leaf(1)).count() == 40
+    assert open(os.path.join(path, "_CURRENT")).read() == "{not json"
 
 
 def test_registry_windowed_twins_engage_fast_path(spark):
@@ -514,6 +538,6 @@ def test_registry_windowed_twins_engage_fast_path(spark):
     assert df.count() > 0
     root = df.inputFiles()[0].split("/v=")[0].replace("file:", "")
     m = _manifest(root)
-    assert len(m["buckets"]["0"]) > 1, m["buckets"]  # a leaf APPEND
+    assert len(_stack(m)) > 1, m["versions"]  # a leaf APPEND
     assert m["monotone_col"] == "window_start"
-    assert m["marks"]["0"]
+    assert m["mark"]

@@ -51,9 +51,12 @@ def test_merge_sequence_matches_dict_model(
     got = {r.k: r.v for r in table.read().collect()}
     assert got == model
 
-    # the current leaf plus the one its last merge superseded
+    # the current leaf plus the one its last merge superseded, and the
+    # manifest: no other file
     versions = [d for d in os.listdir(path) if d.startswith("v=")]
     assert len(versions) <= 2, versions
+    assert sorted(os.listdir(path)) == sorted(versions + ["_CURRENT"])
+    assert len(table.versions()) == len(versions)
 
 
 # Fast-append mode model check: batches carry a window value that
@@ -101,9 +104,9 @@ def test_monotone_merge_sequence_matches_dict_model(
 
         with open(os.path.join(path, "_CURRENT")) as f:
             m = json.load(f)
-        stack = m["buckets"]["0"]
+        stack = m["versions"][str(m["version"])]
         # layout bound: the stack is capped by STACK_MAX
         assert 1 <= len(stack) <= 3, stack
         for v in stack:
-            leaf = os.path.join(path, f"v={v}", "__bucket=0")
+            leaf = os.path.join(path, f"v={v}")
             assert os.path.isdir(leaf), leaf
