@@ -7,6 +7,15 @@ a scale-ready posture: AQE with runtime partition coalescing and skew
 join handling, UTC session timezone, Arrow-accelerated pandas
 interchange.  On a real cluster the same code runs unchanged — only
 `master` and the partition count change.
+
+Streaming checkpoints (every query's offset log, commit log, file-source
+log and state-store files) are committed through Hadoop's FileSystem
+API.  Spark's default goes through FileContext, which on an install
+without Hadoop's native library forks helper processes for every file
+it commits; a query commits four such files per trigger, so that cost
+sat in every micro-batch.  The conf is in `RUNTIME_CONFS`, so the
+builder sets it and `tune` applies it to a driver-owned session; the
+comment there gives the figures and the one semantic difference.
 """
 
 from __future__ import annotations
@@ -40,6 +49,23 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.streaming.minBatchesToRetain": "20",
     "spark.sql.streaming.maxBatchesToRetain": "100",
     "spark.sql.streaming.stateStore.compression.codec": "lz4",
+    # Commit streaming checkpoint files (offset log, commit log,
+    # file-source log, HDFS-backed state-store files) through Hadoop's
+    # FileSystem API.  Spark's default manager goes through FileContext,
+    # which without Hadoop's native library (NativeCodeLoader not
+    # loaded) forks helper processes (stat, readlink, chmod, bash) for
+    # every file: about 8 per file, and 31 ms per tiny file against
+    # 7 ms (about 2 processes) here.  A query commits four such files
+    # per trigger.  The one semantic difference: this manager replaces
+    # a file by `rename`.  On a local filesystem rename(2) replaces
+    # atomically; on HDFS an overwriting rename fails and Spark keeps
+    # the file already there.  Only state-store files are written with
+    # overwrite allowed, and a retried version rewrites the same
+    # content.  This engine checkpoints to local disk.
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
 }
 
 

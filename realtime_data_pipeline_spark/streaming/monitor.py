@@ -43,13 +43,18 @@ class BatchProgress:
     # state-store partitions the stateful operators ran, summed over
     # operators; each one is loaded and committed every batch
     state_store_instances: int
+    # time the stateful operators spent committing their state-store
+    # versions (Spark's commitTimeMs, a sum over tasks), summed over
+    # operators
+    state_commit_ms: int
 
 
 @dataclass
 class ProgressMonitor(StreamingQueryListener):
     """W6: collects per-batch throughput, source lag, late drops, the
-    duration breakdown, the watermark and the state-store partition
-    count; a batch that dropped rows as late logs a warning."""
+    duration breakdown, the watermark, the state-store partition count
+    and state commit time; a batch that dropped rows as late logs a
+    warning."""
 
     history: list[BatchProgress] = field(default_factory=list)
 
@@ -76,6 +81,7 @@ class ProgressMonitor(StreamingQueryListener):
             state_store_instances=sum(
                 op.numStateStoreInstances for op in p.stateOperators
             ),
+            state_commit_ms=sum(op.commitTimeMs for op in p.stateOperators),
         )
         if b.dropped_by_watermark:
             log.warning(

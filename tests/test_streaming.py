@@ -177,9 +177,10 @@ def test_monitor_collects_progress(parity_setup):
     assert mon.history and all(b.lag == 0 for b in mon.history)
 
 
-def _progress_event(batch_id, source, dropped, **fields):
+def _progress_event(batch_id, source, dropped, commit_ms=None, **fields):
     """A QueryProgressEvent as Spark serializes one: `source` is one
     SourceProgress dict, `dropped` the late drops per state operator,
+    `commit_ms` their state commit times (1 ms each by default),
     `fields` further top-level progress fields."""
     from pyspark.sql.streaming.listener import (
         QueryProgressEvent,
@@ -189,7 +190,7 @@ def _progress_event(batch_id, source, dropped, **fields):
     op = {
         "operatorName": "stateStoreSave", "numRowsTotal": 5,
         "numRowsUpdated": 1, "numRowsRemoved": 0, "allUpdatesTimeMs": 1,
-        "allRemovalsTimeMs": 0, "commitTimeMs": 1, "memoryUsedBytes": 100,
+        "allRemovalsTimeMs": 0, "memoryUsedBytes": 100,
         "numShufflePartitions": 4, "numStateStoreInstances": 4,
     }
     return QueryProgressEvent(StreamingQueryProgress.fromJson({
@@ -199,7 +200,10 @@ def _progress_event(batch_id, source, dropped, **fields):
         "batchId": batch_id, "batchDuration": 10,
         "numInputRows": source["numInputRows"],
         "inputRowsPerSecond": 1.0, "processedRowsPerSecond": 2.0,
-        "stateOperators": [{**op, "numRowsDroppedByWatermark": d} for d in dropped],
+        "stateOperators": [
+            {**op, "numRowsDroppedByWatermark": d, "commitTimeMs": c}
+            for d, c in zip(dropped, commit_ms or [1] * len(dropped))
+        ],
         "sources": [source],
         "sink": {"description": "ForeachBatchSink", "numOutputRows": -1},
         **fields,
@@ -270,6 +274,24 @@ def test_monitor_records_durations_watermark_and_state_partitions():
     assert first.state_store_instances == 8  # two operators, 4 each
     assert (second.duration_ms, second.watermark) == ({}, None)
     assert second.state_store_instances == 0
+
+
+def test_monitor_records_state_commit_time():
+    """Each batch's record sums the stateful operators' commitTimeMs,
+    the time spent committing state-store versions; a batch without a
+    stateful operator records 0."""
+    from realtime_data_pipeline_spark.streaming.monitor import ProgressMonitor
+
+    files = {
+        "description": "FileStreamSource[file:/replay]",
+        "startOffset": {"logOffset": 2}, "endOffset": {"logOffset": 3},
+        "latestOffset": None, "numInputRows": 7,
+        "inputRowsPerSecond": 1.0, "processedRowsPerSecond": 2.0,
+    }
+    mon = ProgressMonitor()
+    mon.onQueryProgress(_progress_event(0, files, [0, 0], commit_ms=[33, 2]))
+    mon.onQueryProgress(_progress_event(1, files, []))
+    assert [b.state_commit_ms for b in mon.history] == [35, 0]
 
 
 def _offset_log_conf(ckpt, batch_id):
