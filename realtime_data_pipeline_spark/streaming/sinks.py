@@ -18,19 +18,23 @@ Layout and why:
   versions, oldest first.  The table directory holds `_CURRENT`, the
   `v=<n>/` leaves and, during a merge, `_staging` — nothing else.
 
-One Spark job per merge.  A merge writes its batch once, as one file,
-to the table's `_staging` directory; that write carries an Observation
-of the batch's row count and monotone min/max, so no separate stats
-job runs and nothing is cached.  An append then moves the staged file
-into place as the new leaf; a rewrite reads it back as the batch and
-folds it with the stored rows in a second job.  The merge does not
-deduplicate: a batch holds each key at most once (see `merge`).
-`start_upsert_query` runs its stateful aggregate on one shuffle
-partition: a state store is loaded and committed per partition and per
-batch, whatever its row count, and one leaf file means the batch's rows
-meet in one task anyway, so with one partition the write runs inside
-the stateful stage.  `merge` returns a `MergeStats` record of what it
-did.
+One Spark job per append or empty batch, two per rewrite.  A merge
+collects its batch once as an Arrow table (`toArrow`, the one job; in a
+streaming query the stateful stage runs inside it) and takes the row
+count and the monotone min/max from that table, so no separate stats
+job runs and nothing is cached.  It stages the table as one parquet
+file in the table's `_staging` directory with pyarrow, not with Spark's
+file writer: on a local disk without Hadoop's native library every file
+and directory that writer creates (`_temporary` dirs, the part file,
+its `.crc`, `_SUCCESS`) sets its permissions by starting a `chmod`
+process.  An append then moves the staged file into place as the new
+leaf; a rewrite reads it back as the batch and folds it with the stored
+rows in a second job, in Spark, so the fold scales out with the table.
+The merge does not deduplicate: a batch holds each key at most once
+(see `merge`).  `start_upsert_query` runs its stateful aggregate on one
+shuffle partition: a state store is loaded and committed per partition
+and per batch, whatever its row count, and a staged leaf is one file
+anyway.  `merge` returns a `MergeStats` record of what it did.
 
 At scale this slot is filled by a real table format (Delta/Iceberg
 MERGE INTO — the same keyed upsert with file-level pruning); the
@@ -58,10 +62,12 @@ different one raises.  So every merge into a monotone table maintains
 the mark: an append records the batch maximum, and a rewrite raises
 the mark to the batch maximum.  A table without a mark holds only null
 monotone values, so the first non-null rewrite sets a sound mark.
-Marks and batch minima are engine integers (`unix_micros` of a
-TIMESTAMP, an integer column as is), computed and ordered in Spark: a
-timestamp collected to Python is a naive local-time value, whose order
-disagrees with Spark's around a DST fall-back.
+Marks and batch minima are integers taken from the Arrow batch: a
+TIMESTAMP column is int64 epoch microseconds (the integer Spark's
+`unix_micros` returns, whatever the session time zone), an integer
+column is taken as is.  They are never Python datetimes: a timestamp
+collected to Python is a naive local-time value, whose order disagrees
+with Spark's around a DST fall-back.
 
 Retention is counted in seconds, like Delta's
 deletedFileRetentionDuration: a leaf a merge supersedes stays on disk
@@ -104,12 +110,17 @@ import uuid
 from dataclasses import dataclass
 from functools import reduce
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 from pyspark.sql.types import IntegralType, StructType, TimestampType
 
 _CURRENT = "_CURRENT"
+# The one file a staged batch, and so an appended leaf, is written to.
+_PART = "part-00000.parquet"
 # The leaf stack folds back into one leaf once it stacks this many.
 STACK_MAX = 8
 # Seconds a superseded leaf outlives the merge that superseded it: more
@@ -127,6 +138,9 @@ class MergeStats:
     kind: str  # "append", "rewrite" or "empty"
     rows: int  # rows in the batch
     leaves: int  # leaves in the stack after the merge
+    # parquet bytes it published: the appended leaf's file, the folded
+    # leaf's files, 0 for an empty batch
+    bytes: int
     ms: float  # wall time
 
 
@@ -264,13 +278,15 @@ class UpsertTable:
             m["table_id"],
         )
 
-    def _mono_image(self, batch: DataFrame) -> F.Column:
-        """The monotone column as an engine integer whose order is
-        Spark's order of the column."""
-        dtype = batch.schema[self.monotone_col].dataType
-        col = F.col(self.monotone_col)
+    def _mono_image(self, rows: pa.Table, schema: StructType) -> pa.ChunkedArray:
+        """The monotone column of the Arrow batch `rows` (Spark schema
+        `schema`) as integers whose order is Spark's order of the
+        column: a TIMESTAMP as int64 epoch microseconds, the integer
+        `unix_micros` returns, an integer column as it is."""
+        dtype = schema[self.monotone_col].dataType
+        col = rows[self.monotone_col]
         if isinstance(dtype, TimestampType):
-            return F.unix_micros(col)
+            return col.cast(pa.int64())
         if isinstance(dtype, IntegralType):
             return col
         raise ValueError(
@@ -329,48 +345,47 @@ class UpsertTable:
           its (window_start, rk) keys are distinct.
 
         One Spark job for an append or an empty batch, two for a
-        rewrite.  The batch is written once, as one file
-        (`coalesce(1)`), to the table's `_staging` directory, and that
-        write carries an Observation of the row count and the min and
-        max of the monotone column, which the append test needs.  Then:
+        rewrite.  The batch is collected once as an Arrow table
+        (`toArrow`, the first job); its row count and the min and max
+        of the monotone column, which the append test needs, are read
+        from that table.  A non-empty batch is staged as one parquet
+        file in the table's `_staging` directory with pyarrow.  Then:
 
-        * append: the staged leaf moves into place with os.replace;
-        * rewrite: the staged leaf is read back as the batch, the
+        * append: the staging directory moves into place as the leaf
+          with os.replace;
+        * rewrite: the staged file is read back as the batch, the
           batch and the stored rows it does not replace are written as
-          one leaf at the same version, and the staging directory is
-          deleted;
-        * empty batch: the staging directory is deleted and nothing is
-          published.
+          one leaf at the same version (the second job), and the
+          staging directory is deleted;
+        * empty batch: nothing is staged or published.
 
-        A crash leaves at most a staging directory or an unpublished
-        leaf behind; the replayed merge overwrites both.
+        The whole batch passes through driver memory, so it must fit
+        there; a stream's micro-batch of window counts does.  A crash
+        leaves at most a staging directory, possibly with a torn file,
+        or an unpublished leaf behind; the replayed merge deletes the
+        first and overwrites the second.
         """
         t0 = time.perf_counter()
         m = self._manifest()  # an unreadable or mismatched table raises first
-        mono = (
-            self._mono_image(batch)
-            if self.monotone_col
-            else F.lit(None).cast("long")
-        )
+        rows = batch.toArrow()
+        n, lo, hi = rows.num_rows, None, None
+        if self.monotone_col:
+            bounds = pc.min_max(self._mono_image(rows, batch.schema)).as_py()
+            lo, hi = bounds["min"], bounds["max"]
         staging = os.path.join(self.path, "_staging")
-        obs = Observation()
+        shutil.rmtree(staging, ignore_errors=True)  # left by a crash
+        if not n:
+            return MergeStats(
+                m["version"] if m else 0, "empty", 0,
+                len(_stack(m)) if m else 0, 0,
+                (time.perf_counter() - t0) * 1000.0,
+            )
         # One file per leaf: a leaf of one file per upstream task would
         # grow the file count as O(merges x partitions) and drown reads
         # in small files.
-        batch.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.min(mono).alias("lo"),
-            F.max(mono).alias("hi"),
-        ).coalesce(1).write.mode("overwrite").parquet(staging)
-        n, lo, hi = (obs.get[k] for k in ("n", "lo", "hi"))
-        if not n:
-            shutil.rmtree(staging, ignore_errors=True)
-            return MergeStats(
-                m["version"] if m else 0, "empty", 0,
-                len(_stack(m)) if m else 0,
-                (time.perf_counter() - t0) * 1000.0,
-            )
+        os.makedirs(staging)
+        staged = os.path.join(staging, _PART)
+        pq.write_table(rows, staged)
         m = m or {
             "version": 0,
             "versions": {},
@@ -397,6 +412,7 @@ class UpsertTable:
         if append:
             if os.path.exists(leaf):  # left by a crash before the flip
                 shutil.rmtree(leaf)
+            published = os.path.getsize(staged)
             os.replace(staging, leaf)
             m["schema"] = batch.schema.jsonValue()
             self._commit(m, stack + [v_new], [])
@@ -407,7 +423,7 @@ class UpsertTable:
             # exchange, so the fold is the write's one job in any
             # session.  A key with a null part matches nothing under
             # SQL null-equality, so every such row stays.
-            staged = self.spark.read.schema(batch.schema).parquet(staging)
+            staged_rows = self.spark.read.schema(batch.schema).parquet(staging)
             rank = F.row_number().over(
                 Window.partitionBy(*self.key_cols).orderBy(F.desc("__new"))
             )
@@ -415,7 +431,7 @@ class UpsertTable:
                 operator.or_, [F.col(k).isNull() for k in self.key_cols]
             )
             merged = (
-                staged.withColumn("__new", F.lit(1))
+                staged_rows.withColumn("__new", F.lit(1))
                 .unionByName(self._snapshot(m, stack).withColumn("__new", F.lit(0)))
                 .coalesce(1)
                 .withColumn("__rank", rank)
@@ -423,6 +439,11 @@ class UpsertTable:
                 .drop("__new", "__rank")
             )
             merged.write.mode("overwrite").parquet(leaf)
+            published = sum(
+                e.stat().st_size
+                for e in os.scandir(leaf)
+                if e.name.endswith(".parquet")
+            )
             m["schema"] = merged.schema.jsonValue()
             # a rewrite folds the stack and supersedes every leaf of it
             self._commit(m, [v_new], stack)
@@ -432,6 +453,7 @@ class UpsertTable:
             "append" if append else "rewrite",
             n,
             len(_stack(m)),
+            published,
             (time.perf_counter() - t0) * 1000.0,
         )
 

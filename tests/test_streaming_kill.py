@@ -14,9 +14,11 @@ sink:
   about to run (`_CURRENT.tmp` is written, the flip is not);
 * `after-flip`: that replace has run, and Spark has not yet written
   the batch to its commit log;
-* `mid-write`: a watcher thread armed at the target table's third
-  merge fires once a task's part file appears under the staged leaf's
-  `_temporary` directory, i.e. while the staged write's job runs.
+* `mid-write`: at the target table's third merge the child's
+  `pyarrow.parquet.write_table` writes half the batch's rows and
+  stalls before the file's footer, and a watcher thread armed at that
+  merge fires once the staged parquet file appears under `_staging/`,
+  i.e. while the sink's staged write runs and leaves a torn file.
 
 Every checkpoint file (offset log, commit log, file-source log, state
 store) is committed through the session's checkpoint file manager, so
@@ -137,15 +139,24 @@ def _arm(kill: str, base: Path) -> None:
 
         os.replace = killing_replace
         return
+    import pyarrow.parquet as pq
+
     merge, merges = UpsertTable.merge, []
-    temporary = os.path.join(target, "_staging", "_temporary")
+    staging = os.path.join(target, "_staging")
+    write_table = pq.write_table
 
     def watch():
         while True:
-            for _, _, names in os.walk(temporary):
-                if any(n.startswith("part-") for n in names):
-                    _die()
+            if _staged_files(staging):
+                _die()
             time.sleep(0.001)
+
+    def stalling_write_table(table, where, *args, **kwargs):
+        if len(merges) < 3 or not os.fspath(where).startswith(staging):
+            return write_table(table, where, *args, **kwargs)
+        with pq.ParquetWriter(where, table.schema) as writer:
+            writer.write_table(table.slice(0, table.num_rows // 2))
+            time.sleep(60)  # the watcher's kill lands here
 
     def watched_merge(self, batch):
         if self.path == target:
@@ -154,7 +165,16 @@ def _arm(kill: str, base: Path) -> None:
                 threading.Thread(target=watch, daemon=True).start()
         return merge(self, batch)
 
+    pq.write_table = stalling_write_table
     UpsertTable.merge = watched_merge
+
+
+def _staged_files(staging) -> list[str]:
+    """The parquet files under the staging directory `staging`."""
+    try:
+        return [n for n in os.listdir(staging) if n.endswith(".parquet")]
+    except FileNotFoundError:
+        return []
 
 
 def _child(kill: str, base: Path) -> int:
@@ -228,7 +248,7 @@ def test_restart_after_sigkill_matches_batch(spark, tmp_path, kill):
     elif kill == "after-flip":
         assert not (target / "_CURRENT.tmp").exists()
     else:
-        assert (target / "_staging" / "_temporary").is_dir()
+        assert _staged_files(target / "_staging")
 
     queries, tables = _start(spark, tmp_path)  # the restart
     for q in queries:

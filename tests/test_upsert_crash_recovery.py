@@ -17,9 +17,9 @@ import json
 import os
 import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
-
-from pyspark.sql.readwriter import DataFrameWriter
 
 from realtime_data_pipeline_spark.streaming import sinks
 from realtime_data_pipeline_spark.streaming.sinks import UpsertTable
@@ -30,15 +30,30 @@ class Crash(Exception):
 
 
 def _after_staged_write(mp):
-    """Crash once the batch is staged: a merge's first parquet write
-    is the staged batch, before it moves into place or is folded."""
-    parquet = DataFrameWriter.parquet
+    """Crash once the batch is staged: the sink's Arrow write of the
+    batch to `_staging` has run, and the staged file has neither moved
+    into place nor been folded."""
+    write_table = sinks.pq.write_table
 
-    def write_then_crash(self, path, *args, **kwargs):
-        parquet(self, path, *args, **kwargs)
+    def write_then_crash(*args, **kwargs):
+        write_table(*args, **kwargs)
         raise Crash
 
-    mp.setattr(DataFrameWriter, "parquet", write_then_crash)
+    mp.setattr(sinks.pq, "write_table", write_then_crash)
+
+
+def _torn_staged_write(mp):
+    """Crash inside the staged write: the staged file holds the first
+    half of its bytes, as a kill during `write_table` leaves it."""
+    write_table = sinks.pq.write_table
+
+    def write_half_then_crash(table, where, *args, **kwargs):
+        write_table(table, where, *args, **kwargs)
+        with open(where, "r+b") as f:
+            f.truncate(os.path.getsize(where) // 2)
+        raise Crash
+
+    mp.setattr(sinks.pq, "write_table", write_half_then_crash)
 
 
 def _after_leaf_write(mp):
@@ -49,15 +64,19 @@ def _after_leaf_write(mp):
 
 
 def _mid_vacuum(mp):
-    rmtree, calls = shutil.rmtree, []
+    """Crash in the commit's vacuum, after it unlinked one ripe leaf and
+    before the next; the merge's own clearing of `_staging` does not
+    count."""
+    rmtree, leaves = shutil.rmtree, []
 
-    def first_then_crash(*args, **kwargs):
-        if calls:
-            raise Crash
-        calls.append(args)
-        rmtree(*args, **kwargs)
+    def first_leaf_then_crash(path, *args, **kwargs):
+        if os.path.basename(path).startswith("v="):
+            if leaves:
+                raise Crash
+            leaves.append(path)
+        rmtree(path, *args, **kwargs)
 
-    mp.setattr(shutil, "rmtree", first_then_crash)
+    mp.setattr(shutil, "rmtree", first_leaf_then_crash)
 
 
 def _at_flip(after):
@@ -87,11 +106,12 @@ def _manifest(path):
 def _merge(spark, table, model, published, w, batch):
     """Merge `batch` into window `w`, and record in `published` the leaf
     stack of the version current afterwards, also when the merge
-    crashes (a crash after the flip has published it)."""
+    crashes (a crash after the flip has published it).  Returns the
+    merge's `MergeStats`."""
     model.update({(w, k): v for k, v in batch.items()})
     rows = [(w, k, v) for k, v in batch.items()]
     try:
-        table.merge(spark.createDataFrame(rows, "w int, k int, v int"))
+        return table.merge(spark.createDataFrame(rows, "w int, k int, v int"))
     finally:
         m = _manifest(table.path)
         published[m["version"]] = m["versions"][str(m["version"])]
@@ -224,3 +244,37 @@ def test_replay_after_crash_in_append_restores_table(
         f"v={v}" for v, _t in m["pending"]
     }
     assert set(os.listdir(path)) == names | {"_CURRENT"}
+
+
+@pytest.mark.parametrize("w, kind", [(3, "append"), (2, "rewrite")])
+def test_replay_over_a_torn_staged_file(spark, tmp_path, monkeypatch, w, kind):
+    """A kill inside the staged write leaves a truncated parquet file in
+    `_staging`.  The replay through a fresh `UpsertTable` stages the
+    batch again over it, whether it appends (w=3 is above the mark) or
+    folds (w=2 collides), and leaves the table equal to the model and
+    no staging directory behind."""
+    path = str(tmp_path / "t")
+    staging = os.path.join(path, "_staging")
+    model: dict[tuple[int, int], int] = {}
+    published: dict[int, list[int]] = {}
+    keys = range(8)
+
+    def open_table():
+        return UpsertTable(spark, path, ["w", "k"], monotone_col="w")
+
+    table = open_table()
+    _merge(spark, table, model, published, 1, {k: 1 for k in keys})
+    _merge(spark, table, model, published, 2, {k: 2 for k in keys})
+    crashed = {k: 3 for k in keys}
+    with monkeypatch.context() as mp:
+        _torn_staged_write(mp)
+        with pytest.raises(Crash):
+            _merge(spark, table, {}, published, w, crashed)
+    (torn,) = os.listdir(staging)
+    with pytest.raises(pa.ArrowInvalid):
+        pq.read_metadata(os.path.join(staging, torn))
+    table = open_table()  # the restart
+    stats = _merge(spark, table, model, published, w, crashed)  # the replay
+    assert stats.kind == kind
+    _check(table, model, published)
+    assert not os.path.exists(staging)

@@ -16,8 +16,8 @@ when its leaves go, (i) that reads use the schema the manifest
 records, (j) that an append or an empty batch is one Spark job
 and a merge leaves no staging directory behind, and (k) that a
 rewrite is two jobs on an adaptive session and keeps every row whose
-key has a null part, and (l) that a leaf path adds no partition
-column.
+key has a null part, (l) that a leaf path adds no partition column,
+and (m) that `MergeStats` counts the bytes a merge published.
 """
 
 from __future__ import annotations
@@ -120,8 +120,9 @@ def _table_entries(path):
 
 
 def test_append_merge_is_one_job(spark, tmp_path, spark_jobs):
-    """An append writes the batch once: the write carries the count and
-    the monotone min/max, and the staged leaf moves into place."""
+    """An append collects the batch once, as Arrow, which gives the
+    count and the monotone min/max, and the staged leaf moves into
+    place."""
     path = str(tmp_path / "t")
     t = UpsertTable(spark, path, ["w", "k"], monotone_col="w")
     t.merge(_batch(spark, 1, range(4)))
@@ -175,12 +176,36 @@ def test_rewrite_leaves_no_staging_and_contiguous_versions(spark, tmp_path):
     assert got[(2, 2)] == 202
 
 
+def test_merge_stats_count_the_bytes_published(spark, tmp_path):
+    """`MergeStats.bytes` is the parquet bytes a merge published: the
+    appended leaf's one file, the folded leaf's files, and 0 for an
+    empty batch."""
+    t = UpsertTable(spark, str(tmp_path / "t"), ["w", "k"], monotone_col="w")
+
+    def parquet_bytes(version):
+        leaf = t._leaf(version)
+        return sum(
+            os.path.getsize(os.path.join(leaf, f))
+            for f in os.listdir(leaf)
+            if f.endswith(".parquet")
+        )
+
+    t.merge(_batch(spark, 1, range(4)))
+    appended = t.merge(_batch(spark, 2, range(4)))
+    assert appended.kind == "append"
+    assert appended.bytes == parquet_bytes(2) > 0
+    folded = t.merge(_df(spark, [(2, 0, 999)]))
+    assert folded.kind == "rewrite"
+    assert folded.bytes == parquet_bytes(3) > 0
+    assert t.merge(_df(spark, [])).bytes == 0
+
+
 def test_rewrite_is_two_jobs_on_an_adaptive_session(
     spark, tmp_path, spark_jobs
 ):
     """The fold has no join, so adaptive execution, which runs each
     shuffle stage as a job of its own, finds no stage to split: a
-    rewrite is the staged write and the fold's write."""
+    rewrite is the batch's collection and the fold's write."""
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     t = UpsertTable(spark, str(tmp_path / "t"), ["w", "k"], monotone_col="w")
     t.merge(_batch(spark, 1, range(4)))
