@@ -7,8 +7,8 @@ Layout and why:
 
 * a table is ONE stack of leaves, each leaf one parquet file; a merge
   either appends a leaf or rewrites the stack into one leaf;
-* Spark cannot safely overwrite a parquet path it is reading in the
-  same job, so each merge writes a new leaf, the directory `v=<n>/`,
+* a held snapshot may still be reading the stored leaves, so each
+  merge writes a new leaf, the directory `v=<n>/`,
   and the table's one metadata file, the `_CURRENT` JSON manifest,
   flips atomically via os.replace.  Checkpoint replay of a micro-batch
   re-merges the same rows under the same keys — idempotent, exactly
@@ -18,21 +18,21 @@ Layout and why:
   versions, oldest first.  The table directory holds `_CURRENT`, the
   `v=<n>/` leaves and, during a merge, `_staging` — nothing else.
 
-One Spark job per append or empty batch, two per rewrite.  A merge
-collects its batch once as an Arrow table (`toArrow`, the one job; in a
-streaming query the stateful stage runs inside it) and takes the row
-count and the monotone min/max from that table, so no separate stats
-job runs and nothing is cached.  It stages the table as one parquet
-file in the table's `_staging` directory with pyarrow, not with Spark's
-file writer: on a local disk without Hadoop's native library every file
-and directory that writer creates (`_temporary` dirs, the part file,
-its `.crc`, `_SUCCESS`) sets its permissions by starting a `chmod`
-process.  An append then moves the staged file into place as the new
-leaf; a rewrite reads it back as the batch and folds it with the stored
-rows in a second job, in Spark, so the fold scales out with the table.
-The merge does not deduplicate: a batch holds each key at most once
-(see `merge`).  `start_upsert_query` runs its stateful aggregate on one
-shuffle partition: a state store is loaded and committed per partition
+One Spark job per merge, whatever its kind.  A merge collects its
+batch once as an Arrow table (`toArrow`, the one job; in a streaming
+query the stateful stage runs inside it) and takes the row count and
+the monotone min/max from that table, so no separate stats job runs
+and nothing is cached.  An append's leaf is the batch; a rewrite's leaf
+is the batch plus the stored rows whose key it does not replace, folded
+in Arrow in the merging process.  Either leaf is staged as one parquet file in
+the table's `_staging` directory with pyarrow, not with Spark's file
+writer: on a local disk without Hadoop's native library every file and
+directory that writer creates (`_temporary` dirs, the part file, its
+`.crc`, `_SUCCESS`) sets its permissions by starting a `chmod` process.
+The staged file then moves into place as the new leaf.  The merge does
+not deduplicate: a batch holds each key at most once (see `merge`).
+`start_upsert_query` runs its stateful aggregate on one shuffle
+partition: a state store is loaded and committed per partition
 and per batch, whatever its row count, and a staged leaf is one file
 anyway.  `merge` returns a `MergeStats` record of what it did.
 
@@ -88,9 +88,10 @@ snapshot holds for every later read with the same id and versions
 records, at creation, `table_id`, a random creation id: a table
 deleted and recreated at the same path reuses version numbers, so only
 the id tells the two apart.  Every commit records `schema`, the schema
-of the frame it wrote; reads, including the rewrite's read of the
-stored rows, pass it to Spark (which makes every field nullable, as an
-inferring read would), so they start no schema-inference job.  A
+of the batch it merged; reads pass it to Spark (which makes every
+field nullable, as an inferring read would), so they start no
+schema-inference job.  A rewrite reads the stored rows with pyarrow
+and aligns them to the batch's schema by column name.  A
 manifest without `schema`, `table_id` or `versions` was written by an
 older version of this sink and is refused on open.  Readers keep what
 they derive in memory and write nothing into the table directory: a
@@ -101,25 +102,23 @@ that leaf and recreate it outside the pending-delete ledger.
 from __future__ import annotations
 
 import json
-import operator
 import os
 import shutil
 import threading
 import time
 import uuid
 from dataclasses import dataclass
-from functools import reduce
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 from pyspark.sql.types import IntegralType, StructType, TimestampType
 
 _CURRENT = "_CURRENT"
-# The one file a staged batch, and so an appended leaf, is written to.
+# The one file a staged leaf, and so every leaf, is written to.
 _PART = "part-00000.parquet"
 # The leaf stack folds back into one leaf once it stacks this many.
 STACK_MAX = 8
@@ -138,8 +137,8 @@ class MergeStats:
     kind: str  # "append", "rewrite" or "empty"
     rows: int  # rows in the batch
     leaves: int  # leaves in the stack after the merge
-    # parquet bytes it published: the appended leaf's file, the folded
-    # leaf's files, 0 for an empty batch
+    # parquet bytes it published: the leaf's one file, 0 for an empty
+    # batch
     bytes: int
     ms: float  # wall time
 
@@ -344,26 +343,27 @@ class UpsertTable:
         * `window_topk_items` ranks each window with `row_number`, so
           its (window_start, rk) keys are distinct.
 
-        One Spark job for an append or an empty batch, two for a
-        rewrite.  The batch is collected once as an Arrow table
-        (`toArrow`, the first job); its row count and the min and max
-        of the monotone column, which the append test needs, are read
-        from that table.  A non-empty batch is staged as one parquet
-        file in the table's `_staging` directory with pyarrow.  Then:
+        One Spark job, whatever the merge's kind: the batch is
+        collected once as an Arrow table (`toArrow`); its row count and
+        the min and max of the monotone column, which the append test
+        needs, are read from that table.  The leaf is built in Arrow:
 
-        * append: the staging directory moves into place as the leaf
-          with os.replace;
-        * rewrite: the staged file is read back as the batch, the
-          batch and the stored rows it does not replace are written as
-          one leaf at the same version (the second job), and the
-          staging directory is deleted;
+        * append: the leaf is the batch;
+        * rewrite: the leaf is the batch plus the stored rows whose key
+          it does not replace (`_unreplaced`), which folds the stack;
         * empty batch: nothing is staged or published.
 
+        A leaf is staged as one parquet file in the table's `_staging`
+        directory with pyarrow, moves into place with os.replace, and
+        `_commit` publishes it.
+
         The whole batch passes through driver memory, so it must fit
-        there; a stream's micro-batch of window counts does.  A crash
-        leaves at most a staging directory, possibly with a torn file,
-        or an unpublished leaf behind; the replayed merge deletes the
-        first and overwrites the second.
+        there; a stream's micro-batch of window counts does.  A rewrite
+        also holds the stored table there, as the one task of a
+        single-partition fold would.  A crash leaves at most a staging
+        directory, possibly with a torn file, or an unpublished leaf
+        behind; the replayed merge deletes the first and overwrites the
+        second.
         """
         t0 = time.perf_counter()
         m = self._manifest()  # an unreadable or mismatched table raises first
@@ -380,12 +380,6 @@ class UpsertTable:
                 len(_stack(m)) if m else 0, 0,
                 (time.perf_counter() - t0) * 1000.0,
             )
-        # One file per leaf: a leaf of one file per upstream task would
-        # grow the file count as O(merges x partitions) and drown reads
-        # in small files.
-        os.makedirs(staging)
-        staged = os.path.join(staging, _PART)
-        pq.write_table(rows, staged)
         m = m or {
             "version": 0,
             "versions": {},
@@ -407,47 +401,25 @@ class UpsertTable:
         )
         if self.monotone_col and hi is not None:
             m["mark"] = hi if mark is None else max(mark, hi)
+        if not append:
+            rows = pa.concat_tables([self._unreplaced(stack, rows), rows])
+        # One file per leaf: a leaf of one file per upstream task would
+        # grow the file count as O(merges x partitions) and drown reads
+        # in small files.
+        os.makedirs(staging)
+        staged = os.path.join(staging, _PART)
+        pq.write_table(rows, staged)
+        published = os.path.getsize(staged)
         v_new = m["version"] + 1
         leaf = self._leaf(v_new)
+        if os.path.exists(leaf):  # left by a crash before the flip
+            shutil.rmtree(leaf)
+        os.replace(staging, leaf)
+        m["schema"] = batch.schema.jsonValue()
         if append:
-            if os.path.exists(leaf):  # left by a crash before the flip
-                shutil.rmtree(leaf)
-            published = os.path.getsize(staged)
-            os.replace(staging, leaf)
-            m["schema"] = batch.schema.jsonValue()
             self._commit(m, stack + [v_new], [])
-        else:
-            # Fold without a join: the staged rows, tagged newest, and
-            # the stored rows meet in one partition, where a key keeps
-            # its newest row.  Over one partition the window needs no
-            # exchange, so the fold is the write's one job in any
-            # session.  A key with a null part matches nothing under
-            # SQL null-equality, so every such row stays.
-            staged_rows = self.spark.read.schema(batch.schema).parquet(staging)
-            rank = F.row_number().over(
-                Window.partitionBy(*self.key_cols).orderBy(F.desc("__new"))
-            )
-            null_key = reduce(
-                operator.or_, [F.col(k).isNull() for k in self.key_cols]
-            )
-            merged = (
-                staged_rows.withColumn("__new", F.lit(1))
-                .unionByName(self._snapshot(m, stack).withColumn("__new", F.lit(0)))
-                .coalesce(1)
-                .withColumn("__rank", rank)
-                .where((F.col("__rank") == 1) | null_key)
-                .drop("__new", "__rank")
-            )
-            merged.write.mode("overwrite").parquet(leaf)
-            published = sum(
-                e.stat().st_size
-                for e in os.scandir(leaf)
-                if e.name.endswith(".parquet")
-            )
-            m["schema"] = merged.schema.jsonValue()
-            # a rewrite folds the stack and supersedes every leaf of it
+        else:  # a rewrite folds the stack and supersedes every leaf of it
             self._commit(m, [v_new], stack)
-            shutil.rmtree(staging, ignore_errors=True)
         return MergeStats(
             v_new,
             "append" if append else "rewrite",
@@ -456,6 +428,29 @@ class UpsertTable:
             published,
             (time.perf_counter() - t0) * 1000.0,
         )
+
+    def _unreplaced(self, stack: list, rows: pa.Table) -> pa.Table:
+        """The stored rows of the leaves `stack` whose key the Arrow
+        batch `rows` does not replace, in stored order and aligned to
+        the batch's schema by column name.  A leaf is read by
+        directory, so the parquet files of a leaf Spark's file commit
+        wrote are read and its `_SUCCESS` and `.crc` files skipped.  A
+        key with a null part matches nothing under SQL null-equality,
+        and Acero's join agrees, so every such stored row stays."""
+        names = rows.column_names
+        stored = pa.concat_tables(
+            pq.read_table(self._leaf(v)).select(names).cast(rows.schema)
+            for v in stack
+        )
+        # The join carries only the keys and a row index: Acero refuses
+        # nested columns outside the key.
+        index = stored.select(self.key_cols).append_column(
+            "__row", pa.array(np.arange(stored.num_rows))
+        )
+        kept = index.join(
+            rows.select(self.key_cols), self.key_cols, join_type="left anti"
+        )
+        return stored.take(kept["__row"].combine_chunks().sort())
 
 
 def _stack(m: dict) -> list[int]:

@@ -1,10 +1,11 @@
-"""The keyed-upsert sink stages each batch through Arrow: the batch is
-collected with `toArrow` and written to `_staging` with pyarrow, then
-moved into place (an append) or read back by Spark and folded (a
-rewrite).  Every column type the sink's callers write must come back
-from `read()` as it went in, with the schema the manifest records, and
-a timestamp mark must be Spark's `unix_micros` whatever the session
-time zone.
+"""The keyed-upsert sink builds each leaf in Arrow: the batch is
+collected with `toArrow`, folded with the stored rows read by pyarrow
+(a rewrite) or taken as it is (an append), written to `_staging` with
+pyarrow and moved into place.  Every column type the sink's callers
+write must come back from `read()` as it went in, with the schema the
+manifest records; a leaf that Spark's file commit wrote, as the sink's
+Spark fold once did, must fold like any other; and a timestamp mark
+must be Spark's `unix_micros` whatever the session time zone.
 """
 
 from __future__ import annotations
@@ -12,6 +13,7 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
+import shutil
 from decimal import Decimal
 
 import pytest
@@ -78,8 +80,9 @@ def _assert_reads_back(spark, t, batches, ddl):
 def test_arrow_stage_round_trips_types(spark, tmp_path, case):
     """An append, then a fold, of a batch with a value column of each
     type (and nulls in it), or with null key parts: `read()` returns the
-    rows that went in.  The appended leaf is the one file pyarrow wrote,
-    without the `.crc` and `_SUCCESS` files of Spark's file commit."""
+    rows that went in.  The appended and the folded leaf are each the one
+    file pyarrow wrote, without the `.crc` and `_SUCCESS` files of
+    Spark's file commit."""
     c_type, (a, b) = CASES.get(case, ("int", [5, 6]))
     ddl = f"w int, k int, c {c_type}"
     t = UpsertTable(spark, str(tmp_path / "t"), ["w", "k"], monotone_col="w")
@@ -97,7 +100,45 @@ def test_arrow_stage_round_trips_types(spark, tmp_path, case):
 
     stats = t.merge(spark.createDataFrame(second, ddl))  # w=1 collides
     assert stats.kind == "rewrite"
+    assert os.listdir(t._leaf(stats.version)) == ["part-00000.parquet"]
     _assert_reads_back(spark, t, [first, second], ddl)
+
+
+def test_fold_over_a_leaf_spark_wrote(spark, tmp_path):
+    """A table from before folds ran in Arrow: its stack holds a leaf
+    that Spark's file commit wrote (a `part-...snappy.parquet` file, a
+    TIMESTAMP stored as INT96, its `.crc` files and `_SUCCESS`) under
+    the same manifest format.  An append stacks on it and the next fold
+    reads it: the table equals the last-write-wins model and the folded
+    leaf is the one file pyarrow wrote."""
+    ddl = "ws timestamp, k int, c string"
+    path = str(tmp_path / "t")
+    t = UpsertTable(spark, path, ["ws", "k"], monotone_col="ws")
+
+    def at(hour):
+        return dt.datetime(2024, 3, 1, hour)
+
+    batches = [
+        [(at(1), 0, "a"), (at(1), 1, "b"), (at(1), None, "n")],
+        [(at(1), 1, "c"), (at(2), 0, "d")],  # collides: fold
+        [(at(3), 0, "e"), (at(3), 1, "f")],  # above the mark: append
+        [(at(1), 0, "g"), (at(3), 1, "h"), (at(1), None, "m")],  # fold
+    ]
+    kinds = [t.merge(spark.createDataFrame(b, ddl)).kind for b in batches[:2]]
+    written = str(tmp_path / "written")
+    spark.createDataFrame(_expect(batches[:2]), ddl).coalesce(1).write.parquet(
+        written
+    )
+    shutil.rmtree(t._leaf(2))
+    os.replace(written, t._leaf(2))
+    names = os.listdir(t._leaf(2))
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+    assert any(n.endswith(".snappy.parquet") for n in names)
+    for b in batches[2:]:
+        kinds.append(t.merge(spark.createDataFrame(b, ddl)).kind)
+    assert kinds == ["append", "rewrite", "append", "rewrite"]
+    assert os.listdir(t._leaf(4)) == ["part-00000.parquet"]
+    _assert_reads_back(spark, t, batches, ddl)
 
 
 def test_timestamp_mark_is_unix_micros_under_kathmandu(spark, tmp_path):

@@ -1,14 +1,14 @@
 """Crash recovery of the keyed-upsert sink's commit.
 
-A merge stages the batch, moves it into place as its leaf (an append)
-or folds it with the stored rows into the leaf (a rewrite), unlinks
-ripe superseded leaves and flips `_CURRENT`, the table's one metadata
-file.  A crash at any of those steps, followed by a replay of the same
-batch through a fresh `UpsertTable` (what a restart from the streaming
-checkpoint does), must leave the table equal to a last-write-wins
-model, every leaf `_CURRENT` names on disk, exactly the versions whose
-leaves are all on disk listed, and nothing leaked once RETAIN_S has
-passed.
+A merge builds its leaf, the batch (an append) or the batch folded
+with the stored rows (a rewrite), stages it, moves it into place,
+unlinks ripe superseded leaves and flips `_CURRENT`, the table's one
+metadata file.  A crash at any of those steps, followed by a replay of
+the same batch through a fresh `UpsertTable` (what a restart from the
+streaming checkpoint does), must leave the table equal to a
+last-write-wins model, every leaf `_CURRENT` names on disk, exactly
+the versions whose leaves are all on disk listed, and nothing leaked
+once RETAIN_S has passed.
 """
 
 from __future__ import annotations
@@ -30,9 +30,9 @@ class Crash(Exception):
 
 
 def _after_staged_write(mp):
-    """Crash once the batch is staged: the sink's Arrow write of the
-    batch to `_staging` has run, and the staged file has neither moved
-    into place nor been folded."""
+    """Crash once the leaf is staged: the sink's Arrow write of the
+    leaf to `_staging` has run, and the staged file has not moved into
+    place."""
     write_table = sinks.pq.write_table
 
     def write_then_crash(*args, **kwargs):

@@ -13,11 +13,11 @@ refused, (g) that marks order timestamps the way Spark does, (h) that
 a held snapshot outlives the fold that supersedes it by RETAIN_S
 seconds, not by a count of merges, and a version stops being listed
 when its leaves go, (i) that reads use the schema the manifest
-records, (j) that an append or an empty batch is one Spark job
-and a merge leaves no staging directory behind, and (k) that a
-rewrite is two jobs on an adaptive session and keeps every row whose
-key has a null part, (l) that a leaf path adds no partition column,
-and (m) that `MergeStats` counts the bytes a merge published.
+records, (j) that an append, a rewrite and an empty batch are each
+one Spark job and a merge leaves no staging directory behind, (k) that
+a rewrite folds in Arrow, so adaptive execution finds no job to add,
+and keeps every row whose key has a null part, (l) that a leaf path
+adds no partition column, and (m) that `MergeStats` counts the bytes a merge published.
 """
 
 from __future__ import annotations
@@ -178,8 +178,7 @@ def test_rewrite_leaves_no_staging_and_contiguous_versions(spark, tmp_path):
 
 def test_merge_stats_count_the_bytes_published(spark, tmp_path):
     """`MergeStats.bytes` is the parquet bytes a merge published: the
-    appended leaf's one file, the folded leaf's files, and 0 for an
-    empty batch."""
+    appended or folded leaf's one file, and 0 for an empty batch."""
     t = UpsertTable(spark, str(tmp_path / "t"), ["w", "k"], monotone_col="w")
 
     def parquet_bytes(version):
@@ -200,21 +199,28 @@ def test_merge_stats_count_the_bytes_published(spark, tmp_path):
     assert t.merge(_df(spark, [])).bytes == 0
 
 
-def test_rewrite_is_two_jobs_on_an_adaptive_session(
-    spark, tmp_path, spark_jobs
-):
-    """The fold has no join, so adaptive execution, which runs each
-    shuffle stage as a job of its own, finds no stage to split: a
-    rewrite is the batch's collection and the fold's write."""
+def test_rewrite_merge_is_one_job(spark, tmp_path, spark_jobs):
+    """A rewrite collects the batch once, as Arrow, and folds it with
+    the stored rows in Arrow, so even adaptive execution, which runs
+    each shuffle stage as a job of its own, has no stage to add: the
+    fold is the batch's collection, like an append."""
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    t = UpsertTable(spark, str(tmp_path / "t"), ["w", "k"], monotone_col="w")
+    path = str(tmp_path / "t")
+    t = UpsertTable(spark, path, ["w", "k"], monotone_col="w")
     t.merge(_batch(spark, 1, range(4)))
+    t.merge(_batch(spark, 2, range(2)))
     stats, jobs = spark_jobs(
         lambda: t.merge(_df(spark, [(1, k, 999) for k in range(2)]))
     )
-    assert jobs == 2
-    assert (stats.kind, stats.rows, stats.leaves) == ("rewrite", 2, 1)
-    assert _snapshot(t) == [(1, 0, 999), (1, 1, 999), (1, 2, 102), (1, 3, 103)]
+    assert jobs == 1
+    assert (stats.version, stats.kind, stats.rows, stats.leaves) == (
+        3, "rewrite", 2, 1,
+    )
+    assert _table_entries(path) == []
+    assert _snapshot(t) == [
+        (1, 0, 999), (1, 1, 999), (1, 2, 102), (1, 3, 103),
+        (2, 0, 200), (2, 1, 201),
+    ]
 
 
 def test_rewrite_keeps_every_null_key_row(spark, tmp_path):
